@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.plans.GraftExtensions
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query wall-clock seconds.
@@ -39,27 +38,10 @@ import graft.plans.GraftExtensions
 object Bench {
   private val Sweeps = 3
 
-  /** Gate constants live in [[ContentionGate]] since r12 (the gate now
-    * also fronts `ScaleSmoke` and `StreamBench` rows); these aliases
-    * keep the recorded-artifact field semantics documented here.
-    * probe_sec_end is the cleaner sample (fully JIT-warm JVM — the
-    * start probe can read ~0.04 s high on a cold session even idle). */
-  val ProbeIdleRef = ContentionGate.ProbeIdleRef
-  val ContendedFactor = ContentionGate.ContendedFactor
-  val MaxContentionWaits = ContentionGate.MaxWaits
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus)
 
     def loadAvg(): Double = {
       val l = java.lang.management.ManagementFactory
@@ -75,7 +57,7 @@ object Bench {
     // scaladoc for the normalization convention); the r6 lesson stands:
     // load_avg alone made an 8% idle improvement read as a 5% regression
     // until manual archaeology.
-    val gate = ContentionGate.awaitCalm(spark, cpus.toInt, label = "bench_start")
+    val gate = ContentionGate.awaitCalm(spark, cpus, label = "bench_start")
     val probeStart = gate.probeSec
     val contentionWaits = gate.waits
     val contended = gate.contended
@@ -143,7 +125,9 @@ object Bench {
       name -> (if (samples.exists(_ < 0)) -1.0 else samples.min)
     }
 
-    val probeEnd = ContentionGate.probe(spark, cpus.toInt)
+    // the cleaner sample: a fully JIT-warm JVM (the start probe can read
+    // ~0.04 s high on a cold session even idle)
+    val probeEnd = ContentionGate.probe(spark, cpus)
 
     val failed = results.collect { case (k, v) if v < 0 => k }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -153,7 +137,7 @@ object Bench {
     val loadEnd = loadAvg()
     val probes =
       s""""probe_sec_start":$probeStart,"probe_sec_end":$probeEnd,""" +
-        s""""probe_idle_ref":${Bench.ProbeIdleRef},"contended":$contended,""" +
+        s""""probe_idle_ref":${ContentionGate.ProbeIdleRef},"contended":$contended,""" +
         s""""contention_waits":$contentionWaits,"sweep_steal":$sweepStealJson"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,$probes,"sf":"$sfDir"}"""

@@ -1,32 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.plans.PlanDigest
 
 /** Emits the plan-shape artifact (`PlanDiff.CurrentArtifact` by default): one
   * JSON line per registry query with its physical-plan digest — see
-  * [[graft.plans.PlanDigest]] for what is recorded and why. Session
-  * config mirrors the test harness (`SparkSpec`: local[4], 4 shuffle
-  * partitions, graft extensions, materialization off for full plans) so
-  * `RegistryAuditSpec`'s shared walk recomputes IDENTICAL digests and
-  * can assert the committed artifact is current. Plans are built at
-  * sf0.001 like the audit walk; nothing is executed beyond the scalar
-  * build-time probes a few adaptive queries run. */
+  * [[graft.plans.PlanDigest]] for what is recorded and why. The session
+  * is the test harness's (`Sessions.local(4)`, as in `SparkSpec`, with
+  * materialization off for full plans) so `RegistryAuditSpec`'s shared
+  * walk recomputes IDENTICAL digests and can assert the committed
+  * artifact is current. Plans are built at sf0.001 like the audit walk;
+  * nothing is executed beyond the scalar build-time probes a few
+  * adaptive queries run. */
 object PlanShape {
   def main(args: Array[String]): Unit = {
     val out = sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT",
       graft.plans.PlanDiff.CurrentArtifact)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-planshape")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     // audit through materialization points: a checkpoint prints as an
     // opaque ExistingRDD scan and would hide everything upstream
     sys.props("graft.materialize") = "off"

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-stage profiler (optimization-round instrumentation, guide
   * §1.1/§7.1): runs named registry queries under the Bench session config,
@@ -16,22 +15,14 @@ import org.apache.spark.sql.SparkSession
 object QueryProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // A/B harness: extra session confs, comma-separated k=v pairs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach {
-      _.split(",").filter(_.contains("=")).foreach { kv =>
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONFS").toSeq
+      .flatMap(_.split(",")).filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      }
-    }
-    val spark = builder.getOrCreate()
+        k.trim -> v.trim
+      }.toMap
+    val spark = Sessions.local(cpus, extra)
     spark.sparkContext.setLogLevel("ERROR")
 
     case class Row(id: Int, name: String, tasks: Int, runMs: Long,

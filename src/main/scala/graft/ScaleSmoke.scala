@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.DedupOps
@@ -13,10 +12,9 @@ import graft.operators.DedupOps
   */
 object ScaleSmoke {
 
-  /** The K×-replica corpus every scale cell measures — and, since r14,
-    * the SAME frame `graft.Profile containment-stages` profiles (one
-    * definition, so the stage tables and the SCALE cells can never
-    * drift onto different corpora): doc_id offsets derived from the
+  /** The K×-replica corpus every scale cell measures (the r14
+    * containment stage table in BASELINE.md was profiled on this same
+    * frame): doc_id offsets derived from the
     * actual max id (a fixed offset would alias ids and silently shrink
     * the probe on larger corpora), each replica's text perturbed with
     * an id suffix so replicas are near-dups, not exact dups. Callers
@@ -35,15 +33,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     import spark.implicits._
 
     val docs = graft.sources.Tables.documents(spark, sfDir)
@@ -462,9 +452,9 @@ object ScaleSmoke {
     centInc.unpersist()
     // PCA moment matrix: the full build (checkpoint + d²-key aggregate +
     // broadcast joins) and the bare aggregate — both must stay ~flat as
-    // K grows because the shuffle is bounded at d² keys (the
-    // gram-fold-vs-posexplode shape adjudication itself lives in
-    // graft.PcaProbe; posexplode won end-to-end on codegen size)
+    // K grows because the shuffle is bounded at d² keys (the r6
+    // gram-fold-vs-posexplode adjudication is in BASELINE.md; posexplode
+    // won end-to-end on codegen size)
     time("pca_moment_build")(
       graft.queries.SimilarityQueries.pcaMomentFrom(spark, scaledEmb).count())
     time("pca_moment_op") {

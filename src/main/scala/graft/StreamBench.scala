@@ -4,43 +4,28 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.ops.SensorOps
-import graft.sources.SensorGenerator
-import graft.streaming.SensorPipeline
-
-/** Dev-only throughput probe for the reference-parity pipeline: how many
-  * wire events/second the FULL computation (JSON parse with explicit
-  * schema → try-cast validate → event-time conversion → watermarked
-  * 1-minute windowed multi-key metrics) sustains on this single node.
+/** Dev-only throughput probe for the stateful streaming trackers
+  * (transformWithState on RocksDB: as-of enrichment, windowed top-k,
+  * exact-dedup gate, LSH and semantic near-dup discovery), each fed
+  * through MemoryStream and, where it matters, through a file source
+  * drained by `Trigger.AvailableNow`; plus the `state-curves` mode,
+  * which records state size against retention horizon. The sensor
+  * pipeline itself (parse → try-cast → watermarked window) is timed by
+  * `perfbench` (`sensor_replay`, `sensor_live`). Input synthesis happens
+  * OFF the clock.
   *
-  * The reference's operating point is its simulator's configured ~132
-  * msg/s (BASELINE.md) — that is an input RATE, not an engine limit, so
-  * the honest comparison is: our sustained single-node maximum through
-  * the same computation, measured two ways:
-  *   - batch leg: the identical plan over N pre-materialized wire
-  *     payloads (the engine's raw compute ceiling);
-  *   - streaming leg: MemoryStream micro-batches through Structured
-  *     Streaming with watermark + state store (the deployment shape).
-  * Input synthesis and caching happen OFF the clock. Payload
-  * distribution mirrors the simulator (3 stations / 33 sensors, 5%
-  * malformed).
+  * Usage: `runMain graft.StreamBench [nFile [nFed]]` (file-source legs'
+  * and MemoryStream legs' row counts), or `runMain graft.StreamBench
+  * state-curves`.
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val nBatch = args.headOption.filterNot(_ == "state-curves")
+    val nFile = args.headOption.filterNot(_ == "state-curves")
       .map(_.toLong).getOrElse(2000000L)
-    val nStream = args.drop(1).headOption.map(_.toLong).getOrElse(500000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // state-size curves sample per-trigger progress; keep enough of them
-      .config("spark.sql.streaming.numRecentProgressUpdates", "256")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nFed = args.drop(1).headOption.map(_.toLong).getOrElse(500000L)
+    // state-size curves sample per-trigger progress; keep enough of them
+    val spark = Sessions.local(32,
+      Map("spark.sql.streaming.numRecentProgressUpdates" -> "256"))
     import spark.implicits._
 
     if (args.headOption.contains("state-curves")) {
@@ -49,29 +34,14 @@ object StreamBench {
       return
     }
 
-    // SPARK_GRAFT_ROCKSDB_CHANGELOG (1/0) now applies to the MAIN legs
-    // too (r14, VERDICT #1's A/B ask): unset leaves the provider's
-    // snapshot default — which is what every prior round's main legs
-    // ran — and the stateful-leg lines stamp the effective value so a
-    // cross-round reader never guesses the mode.
+    // SPARK_GRAFT_ROCKSDB_CHANGELOG (1/0) applies to every leg: unset
+    // leaves the provider's snapshot default, and each leg's line stamps
+    // the effective value so a cross-round reader never guesses the mode.
     val changelogConfMain =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG")
       .foreach(v => spark.conf.set(changelogConfMain, (v == "1").toString))
     val changelogMain = spark.conf.get(changelogConfMain, "false")
-
-    val stations = Map("alpha" -> 15, "beta" -> 10, "gamma" -> 8)
-
-    def wire(n: Long) = {
-      // monotone event time: 33 sensors × 1 reading / 250 ms, like the sim
-      val base = spark.range(n).select(
-        col("id").as("value"),
-        timestamp_millis(lit(1700000000000L) + expr("id div 33") * 250).as("timestamp"))
-      SensorGenerator.withPayload(base, stations, 0.05)
-        .select(to_json(struct(
-          col("station_name"), col("station_id"), col("sensor_id"),
-          col("timestamp"), col("value"))).as("value"))
-    }
 
     // every leg's timed section is contention-gated (r12, extending the
     // r11 Bench gate): the probe waits out steal waves and its reading
@@ -95,8 +65,7 @@ object StreamBench {
     // known labels (r14 review fix: a stray space or typo used to
     // silently select nothing and exit 0 — an empty re-record pass that
     // LOOKED like a run)
-    val knownLegs = Set("batch_pipeline", "streaming_filesource",
-      "streaming_microbatch", "streaming_asof", "streaming_topk",
+    val knownLegs = Set("streaming_asof", "streaming_topk",
       "streaming_topk_filesource", "streaming_dedup_gate",
       "streaming_dedup_gate_filesource", "streaming_lsh_neardup_filesource",
       "streaming_semantic_neardup_filesource")
@@ -144,63 +113,7 @@ object StreamBench {
       (a, (System.nanoTime() - t0) / 1e9)
     }
 
-    // ---- batch leg: full plan over cached wire payloads -----------------
-    if (legOnly("batch_pipeline")) {
-      val batchIn = wire(nBatch).cache()
-      batchIn.count() // materialize input off the clock
-      sampled("batch_pipeline", "events/s") { () =>
-        val (outRows, wall) = timed(SensorOps.windowedMetrics(
-          SensorPipeline.fromRawJson(batchIn),
-          col("event_time"),
-          Seq(col("station_id"), col("station_name"), col("sensor_id")),
-          "1 minute").count())
-        (nBatch, wall, s" out_rows=$outRows")
-      }
-      batchIn.unpersist()
-    }
-
-    // ---- streaming leg A: file source, Trigger.AvailableNow -------------
-    // distributed source (no driver-side feeding): payloads pre-written as
-    // text files off the clock (once — samples share the input dir),
-    // processed to completion in micro-batches
-    if (legOnly("streaming_filesource")) {
-      val fsDir = java.nio.file.Files.createTempDirectory("streambench").toString
-      wire(nBatch).repartition(32).write.mode("overwrite").text(fsDir)
-      sampled("streaming_filesource", "events/s") { () =>
-        val fsIn = spark.readStream.option("maxFilesPerTrigger", "8").text(fsDir)
-        val fsMetrics = SensorPipeline.windowedMetrics(
-          SensorPipeline.fromRawJson(fsIn), "5 seconds", "1 minute")
-        val (_, wall) = timed {
-          val qf = fsMetrics.writeStream.outputMode("update")
-            .format("memory").queryName("fsbench")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          qf.awaitTermination()
-        }
-        val stateRows = spark.table("fsbench").count()
-        spark.catalog.dropTempView("fsbench")
-        (nBatch, wall, s" state_rows=$stateRows")
-      }
-    }
-
-    // ---- streaming leg B: MemoryStream micro-batches --------------------
     implicit val ctx = spark.sqlContext
-    if (legOnly("streaming_microbatch")) {
-      val payloads = wire(nStream).as[String].collect()
-      sampled("streaming_microbatch", "events/s") { () =>
-        val input = MemoryStream[String]
-        val metrics = SensorPipeline.windowedMetrics(
-          SensorPipeline.fromRawJson(input.toDF()), "5 seconds", "1 minute")
-        val q = metrics.writeStream.outputMode("update")
-          .format("memory").queryName("streambench").start()
-        try {
-          val batches = payloads.grouped(math.max(1, payloads.length / 5)).toSeq
-          val (_, wall) = timed(
-            batches.foreach { b => input.addData(b.toSeq); q.processAllAvailable() })
-          val stateRows = spark.table("streambench").count()
-          (nStream, wall, s" batches=${batches.length} state_rows=$stateRows")
-        } finally { q.stop(); spark.catalog.dropTempView("streambench") }
-      }
-    }
 
     // ---- streaming leg C: as-of enrichment tracker ----------------------
     // per-key ValueState carry on RocksDB (the AsofTracker operating
@@ -210,11 +123,11 @@ object StreamBench {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // every leg from here runs on RocksDB state — stamp the effective
+    // every leg runs on RocksDB state — stamp the effective
     // checkpoint-maintenance mode into each line
     val clogStamp = s" changelog=$changelogMain"
     if (legOnly("streaming_asof")) {
-      val asofRows = spark.range(nStream).select(
+      val asofRows = spark.range(nFed).select(
           concat(lit("u"), pmod(col("id"), lit(5000L))).as("userId"),
           (lit(1700000000000000L) + col("id") * 1000L).as("tsUs"),
           when(pmod(col("id"), lit(10L)) === 0, 1).otherwise(0).as("tag"),
@@ -233,7 +146,7 @@ object StreamBench {
           val batches = asofRows.grouped(math.max(1, asofRows.length / 5)).toSeq
           val (_, wall) = timed(
             batches.foreach { b => asofIn.addData(b.toSeq); qa.processAllAvailable() })
-          (nStream, wall, s" out_rows=${spark.table("asofbench").count()}$clogStamp")
+          (nFed, wall, s" out_rows=${spark.table("asofbench").count()}$clogStamp")
         } finally { qa.stop(); spark.catalog.dropTempView("asofbench") }
       }
     }
@@ -246,7 +159,7 @@ object StreamBench {
     // timer-driven emission, not just state folds.
     val winMs = 60L * 1000
     if (legOnly("streaming_topk")) {
-      val topkRows = spark.range(nStream).select(
+      val topkRows = spark.range(nFed).select(
           (lit(1700000000000L) + col("id") * 10L).as("tsMs"),
           concat(lit("st"), pmod(col("id"), lit(33L))).as("stationId"),
           concat(lit("sn"), pmod(col("id"), lit(8L))).as("sensorId"),
@@ -269,7 +182,7 @@ object StreamBench {
           val batches = topkRows.grouped(math.max(1, topkRows.length / 5)).toSeq
           val (_, wall) = timed(
             batches.foreach { b => topkIn.addData(b.toSeq); qt.processAllAvailable() })
-          (nStream, wall, s" out_rows=${spark.table("topkbench").count()}$clogStamp")
+          (nFed, wall, s" out_rows=${spark.table("topkbench").count()}$clogStamp")
         } finally { qt.stop(); spark.catalog.dropTempView("topkbench") }
       }
     }
@@ -280,10 +193,10 @@ object StreamBench {
     // pre-written as parquet off the clock, consumed in file micro-batches
     // through the same watermark + MapState + event-time-timer pipeline,
     // so the measured rate bounds the STATE STORE path, not MemoryStream.
-    // Uses the larger batch-leg row count: the driver feed is no longer
-    // the limiting factor.
+    // Uses the larger file-leg row count (nFile): the MemoryStream feed
+    // is no longer the limiting factor.
     if (legOnly("streaming_topk_filesource")) {
-      val topkFsRows = spark.range(nBatch).select(
+      val topkFsRows = spark.range(nFile).select(
           (lit(1700000000000L) + col("id") * 10L).as("tsMs"),
           concat(lit("st"), pmod(col("id"), lit(33L))).as("stationId"),
           concat(lit("sn"), pmod(col("id"), lit(8L))).as("sensorId"),
@@ -319,7 +232,7 @@ object StreamBench {
         }
         val outRows = spark.table("topkfsbench").count()
         spark.catalog.dropTempView("topkfsbench")
-        (nBatch, wall, s" out_rows=$outRows$clogStamp")
+        (nFile, wall, s" out_rows=$outRows$clogStamp")
       }
     }
 
@@ -333,7 +246,7 @@ object StreamBench {
       .select(concat(lit("base"), col("id")).as("fp")).as[String]
       .groupByKey(identity).mapValues(_ => true)
     if (legOnly("streaming_dedup_gate")) {
-      val dedupRows = spark.range(nStream).select(
+      val dedupRows = spark.range(nFed).select(
           col("id").as("docId"),
           concat(lit("fp"), expr("id div 3")).as("fingerprint"),
           timestamp_millis(lit(1700000000000L) + col("id") * 10L).as("ts"))
@@ -351,18 +264,18 @@ object StreamBench {
           val batches = dedupRows.grouped(math.max(1, dedupRows.length / 5)).toSeq
           val (_, wall) = timed(
             batches.foreach { b => dedupIn.addData(b.toSeq); qd.processAllAvailable() })
-          (nStream, wall, s" out_rows=${spark.table("dedupbench").count()}$clogStamp")
+          (nFed, wall, s" out_rows=${spark.table("dedupbench").count()}$clogStamp")
         } finally { qd.stop(); spark.catalog.dropTempView("dedupbench") }
       }
     }
 
     // ---- streaming leg G: dedup gate via FILE source, AvailableNow -------
-    // the deployment-shaped twin of leg F at the batch-leg row count:
+    // the deployment-shaped twin of leg F at the file-leg row count:
     // rows pre-written as parquet off the clock, so the measured rate
     // bounds the keyed ValueState + eviction-timer path, not driver
     // feeding
     if (legOnly("streaming_dedup_gate_filesource")) {
-      val dedupFsRows = spark.range(nBatch).select(
+      val dedupFsRows = spark.range(nFile).select(
           col("id").as("docId"),
           concat(lit("fp"), expr("id div 3")).as("fingerprint"),
           timestamp_millis(lit(1700000000000L) + col("id") * 10L).as("ts"))
@@ -392,7 +305,7 @@ object StreamBench {
         }
         val outRows = spark.table("dedupfsbench").count()
         spark.catalog.dropTempView("dedupfsbench")
-        (nBatch, wall, s" out_rows=$outRows$clogStamp")
+        (nFile, wall, s" out_rows=$outRows$clogStamp")
       }
     }
 

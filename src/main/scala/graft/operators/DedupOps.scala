@@ -290,7 +290,7 @@ object DedupOps {
     * diameter rounds — and a near-dup edge set is quadratic in clique
     * size (K replicas of one doc contribute K²/2 verified pairs), so at
     * 50× replication the old loop paid the K²-sized join 4-5 times over
-    * (the steepest curve in SCALE_r10.json, 4.25× wall over 5× data).
+    * (the steepest r10 scale curve, 4.25× wall over 5× data; BASELINE.md).
     * Contraction touches the edge set ONCE per level, cliques collapse
     * to their minimum in level one, and every later pass runs on frames
     * that shrink geometrically (each non-root merges, so levels halve

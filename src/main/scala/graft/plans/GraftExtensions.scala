@@ -8,8 +8,8 @@ import graft.functions.{DotProduct, ZOrderKey}
 
 /** Session extensions registering graft's native Catalyst functions.
   *
-  * Wire up with `SparkSession.builder().withExtensions(new GraftExtensions)`
-  * or `--conf spark.sql.extensions=graft.plans.GraftExtensions`. Queries
+  * [[graft.Sessions.local]] installs them; any other session takes
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. Queries
   * fall back to built-in compositions when the extension is absent
   * (see VectorFunctions.dot), so a vanilla session still works.
   */

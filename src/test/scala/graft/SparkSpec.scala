@@ -2,14 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session per suite. */
+/** One shared local session per suite: `graft.Sessions`' confs at 4 cores,
+  * the same session `PlanShape` records the plan digests under. */
 trait SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 }

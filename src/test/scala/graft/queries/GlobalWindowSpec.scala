@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -86,6 +88,56 @@ class GlobalWindowSpec extends AnyFunSuite with SparkSpec {
     val got = GlobalWindow.rowNumberAndRunningSum(
       df, col("v"), "rn", "cum", 8)(col("k"), col("id"))
     assert(got.except(expected).isEmpty && expected.except(got).isEmpty)
+  }
+
+  /** Three groups of seeded random sizes stacked under `g`, each with
+    * the same tie-heavy key as [[fixture]]; ids are unique across groups.
+    * Returns the frame and the group sizes. */
+  private def groupedFixture(seed: Long): (DataFrame, Seq[Int]) = {
+    val sizes = Gen.listOfN(3, Gen.chooseNum(1, 400))
+      .pureApply(Gen.Parameters.default, Seed(seed))
+    val df = sizes.zipWithIndex.map { case (n, g) =>
+      spark.range(n).select(lit(g).as("g"),
+        pmod(hash(col("id")), lit(37)).as("k"),
+        (col("id") + g * 100000L).as("id"))
+    }.reduce(_ unionByName _)
+    (df, sizes)
+  }
+
+  private def sameRows(got: DataFrame, expected: DataFrame,
+      cols: Seq[String]): Boolean = {
+    val (a, b) = (got.select(cols.map(col): _*), expected.select(cols.map(col): _*))
+    a.except(b).isEmpty && b.except(a).isEmpty
+  }
+
+  test("groupedRowNumberWithCount equals k independent rowNumber passes") {
+    for (seed <- 1L to 3L) {
+      val (df, sizes) = groupedFixture(seed)
+      val expected = sizes.zipWithIndex.map { case (n, g) =>
+        GlobalWindow.rowNumber(df.filter(col("g") === g), "rn", 8)(
+          col("k"), col("id")).withColumn("cnt", lit(n.toLong))
+      }.reduce(_ unionByName _)
+      val got = GlobalWindow.groupedRowNumberWithCount(df, "g", "rn", "cnt", 8)(
+        col("k"), col("id"))
+      assert(sameRows(got, expected, Seq("g", "k", "id", "rn", "cnt")),
+        s"grouped numbering diverged for group sizes $sizes")
+    }
+  }
+
+  test("groupedNtile equals k independent ntile passes, non-dividing n included") {
+    for (seed <- 1L to 3L) {
+      val (df, sizes) = groupedFixture(seed)
+      val ns = Seq(7, sizes.max + 1) // 7: uneven buckets; max+1: more buckets than rows
+      assert(sizes.exists(_ % 7 != 0), s"fixture broken: 7 divides every size in $sizes")
+      ns.foreach { n =>
+        val expected = sizes.indices.map { g =>
+          GlobalWindow.ntile(df.filter(col("g") === g), n, "t", 8)(col("k"), col("id"))
+        }.reduce(_ unionByName _)
+        val got = GlobalWindow.groupedNtile(df, "g", n, "t", 8)(col("k"), col("id"))
+        assert(sameRows(got, expected, Seq("g", "k", "id", "t")),
+          s"grouped ntile($n) diverged for group sizes $sizes")
+      }
+    }
   }
 
   test("two-phase plan contains no unpartitioned window sort") {

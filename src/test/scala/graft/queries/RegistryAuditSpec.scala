@@ -221,6 +221,38 @@ class RegistryAuditSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  // One session builder: every main and SparkSpec go through
+  // graft.Sessions, so the PlanShape ↔ test-session conf match that the
+  // currency test above relies on is one function, not a comment.
+  test("SparkSession.builder appears under src/main/scala only in Sessions.scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val builders = scala.util.Using.resource(java.nio.file.Files.walk(root)) {
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).filter { p =>
+        new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8).contains("SparkSession.builder")
+      }.map(root.relativize(_).toString).toSeq.sorted
+    }
+    assert(builders === Seq("graft/Sessions.scala"))
+  }
+
+  test("the shared test session carries Bench's confs at 4 cores") {
+    import org.apache.spark.sql.functions.{col, pow}
+    assert(spark.sparkContext.master === "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    // GraftExtensions: both native functions and the StrengthReduction
+    // optimizer rule (pow(x, 2) -> x * x)
+    Seq("graft_dot", "graft_zorder").foreach { f =>
+      assert(spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f)), s"$f not registered")
+    }
+    val plan = spark.range(1).select(pow(col("id"), 2.0).as("y"))
+      .queryExecution.optimizedPlan.toString
+    assert(!plan.toLowerCase.contains("pow"), s"StrengthReduction not installed:\n$plan")
+  }
+
   // Scala UDFs print as `UDF(...)`, NOT `ScalaUDF`, in plan strings — a
   // string grep is vacuous — so this walk collects actual ScalaUDF
   // expression instances from the optimized plan. The one deliberate

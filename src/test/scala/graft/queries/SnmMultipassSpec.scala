@@ -75,6 +75,25 @@ class SnmMultipassSpec extends AnyFunSuite with SparkSpec {
       s"recall must strictly improve: single=$single multi=$multi")
   }
 
+  test("stacked multi-key candidates equal the union of the single-key passes") {
+    import org.apache.spark.sql.functions._
+    // 400 docs of 30 tokens from a 3-word vocabulary: many near-equal keys
+    val synthetic = spark.range(400).select(col("id").as("doc_id"),
+      concat_ws(" ", (0 until 30).map(j =>
+        pmod(hash(col("id"), lit(j)), lit(3)).cast("string")): _*).as("text"))
+    for (docs <- Seq(fixture, synthetic)) {
+      def pairs(df: DataFrame): Seq[(Long, Long)] =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      val perKey = pairs(DedupQueries.snmCandidates(docs, DedupQueries.snmKey(0))) ++
+        pairs(DedupQueries.snmCandidates(docs, DedupQueries.snmKey(1)))
+      val keyed = docs.select(col("doc_id"),
+        DedupQueries.snmKey(0).as("k0"), DedupQueries.snmKey(1).as("k1"))
+      val multi = pairs(DedupQueries.snmCandidatesMulti(keyed, Seq(col("k0"), col("k1"))))
+      assert(multi.nonEmpty)
+      assert(multi === perKey.sorted, "stacked numbering must pair exactly as the per-key passes")
+    }
+  }
+
   test("multi-pass result is a superset of single-pass on the real corpus") {
     val dir = "/root/testdata/sf0.001"
     val single = DedupQueries.sortedNeighborDups(spark, dir)
