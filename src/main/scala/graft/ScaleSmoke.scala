@@ -425,8 +425,9 @@ object ScaleSmoke {
     // replicas are exact dups, so drops should scale ~linearly with K
     time("semantic_dedup")(
       graft.queries.SimilarityQueries.semanticDedupFrom(spark, scaledEmb).count())
-    // IVF-PQ index build (residual quantization + codes): broadcast
-    // map-side stages + dim×K partial-agg shuffles — ~linear in corpus
+    // IVF-PQ index build (residual quantization + codes): row-local
+    // assignment against a one-row broadcast codebook + dim×K
+    // partial-agg shuffles — ~linear in corpus
     time("ivfpq_codes")(
       graft.queries.SimilarityQueries.ivfPqParts(spark, scaledEmb)._3.count())
     // incremental IVF maintenance: centroids trained on the K×-scaled

@@ -31,6 +31,36 @@ object VectorFunctions {
     if (spark.catalog.functionExists("graft_dot")) call_function("graft_dot", a, b)
     else dot(a, b)
 
+  /** Σ(rv − cw)² in long over one book entry `e` (struct of code, s, cw)
+    * against its slice of `rv`: positions e.s·|cw| onward, only those
+    * both arrays have. Exact integer math. */
+  def subspaceSqDist(rv: Column, e: Column): Column = {
+    val len = size(e("cw"))
+    aggregate(
+      zip_with(slice(rv, e("s") * len + 1, len), e("cw"),
+        (a, b) => coalesce((a - b) * (a - b), lit(0L))),
+      lit(0L),
+      (acc, d) => acc + d)
+  }
+
+  /** [[PqAssign]]'s contract as built-in higher-order functions: per
+    * subspace the smallest (distance, code) struct among the entries
+    * whose slice starts inside `rv`. Interpreted; the fallback only. */
+  def pqAssign(rv: Column, book: Column): Column = {
+    val maxS = coalesce(array_max(transform(book, _("s"))), lit(-1))
+    val subs = slice(sequence(lit(0), greatest(maxS, lit(0))), lit(1), maxS + 1)
+    when(rv.isNotNull, transform(subs, s =>
+      array_min(transform(
+        filter(book, e => e("s") === s && size(rv) > e("s") * size(e("cw"))),
+        e => struct(subspaceSqDist(rv, e).as("d"), e("code").as("code"))))("code")))
+  }
+
+  /** The codegen'd [[PqAssign]] when the session has GraftExtensions,
+    * else the [[pqAssign]] fold (same result, see PqAssignSpec). */
+  def pqAssignFast(spark: org.apache.spark.sql.SparkSession)(rv: Column, book: Column): Column =
+    if (spark.catalog.functionExists("graft_pq_assign")) call_function("graft_pq_assign", rv, book)
+    else pqAssign(rv, book)
+
   /** ‖a‖₂ in double. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 

@@ -38,7 +38,30 @@ object PlanDiff {
       "array_intersect floor evaluates in the explicitly repartitioned " +
       "32-task probe stage instead of an AQE-coalesced 3-task stage " +
       "(QueryProf: 4.54 to 2.25 s)."
+  private val IvfPqFold =
+    "Row-local IVF-PQ: each vector is one row with an array<bigint> " +
+      "micro-unit residual, and code assignment is the codegen'd " +
+      "graft_pq_assign kernel against a one-row broadcast codebook " +
+      "(BroadcastNestedLoopJoin, bounded by PqSeeds x NSub entries), " +
+      "replacing the position-level (s, pos) BroadcastHashJoins and the " +
+      "per-(vec, s) row_number argmin; the ADC scan sums NSub map lookups " +
+      "per row instead of a per-(q, vec) aggregate. Windows 15 -> 6, sorts " +
+      "11 -> 5, materialize points 5 -> 3. The pushed-filter total falls " +
+      "because fewer consumers re-read the embeddings scan in the audit form " +
+      "and the IsNotNull filters inferred from the dropped position joins go " +
+      "with them. Codes, tables and distances are bit-identical " +
+      "(PqAssignSpec, oracle-green at both SFs)."
+  private val BasketFold =
+    "Co-purchase edges fold each order to array_sort(collect_set(pk)) and " +
+      "emit its i < j pairs row-locally, replacing distinct + self-join on " +
+      "ok: one shuffle and the SortMergeJoin drop (BasketPairsSpec). The " +
+      "pushed-filter total falls because the lineitem scan is no longer " +
+      "read by both join sides, and IsNotNull(l_partkey), inferred from the " +
+      "join's src < dst, is gone (collect_set drops null parts itself)."
   val whitelist: Map[String, String] = Map(
+    "knn_ivfpq" -> IvfPqFold,
+    "knn_ivfpq_rerank" -> (IvfPqFold + " Shared ivfPqAdc pipeline."),
+    "part_assortativity" -> BasketFold,
     "unigram_em_counts" -> ("r16 optimization (guide §1.2/§5): the 8-step " +
       "Viterbi DP folds into ONE row-local aggregate() over a broadcast " +
       "piece-score map — the 8 vocab joins, their exchanges and the 8 eager " +
@@ -70,7 +93,8 @@ object PlanDiff {
       "part_label_propagation's digest is unchanged for the same reason) " +
       "each LPA round now repartitions once on hash(v, n) for its aggregate " +
       "AND window and SHUFFLE_HASH-hints the label join side. QueryProf: " +
-      "modularity 4.50 to 3.88 s, label_propagation 4.12 to 3.02 s."))
+      "modularity 4.50 to 3.88 s, label_propagation 4.12 to 3.02 s. " +
+      "Then: " + BasketFold))
 
   /** The digest fields of one artifact line (parsed from our own fixed
     * writer format — see [[PlanDigest.toJsonLine]]). `materializePoints`

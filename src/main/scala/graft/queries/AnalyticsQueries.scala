@@ -1336,13 +1336,24 @@ object AnalyticsQueries {
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
 
   /** [[coPurchaseEdges]] over an arbitrary (ok, pk) basket frame — the
-    * ScaleSmoke entry point for the graph tier. */
+    * ScaleSmoke entry point for the graph tier.
+    *
+    * Each order folds to one row holding its sorted distinct parts,
+    * `array_sort(collect_set(pk))`, and every i < j pair of that array
+    * is emitted row-locally (posexplode, then explode the tail after i).
+    * That is the same pair multiset as the `distinct` + self-join on
+    * `ok` + `src < dst` form it replaced: the set drops repeated lines
+    * and null parts as `distinct` + `<` did, sorting makes each emitted
+    * pair ascending, and null orders are dropped as the equi-join did
+    * (BasketPairsSpec). One shuffle (by order) instead of two before the
+    * pair count. */
   private[graft] def coPurchaseEdgesFrom(
       spark: SparkSession, baskets: DataFrame): DataFrame = {
-    val li = baskets.select(col("ok"), col("pk")).distinct()
-    li.select(col("ok"), col("pk").as("src"))
-      .join(li.select(col("ok"), col("pk").as("dst")), "ok")
-      .filter(col("src") < col("dst"))
+    baskets.filter(col("ok").isNotNull)
+      .groupBy(col("ok"))
+      .agg(array_sort(collect_set(col("pk"))).as("parts"))
+      .select(col("parts"), posexplode(col("parts")).as(Seq("i", "src")))
+      .select(col("src"), explode(slice(col("parts"), col("i") + 2, size(col("parts")))).as("dst"))
       .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("n_orders_joint"))
       .filter(col("n_orders_joint") >= 2)
@@ -1758,7 +1769,8 @@ object AnalyticsQueries {
     // numbering. Sort-value encoding preserves each cut's exact order:
     // recency ASC is the value itself; frequency/monetary DESC negate
     // (exact — an integer count and a 2-dp-rounded double); the
-    // o_custkey tiebreak is unchanged.
+    // o_custkey tiebreak is unchanged. `mv` sorts nulls last: no metric
+    // is nullable today, and a null one must not take the top tile.
     val stacked = Seq(
       (0, col("recency_days").cast("double")),
       (1, -col("frequency").cast("double")),
@@ -1767,7 +1779,7 @@ object AnalyticsQueries {
         per.select(col("o_custkey"), lit(m).as("metric"), v.as("mv"))
       }.reduce(_ unionAll _)
     val tiles = GlobalWindow.groupedNtile(stacked, "metric", 5, "tile")(
-      col("mv"), col("o_custkey"))
+      col("mv").asc_nulls_last, col("o_custkey"))
     val wide = tiles.groupBy(col("o_custkey")).agg(
       max(when(col("metric") === 0, col("tile"))).as("r_tile"),
       max(when(col("metric") === 1, col("tile"))).as("f_tile"),

@@ -596,7 +596,7 @@ object SimilarityQueries {
     * the expensive stages — index build and candidate scoring — are never
     * repeated per budget; knn_recall_curve's three-budget sweep costs one
     * index build instead of three. */
-  private def refinedTopPerProbe(spark: SparkSession, dir: String,
+  private[queries] def refinedTopPerProbe(spark: SparkSession, dir: String,
       probesList: Seq[Int], iters: Int): DataFrame = {
     val dotF = dotFast(spark) _
     val emb = Tables.embeddings(spark, dir)
@@ -1757,69 +1757,75 @@ object SimilarityQueries {
     * integer sums — floats appear only in the final /1e12 display and
     * the coarse-probe cosine): float dot products over 6-decimal
     * residuals land on exact .5×10⁻⁶ rounding boundaries where engines
-    * diverge, and a PQ index quantizes anyway. Everything is position-
-    * level equi-joins: corpus explode ⋈ broadcast codewords on (s, pos),
-    * partial-aggregated map-side — no array packing, fully codegen-able,
-    * and the ADC scan touches codes only (probes/K of the corpus). */
-  /** Exact integer squared distance of every (vector, codeword) pair in
-    * a subspace: position-level broadcast join + map-side partial agg. */
-  private def sqDists(points: DataFrame, cbook: DataFrame, idCols: Seq[String]): DataFrame =
-    points.join(broadcast(cbook),
-      col("s") === col("cs") && col("pos") === col("cw_pos"))
-      .withColumn("d2", (col("rv") - col("cw")) * (col("rv") - col("cw")))
-      .groupBy(idCols.map(col) :+ col("s") :+ col("code_label"): _*)
-      .agg(sum(col("d2")).as("sqd"))
-
-  private def argminCode(dists: DataFrame, idCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy((idCols :+ "s").map(col): _*)
-      .orderBy(col("sqd"), col("code_label"))
-    dists.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-  }
-
-  /** IVF-PQ index build (coarse centroid components, trained codebooks,
-    * corpus codes) from an embeddings frame — the half that scales with
-    * the corpus; shared by the registered query and ScaleSmoke. */
+    * diverge, and a PQ index quantizes anyway.
+    *
+    * Shape: every vector is ONE row carrying its residual as an
+    * `array<bigint>`, and every codebook is ONE row (`book`: an array of
+    * (code, s, cw) entries) broadcast against it. Assignment is the
+    * codegen'd `graft_pq_assign` kernel ([[graft.functions.PqAssign]]),
+    * row-local: no exchange between the residual checkpoint and the code
+    * frame. Exactness: the integer sums are order-free, and the kernel's
+    * (distance, code) argmin is the old per-(vector, subspace)
+    * `row_number() ORDER BY sqd, code` — so codes, tables and ADC
+    * distances are bit-identical to the position-level join form this
+    * replaced (PqAssignSpec; same oracle). The coarse centroids keep
+    * their per-position `round(avg(v), 6)` over the scan's own
+    * partitioning, so the double sums fold in the same order.
+    *
+    * Returns the index build (centroids, one-row codebook, corpus codes),
+    * the half that scales with the corpus; shared by the registered
+    * queries and ScaleSmoke. */
   private[graft] def ivfPqParts(spark: SparkSession, embIn: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val pts = embIn
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("v", col("v").cast("double"))
+    val assign = pqAssignFast(spark) _
+    // coarse centroids (c_label, centroid), components rounded per convention
+    val cent = embIn
+      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy(col("label").as("c_label"), col("pos"))
+      .agg(round(avg(col("v").cast("double")), 6).as("cv"))
+      .groupBy(col("c_label"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("pos"), col("cv")))),
+        x => x.getField("cv")).as("centroid"))
       .materializeOnce
-    // coarse centroid components (c_label, c_pos, cv), rounded per
-    // convention; pos renamed — cp shares lineage with pts and the joins
-    // below would otherwise be ambiguous self-join references
-    val cp = pts.groupBy(col("label").as("c_label"), col("pos").as("c_pos"))
-      .agg(round(avg(col("v")), 6).as("cv"))
-      .materializeOnce
-    // integer micro-unit residuals (vec_id, own_label, s, pos, rv); the
-    // subspace id uses floor division (DuckDB's `//`) — a plain cast
-    // would truncate on Spark but ROUND on DuckDB
-    val r = pts
-      .join(broadcast(cp),
-        col("label") === col("c_label") && col("pos") === col("c_pos"))
-      .select(col("vec_id"), col("label").as("own_label"), col("pos"),
-        round((col("v") - col("cv")) * 1e6).cast("long").as("rv"))
-      .withColumn("s", floor(col("pos") / SubDim).cast("int"))
+    // integer micro-unit residuals (vec_id, own_label, rv)
+    val r = embIn.join(broadcast(cent), col("label") === col("c_label"))
+      .select(col("vec_id"), col("label").as("own_label"),
+        microResidual(col("embedding"), col("centroid")).as("rv"))
       .materializeOnce
     // random-point init: the first PqSeeds vectors' residuals ARE the seeds
-    val seeds = r.filter(col("vec_id") < PqSeeds)
-      .select(col("vec_id").cast("int").as("code_label"), col("s").as("cs"),
-        col("pos").as("cw_pos"), col("rv").as("cw"))
-    val a0 = argminCode(sqDists(r, seeds, Seq("vec_id")), Seq("vec_id"))
-      .select(col("vec_id").as("a_vec"), col("s").as("a_s"), col("code_label").as("seed"))
-    // one Lloyd step: per-cluster mean residual, floor-quantized to micro
-    // units (floor, not round — integer means land on exact halves)
-    val codebook = r.join(a0, col("vec_id") === col("a_vec") && col("s") === col("a_s"))
-      .groupBy(col("seed").as("code_label"), col("s").as("cs"), col("pos").as("cw_pos"))
-      .agg(floor(sum(col("rv")).cast("double") / count(lit(1))).cast("long").as("cw"))
+    val seeds = pqBook(r.filter(col("vec_id") < PqSeeds)
+      .select(col("vec_id").cast("int").as("code"),
+        explode(array((0 until NSub).map(s =>
+          struct(lit(s).as("s"), slice(col("rv"), s * SubDim + 1, SubDim).as("cw"))): _*)).as("e"))
+      .select(col("code"), col("e.s").as("s"), col("e.cw").as("cw")))
+    // one Lloyd step: per-(code, s) mean residual, one integer sum per
+    // position, floor-quantized to micro units (floor, not round —
+    // integer means land on exact halves)
+    val sums = (0 until SubDim).map(i => sum(col("e.x")(i)).as(s"x$i"))
+    val codebook = pqBook(r.crossJoin(broadcast(seeds))
+      .select(col("rv"), assign(col("rv"), col("book")).as("a"))
+      .select(explode(array((0 until NSub).map(s =>
+        struct(col("a")(s).as("code"), lit(s).as("s"),
+          slice(col("rv"), s * SubDim + 1, SubDim).as("x"))): _*)).as("e"))
+      .groupBy(col("e.code").as("code"), col("e.s").as("s"))
+      .agg(count(lit(1)).as("n"), sums: _*)
+      .select(col("code"), col("s"), array((0 until SubDim).map(i =>
+        floor(col(s"x$i").cast("double") / col("n")).cast("long")): _*).as("cw")))
       .materializeOnce
-    // corpus codes: argmin codeword per (vec_id, s)
-    val withCell = r.select(col("vec_id"), col("own_label"), col("s"), col("pos"), col("rv"))
-    val codes = argminCode(sqDists(withCell, codebook, Seq("vec_id", "own_label")),
-      Seq("vec_id", "own_label"))
-      .select(col("vec_id"), col("own_label").as("cell"), col("s"), col("code_label"))
-    (cp, codebook, codes)
+    // corpus codes (vec_id, cell, codes): one code per subspace
+    val codes = r.crossJoin(broadcast(codebook))
+      .select(col("vec_id"), col("own_label").as("cell"),
+        assign(col("rv"), col("book")).as("codes"))
+    (cent, codebook, codes)
   }
+
+  /** round((v − c)·10⁶) per component, as `array<bigint>`. */
+  private def microResidual(v: Column, c: Column): Column =
+    zip_with(v, c, (x, y) => round((x.cast("double") - y) * 1e6).cast("long"))
+
+  /** (code, s, cw) rows packed into the one-row `book` frame. */
+  private def pqBook(entries: DataFrame): DataFrame =
+    entries.agg(collect_list(struct(col("code"), col("s"), col("cw"))).as("book"))
 
   def knnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val wRank = Window.partitionBy(col("q_id")).orderBy(col("adc_dist"), col("vec_id"))
@@ -1832,48 +1838,42 @@ object SimilarityQueries {
 
   /** The shared IVF-PQ ADC scan: (q_id, vec_id, cell, adc_dist) for every
     * code row in the probed cells — [[knnIvfPq]] ranks it directly,
-    * [[knnIvfPqRerank]] reranks its shortlist with exact vectors. */
+    * [[knnIvfPqRerank]] reranks its shortlist with exact vectors. Each
+    * (query, probed cell) row carries its distance table as one map
+    * (code → Σdiff²) per subspace, so a corpus row's ADC distance is
+    * [[NSub]] lookups summed in place — no per-(q, vec) aggregate. */
   private def ivfPqAdc(spark: SparkSession, dir: String): DataFrame = {
     val dotF = dotFast(spark) _
-    val (cp, codebook, codes) = ivfPqParts(spark, Tables.embeddings(spark, dir))
-    // query cell probes: top-2 coarse cells by cosine against packed centroids
-    val cent = cp.groupBy(col("c_label"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("c_pos"), col("cv")))),
-        x => x.getField("cv")).as("centroid"))
-      .withColumn("c_norm", sqrt(dotFast(spark)(col("centroid"), col("centroid"))))
-    // one scan feeds both the coarse probing and the residual explode
-    val qbase = Tables.embeddings(spark, dir).filter(col("vec_id") < 10)
+    val emb = Tables.embeddings(spark, dir)
+    val (cent, codebook, codes) = ivfPqParts(spark, emb)
+    val centN = cent.withColumn("c_norm", sqrt(dotF(col("centroid"), col("centroid"))))
+    val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .materializeOnce
-    val q = qbase
-      .withColumn("q_norm", sqrt(dotFast(spark)(col("q_emb"), col("q_emb"))))
+      .withColumn("q_norm", sqrt(dotF(col("q_emb"), col("q_emb"))))
+    // query cell probes: top-2 coarse cells by cosine, each with the
+    // query's residual against that cell's centroid, same micro units
     val wProbe = Window.partitionBy(col("q_id"))
       .orderBy(col("c_sim").desc, col("c_label"))
-    val probes = q.crossJoin(broadcast(cent))
+    val qr = q.crossJoin(broadcast(centN))
       .withColumn("c_sim",
         round(dotF(col("q_emb"), col("centroid")) / (col("q_norm") * col("c_norm")), 6))
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= 2)
-      .select(col("q_id"), col("c_label").as("cell"))
-    // query residuals vs EACH probed cell's centroid, same micro units
-    val qpts = qbase
-      .select(col("q_id"), posexplode(col("q_emb")).as(Seq("pos", "v")))
-      .withColumn("v", col("v").cast("double"))
-    val qr = probes.join(qpts, "q_id")
-      .join(broadcast(cp),
-        col("cell") === col("c_label") && col("pos") === col("c_pos"))
-      .select(col("q_id"), col("cell"), col("pos"),
-        round((col("v") - col("cv")) * 1e6).cast("long").as("rv"))
-      .withColumn("s", floor(col("pos") / SubDim).cast("int"))
-    // per-(query, probed cell) distance table: exact integer lookups
-    val dtable = sqDists(qr, codebook, Seq("q_id", "cell"))
-      .select(col("q_id"), col("cell"), col("s"), col("code_label"), col("sqd"))
+      .select(col("q_id"), col("c_label").as("cell"),
+        microResidual(col("q_emb"), col("centroid")).as("rv"))
+    // per-(query, probed cell) distance table: exact integer Σdiff²
+    val dtable = qr.crossJoin(broadcast(codebook))
+      .select(col("q_id"), col("cell"), array((0 until NSub).map(s =>
+        map_from_entries(transform(filter(col("book"), e => e("s") === s),
+          e => struct(e("code"), subspaceSqDist(col("rv"), e))))): _*).as("tbl"))
     // ADC scan: codes of probed cells only, distance = Σ table lookups
-    codes.join(broadcast(dtable), Seq("cell", "s", "code_label"))
+    val adc = (0 until NSub).map(s =>
+      element_at(element_at(col("tbl"), s + 1), element_at(col("codes"), s + 1)))
+      .reduce(_ + _)
+    codes.join(broadcast(dtable), "cell")
       .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"), col("cell"))
-      .agg((sum(col("sqd")).cast("double") / lit(1e12)).as("adc_dist"))
+      .select(col("q_id"), col("vec_id"), col("cell"),
+        (adc.cast("double") / lit(1e12)).as("adc_dist"))
   }
 
   /** IVF-PQ search with exact REFINEMENT — the rerank step a production

@@ -90,17 +90,35 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
 
   test("IVF-PQ and semantic dedup keep their scale-critical join shapes") {
     // knn_ivfpq: every join against the corpus must be broadcast
-    // (centroid components, seeds, codebooks, distance tables); a
-    // SortMergeJoin of corpus-position rows against codewords means the
-    // corpus got shuffled for a K-row table — the shape that dies at
-    // 100 TB. CartesianProduct must never appear.
+    // (centroid frame, one-row codebooks, distance tables); a
+    // SortMergeJoin of corpus rows against codewords means the corpus
+    // got shuffled for a K-row table — the shape that dies at 100 TB.
+    // CartesianProduct must never appear.
     val pq = graft.queries.Registry.queries("knn_ivfpq")(spark, "/root/testdata/sf0.001")
     val pqPlan = pq.queryExecution.executedPlan.toString
     assert(pqPlan.contains("BroadcastHashJoin"), "knn_ivfpq: broadcast join missing")
     assert(!pqPlan.contains("CartesianProduct"), "knn_ivfpq: cartesian appeared")
-    // the per-(vec,s) argmin keeps its rank-limit pushdown
+    // the top-2 cell probe and the top-5 ADC rank keep their rank-limit
+    // pushdown
     assert(pqPlan.contains("WindowGroupLimit"),
-      "knn_ivfpq: argmin lost its WindowGroupLimit pushdown")
+      "knn_ivfpq: rank filter lost its WindowGroupLimit pushdown")
+    // code assignment is row-local: the projection that calls the kernel
+    // reads the residual checkpoint and the one-row broadcast codebook
+    // with no shuffle Exchange anywhere below it
+    val initial = pq.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val codeFrames = initial.collect {
+      case p: org.apache.spark.sql.execution.ProjectExec
+          if p.projectList.exists(_.toString.contains("graft_pq_assign")) => p
+    }
+    assert(codeFrames.nonEmpty, s"knn_ivfpq: assignment kernel missing:\n$pqPlan")
+    codeFrames.foreach { f =>
+      assert(f.toString.contains("ExistingRDD"), s"knn_ivfpq: residual checkpoint missing:\n$f")
+      assert(f.collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+        .isEmpty, s"knn_ivfpq: shuffle between the residual checkpoint and the codes:\n$f")
+    }
 
     // semantic_dedup: the pair step must be an EQUI-join on cluster id
     // (SortMergeJoin or ShuffledHashJoin are both fine — the point is the

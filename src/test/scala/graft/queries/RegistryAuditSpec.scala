@@ -242,9 +242,9 @@ class RegistryAuditSpec extends AnyFunSuite with SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
-    // GraftExtensions: both native functions and the StrengthReduction
-    // optimizer rule (pow(x, 2) -> x * x)
-    Seq("graft_dot", "graft_zorder").foreach { f =>
+    // GraftExtensions: the three native functions and the
+    // StrengthReduction optimizer rule (pow(x, 2) -> x * x)
+    Seq("graft_dot", "graft_pq_assign", "graft_zorder").foreach { f =>
       assert(spark.sessionState.functionRegistry.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier(f)), s"$f not registered")
     }

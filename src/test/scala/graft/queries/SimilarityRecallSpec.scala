@@ -65,4 +65,21 @@ class SimilarityRecallSpec extends AnyFunSuite with SparkSpec {
     info(f"refined IVF probe-4 recall: $recallR4%.2f")
     assert(recallR4 >= recallR2, "recall must be monotone in probes")
   }
+
+  // knn_ivf_refined asks for ONE probe budget, so its scored candidate
+  // frame has one consumer and skips the eager checkpoint that the
+  // multi-budget callers (knn_recall_curve, knn_ndcg) take. The skip must
+  // not change a row: budget 2 alone (unmaterialized) equals budget 2
+  // read off the checkpointed two-budget frame.
+  test("knn_ivf_refined's single-budget checkpoint skip equals the materialized form") {
+    val cols = Seq("q_id", "cluster", "rank", "vec_id", "cos_sim")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.head, cols.tail: _*).collect().map(_.toSeq).toSeq
+        .sortBy(r => (r(0).asInstanceOf[Long], r(2).asInstanceOf[Int]))
+    val skipped = rows(SimilarityQueries.knnIvfRefined(spark, dir, probes = 2))
+    val materialized = rows(SimilarityQueries.refinedTopPerProbe(spark, dir, Seq(2, 4), 3)
+      .filter(org.apache.spark.sql.functions.col("probes") === 2))
+    assert(skipped.size === 50)
+    assert(skipped === materialized)
+  }
 }
