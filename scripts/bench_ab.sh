@@ -3,33 +3,36 @@
 # two versions of the tree, then each side's median and quartiles of one
 # end-to-end metric and the number of pairs the change won.
 #
-#   scripts/bench_ab.sh [-n pairs] [-w workload] [-m metric] [-s seconds]
-#                       [-S first_seed] BASE [CHANGE]
+#   scripts/bench_ab.sh [-n pairs] [-w workload] [-m metric] [-S first_seed]
+#                       BASE [CHANGE]
 #
 # BASE and CHANGE are git refs (exported with `git archive` into a temp
 # directory) or existing directories (used in place; `.` is the working
 # tree). CHANGE defaults to HEAD. Pair i runs both sides on seed
 # first_seed+i with the same settings; even pairs run BASE first, odd
-# pairs CHANGE first. Defaults: 10 pairs of registry_hot, pass_s, 10 s.
-# The metric's "better" direction is read from BENCHMARK.json. Each run's
-# last stdout line and stderr stay under the temp directory, which is
-# printed; exported trees are removed on exit.
+# pairs CHANGE first. Defaults: 10 pairs of registry_hot, pass_s.
+# The run length (run_seconds) and the metric's "better" direction are
+# read from BENCHMARK.json, so every run is as long as the benchmark's.
+# Each run's last stdout line and stderr stay under the temp directory,
+# which is printed; exported trees are removed on exit.
 # A run that reports correct=false or a failure aborts the comparison.
 set -euo pipefail
 
-pairs=10 workload=registry_hot metric=pass_s seconds=10 seed0=1
-while getopts "n:w:m:s:S:" opt; do
+pairs=10 workload=registry_hot metric=pass_s seed0=1
+while getopts "n:w:m:S:" opt; do
   case $opt in
     n) pairs=$OPTARG ;; w) workload=$OPTARG ;; m) metric=$OPTARG ;;
-    s) seconds=$OPTARG ;; S) seed0=$OPTARG ;;
-    *) sed -n '2,17p' "$0"; exit 2 ;;
+    S) seed0=$OPTARG ;;
+    *) sed -n '2,18p' "$0"; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
-[ $# -ge 1 ] || { sed -n '2,17p' "$0"; exit 2; }
+[ $# -ge 1 ] || { sed -n '2,18p' "$0"; exit 2; }
 base_arg=$1 change_arg=${2:-HEAD}
 
 repo=$(git rev-parse --show-toplevel)
+seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+  "$repo/BENCHMARK.json")
 work=$(mktemp -d "${TMPDIR:-/tmp}/bench_ab.XXXXXX")
 trap 'rm -rf "$work/base" "$work/change"' EXIT # exported trees and their builds
 echo "bench_ab: work files in $work"

@@ -427,9 +427,13 @@ object ScaleSmoke {
       graft.queries.SimilarityQueries.semanticDedupFrom(spark, scaledEmb).count())
     // IVF-PQ index build (residual quantization + codes): row-local
     // assignment against a one-row broadcast codebook + dim×K
-    // partial-agg shuffles — ~linear in corpus
+    // partial-agg shuffles — ~linear in corpus. The action sums the
+    // code arrays' sizes: a bare count() reads no column, so pruning
+    // would drop the assignment kernel from the timed plan. rows =
+    // N×NSub codes, the row count of the earlier per-(vec,s) figures
     time("ivfpq_codes")(
-      graft.queries.SimilarityQueries.ivfPqParts(spark, scaledEmb)._3.count())
+      graft.queries.SimilarityQueries.ivfPqParts(spark, scaledEmb)._3
+        .agg(sum(size(col("codes")))).head().getLong(0))
     // incremental IVF maintenance: centroids trained on the K×-scaled
     // base OUTSIDE the timed stage (build ∝ corpus, paid once); the
     // timed stage is the maintenance op itself — broadcast-assign a

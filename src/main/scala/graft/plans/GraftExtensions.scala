@@ -12,7 +12,10 @@ import graft.functions.{DotProduct, PqAssign, ZOrderKey}
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. Queries
   * fall back to built-in compositions when the extension is absent
   * (see VectorFunctions.dotFast and pqAssignFast), so a vanilla session
-  * still works.
+  * still works. That session is the one case the fallbacks exist for:
+  * [[graft.SparkEntry.queries]] runs on whatever session its caller
+  * built, and nothing in this repository builds one without the
+  * extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
