@@ -323,22 +323,6 @@ object SimilarityQueries {
         .filter(col("lang") === "en" && col("n_chars") >= 200)
         .select(col("doc_id").as("vec_id"))))
 
-  /** Label-mean centroid frame (label, centroid, c_norm): component avgs
-    * rounded to 6 dp (both engines), packed in position order — THE
-    * centroid recipe every IVF-shaped query shares, defined once so the
-    * rounding/tie-break discipline cannot drift between queries and
-    * their DuckDB mirrors. */
-  private def labelCentroids(spark: SparkSession, emb: DataFrame): DataFrame =
-    emb
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-      .groupBy(col("label"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cv")))),
-        x => x.getField("cv")).as("centroid"))
-      .withColumn("c_norm", sqrt(dotFast(spark)(col("centroid"), col("centroid"))))
-
   private def knnIvfProbesImpl(
       spark: SparkSession, dir: String, probes: Int,
       keep: Option[DataFrame]): DataFrame = {
@@ -346,19 +330,10 @@ object SimilarityQueries {
     val emb = Tables.embeddings(spark, dir)
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
       .materializeOnce
-    // centroid arrays: component avgs rounded to 6 (both engines), packed
-    // in position order
-    val cent = labelCentroids(spark, emb)
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    val wAssign = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("label"))
-    val assign = q.crossJoin(broadcast(cent))
-      .withColumn("c_sim",
-        round(dotF(col("q_emb"), col("centroid")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(wAssign))
+    val assign = rankCentroids(emb.filter(col("vec_id") < 10), centroids(emb, cluster = "label"))
       .filter(col("rn") <= probes)
-      .select(col("q_id"), col("q_emb"), col("q_norm"), col("label"))
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("norm").as("q_norm"),
+        col("c_label").as("label"))
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
     val probeSide = keep.fold(emb)(k => emb.join(k, Seq("vec_id"), "left_semi"))
@@ -448,54 +423,83 @@ object SimilarityQueries {
        |FROM ranked WHERE rank <= 3
        |ORDER BY q_id, rank""".stripMargin
 
-  // ---- refined IVF (Lloyd-iterated index build) ---------------------------
+  // ---- the IVF core: centroids, ranked assignment, Lloyd rounds ----------
 
-  /** Centroid frame (c_label, centroid, c_norm) from (cluster, embedding)
-    * rows: the recompute half of a Lloyd step. Component avgs rounded to 6
-    * so the downstream argmax is engine-stable. */
-  private def centroidsOf(spark: SparkSession, assigned: DataFrame): DataFrame =
+  /** Centroid frame (keys…, c_label, centroid, c_norm) from (keys…,
+    * `cluster`, embedding) rows — the label seed of an IVF index and the
+    * recompute half of a Lloyd step. Component avgs rounded to 6 dp (both
+    * engines) and packed in position order: the ONLY place the centroid
+    * recipe lives, so the rounding cannot drift between queries and their
+    * DuckDB mirrors. `keys` build one independent centroid set per key
+    * value in the same aggregates. */
+  private def centroids(src: DataFrame, keys: Seq[String] = Nil,
+      cluster: String = "cluster"): DataFrame = {
+    val k = keys.map(col)
     // posexplode + (cluster, pos) aggregate, NOT d per-component avg
     // aggregates on the unexploded frame (r15 A/B): 64 avg expressions
     // put ~128 fields in the aggregation buffer, past the codegen
     // field limit — the whole stage fell back to interpreted row-based
     // aggregation and the embedding family regressed ~1.3-2x end to end.
-    assigned
-      .select(col("cluster").as("c_label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("c_label"), col("pos"))
+    src
+      .select(k :+ col(cluster).as("c_label") :+ posexplode(col("embedding")).as(Seq("pos", "v")): _*)
+      .groupBy(k :+ col("c_label") :+ col("pos"): _*)
       .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-      .groupBy(col("c_label"))
+      .groupBy(k :+ col("c_label"): _*)
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("cv")))),
         x => x.getField("cv")).as("centroid"))
-      .withColumn("c_norm", sqrt(dotFast(spark)(col("centroid"), col("centroid"))))
+      .withColumn("c_norm", sqrt(dotFast(src.sparkSession)(col("centroid"), col("centroid"))))
+  }
 
-  /** Shared ranked-assignment core of a Lloyd step: broadcast centroids,
-    * map-side rounded-cosine argmax (tie-break on c_label), keep rank 1.
-    * The ONLY place the assignment convention lives — both projections
-    * below derive from it. */
-  private def rankedAssign(spark: SparkSession, emb: DataFrame, cent: DataFrame): DataFrame = {
-    val dotF = dotFast(spark) _
+  /** Ranks every centroid for every (keys…, vec_id) row of `x` (vec_id,
+    * embedding, norm, keys…): `c_sim` is the cosine rounded to 6 dp, `rn`
+    * the row number ordered by c_sim desc, then c_label — ties go to the
+    * smaller label. Callers keep `rn = 1` (assignment) or `rn <= p` (probe
+    * budget p). The ONLY place the assignment convention lives. Centroids
+    * are broadcast, so ranking is map-side; with `keys` each row is ranked
+    * only against its own key's centroids. */
+  private[queries] def rankCentroids(x: DataFrame, cent: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    val dotF = dotFast(x.sparkSession) _
     // row_number window, NOT max_by (r15 A/B): a max_by whose value
     // struct carries the embedding array cannot use HashAggregateExec
     // (array-typed buffer) and fell back to SortAggregate on both sides
     // of the exchange — strictly worse than this window, which Spark
-    // already executes with a partial WindowGroupLimit (top-1 per vector
+    // already executes with a partial WindowGroupLimit (top-p per vector
     // kept map-side before the shuffle).
-    val w = Window.partitionBy(col("vec_id"))
+    val w = Window.partitionBy((keys :+ "vec_id").map(col): _*)
       .orderBy(col("c_sim").desc, col("c_label"))
-    emb.crossJoin(broadcast(cent))
+    val pairs =
+      if (keys.isEmpty) x.crossJoin(broadcast(cent)) else x.join(broadcast(cent), keys)
+    pairs
       .withColumn("c_sim",
         round(dotF(col("embedding"), col("centroid")) / (col("norm") * col("c_norm")), 6))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
   }
 
   /** Nearest-centroid assignment (the other half of a Lloyd step):
-    * returns (vec_id, embedding, norm, cluster) — no c_sim, so callers
-    * can re-join centroid frames without column collisions. */
-  private def assignTo(spark: SparkSession, emb: DataFrame, cent: DataFrame): DataFrame =
-    rankedAssign(spark, emb, cent)
-      .select(col("vec_id"), col("embedding"), col("norm"), col("c_label").as("cluster"))
+    * returns (keys…, vec_id, embedding, norm, cluster) — no c_sim, so
+    * callers can re-join centroid frames without column collisions. */
+  private def assignTo(emb: DataFrame, cent: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    rankCentroids(emb, cent, keys)
+      .filter(col("rn") === 1)
+      .select(keys.map(col) ++ Seq(col("vec_id"), col("embedding"), col("norm"),
+        col("c_label").as("cluster")): _*)
+
+  /** `iters` Lloyd rounds from the label seed over (keys…, vec_id, label,
+    * embedding, norm) rows: assign every vector to its nearest centroid,
+    * then recompute. Each round is a broadcast map-side assignment plus a
+    * dim × K partial-agg shuffle, so rounds cost ∝ corpus, never pairs.
+    * `checkpointEachRound` materializes every round's (small) centroid
+    * frame, which keeps the next round's broadcast side a shallow scan
+    * instead of a nested aggregate chain; only the variant-keyed chain of
+    * [[knnIncrementalRecallFrom]] measured faster with it. */
+  private[queries] def lloyd(emb: DataFrame, iters: Int, keys: Seq[String] = Nil,
+      checkpointEachRound: Boolean = false): DataFrame =
+    (1 to iters).foldLeft(centroids(emb, keys, cluster = "label")) { (c, _) =>
+      val next = centroids(assignTo(emb, c, keys), keys)
+      if (checkpointEachRound) next.materializeOnce else next
+    }
 
   /** IVF with a Lloyd-refined index (VERDICT r2 item 4): `iters` k-means
     * iterations (default 3) turn the arbitrary label seed partitions into
@@ -521,10 +525,7 @@ object SimilarityQueries {
     val emb = embIn
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
       .materializeOnce
-    val cent0 = centroidsOf(spark,
-      emb.select(col("label").as("cluster"), col("embedding")))
-    (1 to iters).foldLeft(cent0)((c, _) =>
-      centroidsOf(spark, assignTo(spark, emb, c)))
+    lloyd(emb, iters)
   }
 
   /** Broadcast map-side assignment of an embeddings frame to an EXISTING
@@ -532,7 +533,7 @@ object SimilarityQueries {
     * IVF index: ∝ |delta|, zero touches of the indexed corpus. */
   private[graft] def assignToCentroids(spark: SparkSession,
       embIn: DataFrame, cent: DataFrame): DataFrame =
-    assignTo(spark,
+    assignTo(
       embIn.withColumn("norm",
         sqrt(dotFast(spark)(col("embedding"), col("embedding")))),
       cent)
@@ -557,26 +558,15 @@ object SimilarityQueries {
       .materializeOnce
     val base = emb.filter(col("vec_id") % 10 < 8)
     val delta = emb.filter(col("vec_id") % 10 >= 8)
-    val cent2 = (1 to 3)
-      .foldLeft(centroidsOf(spark,
-        base.select(col("label").as("cluster"), col("embedding"))))(
-        (c, _) => centroidsOf(spark, assignTo(spark, base, c)))
-      .materializeOnce
+    val cent2 = lloyd(base, 3).materializeOnce
     // the incremental union: base postings + broadcast-assigned delta
-    val idx = assignTo(spark, base, cent2)
-      .unionAll(assignTo(spark, delta, cent2))
+    val idx = assignTo(base, cent2)
+      .unionAll(assignTo(delta, cent2))
       .materializeOnce
-    val q = emb.filter(col("vec_id") < 10)
+    val qa = rankCentroids(emb.filter(col("vec_id") < 10), cent2)
+      .filter(col("rn") <= 2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val wAssign = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_label"))
-    val qa = q.crossJoin(broadcast(cent2))
-      .withColumn("c_sim",
-        round(dotF(col("q_emb"), col("centroid")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= 2)
-      .select(col("q_id"), col("q_emb"), col("q_norm"), col("c_label").as("cluster"))
+        col("norm").as("q_norm"), col("c_label").as("cluster"))
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
     qa.join(idx, "cluster")
@@ -602,33 +592,19 @@ object SimilarityQueries {
     val emb = Tables.embeddings(spark, dir)
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
       .materializeOnce
-    val cent0 = centroidsOf(spark,
-      emb.select(col("label").as("cluster"), col("embedding")))
-    // `iters` Lloyd rounds (assign → recompute); each is a broadcast
-    // map-side assignment + a dim×K partial-agg shuffle, so extra rounds
-    // cost ∝ corpus, never pairs
-    val cent2 = (1 to iters)
-      .foldLeft(cent0)((c, _) => centroidsOf(spark, assignTo(spark, emb, c)))
-      .materializeOnce
+    val cent2 = lloyd(emb, iters).materializeOnce
     // final index: every vector assigned to the refined centroids
-    val idx = assignTo(spark, emb, cent2).materializeOnce
-    val q = idx.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    val wAssign = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_label"))
-    val qa = q.crossJoin(broadcast(cent2))
-      .withColumn("c_sim",
-        round(dotF(col("q_emb"), col("centroid")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= probesList.max)
-      .select(col("q_id"), col("q_emb"), col("q_norm"),
-        col("c_label").as("cluster"), col("arn"))
+    val idx = assignTo(emb, cent2).materializeOnce
+    val qa = rankCentroids(idx.filter(col("vec_id") < 10), cent2)
+      .filter(col("rn") <= probesList.max)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("norm").as("q_norm"), col("c_label").as("cluster"), col("rn"))
     // candidates scored once at the MAX budget; each budget filters down
     val cand0 = qa.join(idx, "cluster")
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim",
         round(dotF(col("q_emb"), col("embedding")) / (col("q_norm") * col("norm")), 6))
-      .select(col("q_id"), col("cluster"), col("vec_id"), col("cos_sim"), col("arn"))
+      .select(col("q_id"), col("cluster"), col("vec_id"), col("cos_sim"), col("rn"))
     // materialize ONLY when several probe budgets re-read the scored
     // frame; a single-budget caller has one consumer and the eager
     // checkpoint job is pure added driver latency (r16, guide §5)
@@ -636,7 +612,7 @@ object SimilarityQueries {
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
     probesList.map { p =>
-      cand.filter(col("arn") <= p)
+      cand.filter(col("rn") <= p)
         .withColumn("rank", row_number().over(wRank))
         .filter(col("rank") <= 5)
         .select(lit(p).as("probes"), col("q_id"), col("cluster"),
@@ -771,12 +747,40 @@ object SimilarityQueries {
     * grouping key, so ONE variant-tagged training frame drives one
     * Lloyd chain producing all four centroid sets in the same
     * aggregates (4 serial builds cost 9.3 s at sf0.1; the fused chain
-    * runs the report in ~2 s). Per-vector assignment is map-side, so
+    * runs the report in ~2 s), each equal to its own unkeyed chain
+    * (IvfCoreSpec). Per-vector assignment is map-side, so
     * indexing each variant over the whole corpus is EXACTLY the
     * base-assign ∪ delta-admit union — the identity IvfIncrementalSpec
     * pins as claim (1). */
   def knnIncrementalRecall(spark: SparkSession, dir: String): DataFrame =
     knnIncrementalRecallFrom(spark, Tables.embeddings(spark, dir))
+
+  /** [[knnIncrementalRecall]]'s index variants: name → the percent of the
+    * corpus (`vec_id % 100 < pct`) that arrives after training. */
+  private[queries] val RecallVariants = Seq("full" -> 0, "f10" -> 10, "f25" -> 25, "f50" -> 50)
+
+  private def tagged(src: DataFrame): DataFrame = RecallVariants.map { case (v, _) =>
+    src.withColumn("variant", lit(v))
+  }.reduce(_ unionAll _)
+
+  /** The four indexes of [[knnIncrementalRecall]] as ONE variant-keyed
+    * build over (vec_id, label, embedding, norm) rows: centroids (variant,
+    * c_label, centroid, c_norm) trained on each variant's base slice, and
+    * postings (variant, vec_id, embedding, norm, cluster) of the whole
+    * corpus against each variant's centroids. Each variant must equal its
+    * own unkeyed [[lloyd]] chain and assignment (IvfCoreSpec). */
+  private[queries] def recallIndexes(emb: DataFrame): (DataFrame, DataFrame) = {
+    // the ONLY thing that differs per variant is the training slice
+    val train = RecallVariants.map { case (v, pct) =>
+      emb.filter(pmod(col("vec_id"), lit(100)) >= pct).withColumn("variant", lit(v))
+    }.reduce(_ unionAll _)
+    // 4 × K centroid rows per round, materialized each round (A/B'd at
+    // sf0.1: 4.4 → 3.8 s)
+    val cent = lloyd(train, 3, Seq("variant"), checkpointEachRound = true)
+    // postings: every variant indexes the WHOLE corpus against its own
+    // centroids (= base-assign ∪ delta-admit, per the union identity)
+    (cent, assignTo(tagged(emb), cent, Seq("variant")))
+  }
 
   /** Frame-based core of [[knnIncrementalRecall]] (ScaleSmoke probes it
     * at K× corpus size — every stage is a broadcast map pass or a
@@ -787,64 +791,16 @@ object SimilarityQueries {
     val emb = embRaw
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
       .materializeOnce
-    // training slices, variant-tagged: the ONLY thing that differs per
-    // variant is which vectors the centroids are trained on
-    val variants = Seq("full" -> 0, "f10" -> 10, "f25" -> 25, "f50" -> 50)
-    def tagged(src: DataFrame): DataFrame = variants.map { case (v, _) =>
-      src.withColumn("variant", lit(v))
-    }.reduce(_ unionAll _)
-    val train = variants.map { case (v, pct) =>
-      emb.filter(pmod(col("vec_id"), lit(100)) >= pct).withColumn("variant", lit(v))
-    }.reduce(_ unionAll _)
-    // variant-keyed Lloyd step halves: centroidsOf / rankedAssign with
-    // `variant` added to every grouping and window key
-    def centroidsOfV(assigned: DataFrame): DataFrame = assigned
-      .select(col("variant"), col("cluster").as("c_label"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("variant"), col("c_label"), col("pos"))
-      .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-      .groupBy(col("variant"), col("c_label"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cv")))),
-        x => x.getField("cv")).as("centroid"))
-      .withColumn("c_norm", sqrt(dotF(col("centroid"), col("centroid"))))
-    def assignV(embT: DataFrame, cent: DataFrame): DataFrame = {
-      // window, not max_by — the array-payload SortAggregate fallback,
-      // see rankedAssign
-      val w = Window.partitionBy(col("variant"), col("vec_id"))
-        .orderBy(col("c_sim").desc, col("c_label"))
-      embT.join(broadcast(cent), Seq("variant"))
-        .withColumn("c_sim",
-          round(dotF(col("embedding"), col("centroid")) / (col("norm") * col("c_norm")), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("variant"), col("vec_id"), col("embedding"), col("norm"),
-          col("c_label").as("cluster"))
-    }
-    val cent0 = centroidsOfV(
-      train.select(col("variant"), col("label").as("cluster"), col("embedding")))
-    val cent = (1 to 3)
-      .foldLeft(cent0)((c, _) => centroidsOfV(assignV(train, c)).materializeOnce)
-      // 4 × K rows per round; materializing each round keeps the
-      // broadcast side of the next assignment a shallow scan instead of
-      // a 4-deep nested aggregate chain (A/B'd at sf0.1: 4.4 → 3.8 s)
-    // postings: every variant indexes the WHOLE corpus against its own
-    // centroids (= base-assign ∪ delta-admit, per the union identity)
-    val idx = assignV(tagged(emb), cent)
+    val (cent, idx) = recallIndexes(emb)
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"))
-    val wAssign = Window.partitionBy(col("variant"), col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_label"))
     val wRank = Window.partitionBy(col("variant"), col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
-    val returned = tagged(q).join(broadcast(cent), Seq("variant"))
-      .withColumn("c_sim",
-        round(dotF(col("q_emb"), col("centroid")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= 2)
-      .select(col("variant"), col("q_id"), col("q_emb"), col("q_norm"),
-        col("c_label").as("cluster"))
+    val returned = rankCentroids(tagged(emb.filter(col("vec_id") < 10)), cent, Seq("variant"))
+      .filter(col("rn") <= 2)
+      .select(col("variant"), col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("norm").as("q_norm"), col("c_label").as("cluster"))
       .join(idx, Seq("variant", "cluster"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim",
@@ -1045,15 +1001,9 @@ object SimilarityQueries {
       .filter(col("rank") <= 5)
       .select("sel_mod", "q_id", "vec_id")
     // label-centroid IVF, 2-probe pre-filtered search (knn_ivf discipline)
-    val cent = labelCentroids(spark, emb)
-    val wAssign = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("label"))
-    val assign = q.crossJoin(broadcast(cent))
-      .withColumn("c_sim",
-        round(dotF(col("q_emb"), col("centroid")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(wAssign))
+    val assign = rankCentroids(emb.filter(col("vec_id") < 10), centroids(emb, cluster = "label"))
       .filter(col("rn") <= 2)
-      .select(col("q_id"), col("label"))
+      .select(col("vec_id").as("q_id"), col("c_label").as("label"))
     val ivf = swept.join(assign, Seq("q_id", "label"))
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= 5)
@@ -1233,7 +1183,7 @@ object SimilarityQueries {
     * [[embeddingOutliers]] p95 filter cannot give.
     *
     * Scale shape: one broadcast-centroid map pass over the corpus (the
-    * [[rankedAssign]] convention, kept to rn ≤ 2) and one K-row
+    * [[rankCentroids]] convention, kept to rn ≤ 2) and one K-row
     * aggregate. Exactness: similarities go micro through DECIMAL — the
     * margin means are truncating divisions of non-negative integers
     * (s1 ≥ s2 by the ranking), and cohesion is emitted as the exact SUM
@@ -1244,13 +1194,8 @@ object SimilarityQueries {
       .withColumn("norm", sqrt(dotF(col("embedding"), col("embedding"))))
     val cent = refinedCentroidsFrom(spark, Tables.embeddings(spark, dir))
       .materializeOnce
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("c_label"))
     val micro = (c: Column) => (c.cast("decimal(18,6)") * 1000000).cast("long")
-    emb.crossJoin(broadcast(cent))
-      .withColumn("c_sim",
-        round(dotF(col("embedding"), col("centroid")) / (col("norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(w))
+    rankCentroids(emb, cent)
       .filter(col("rn") <= 2)
       .groupBy(col("vec_id"))
       .agg(max(when(col("rn") === 1, col("c_label"))).as("cluster"),
@@ -1400,20 +1345,9 @@ object SimilarityQueries {
   /** Frame-based core of [[ivfKmeansRefine]] (also driven by ScaleSmoke
     * at K× corpus size). */
   def ivfKmeansRefineFrom(spark: SparkSession, embIn: DataFrame): DataFrame = {
-    val dotF = dotFast(spark) _
     val emb = embIn
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
-    val cent = labelCentroids(spark, emb)
-      .withColumnRenamed("label", "c_label") // emb also carries `label`
-    val wA = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("c_label"))
-    val assign = emb.crossJoin(broadcast(cent))
-      .withColumn("c_sim",
-        round(dotF(col("embedding"), col("centroid")) / (col("norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(wA))
-      .filter(col("rn") === 1)
-      .select(col("c_label").as("cluster"), col("embedding"))
-    assign
+    assignTo(emb, centroids(emb, cluster = "label"))
       .select(col("cluster"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy(col("cluster"), col("pos"))
       .agg(
@@ -1480,11 +1414,7 @@ object SimilarityQueries {
     val emb = embIn
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
       .materializeOnce
-    val cent0 = centroidsOf(spark,
-      emb.select(col("label").as("cluster"), col("embedding")))
-    val cent1 = centroidsOf(spark, assignTo(spark, emb, cent0))
-    val cent2 = centroidsOf(spark, assignTo(spark, emb, cent1))
-    val idx = assignTo(spark, emb, cent2).materializeOnce
+    val idx = assignTo(emb, lloyd(emb, 2)).materializeOnce
     val a = idx.select(col("cluster"), col("vec_id").as("a_id"),
       col("embedding").as("a_emb"), col("norm").as("a_norm"))
     val b = idx.select(col("cluster"), col("vec_id").as("b_id"),
@@ -1519,12 +1449,6 @@ object SimilarityQueries {
        |FROM p GROUP BY cluster, b_id
        |ORDER BY cluster, vec_id""".stripMargin
 
-  /** Nearest-centroid assignment KEEPING the similarity — same
-    * [[rankedAssign]] core, outlier-scoring projection. */
-  private def assignWithSim(spark: SparkSession, emb: DataFrame, cent: DataFrame): DataFrame =
-    rankedAssign(spark, emb, cent)
-      .select(col("vec_id"), col("c_label").as("cluster"), col("c_sim"))
-
   /** Embedding-space outlier pruning — the vector-side quality filter: a
     * vector far from EVERY cluster centroid is in no-man's land
     * (mislabeled, corrupted, or out-of-distribution) and gets flagged.
@@ -1537,11 +1461,10 @@ object SimilarityQueries {
     val emb = Tables.embeddings(spark, dir)
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
       .materializeOnce
-    val cent0 = centroidsOf(spark,
-      emb.select(col("label").as("cluster"), col("embedding")))
-    val cent1 = centroidsOf(spark, assignTo(spark, emb, cent0))
-    val dists = assignWithSim(spark, emb, cent1)
-      .withColumn("dist", round(lit(1.0) - col("c_sim"), 6))
+    val dists = rankCentroids(emb, lloyd(emb, 1))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("c_label").as("cluster"),
+        round(lit(1.0) - col("c_sim"), 6).as("dist"))
       .materializeOnce
     val bound = dists.agg(
       round(expr("percentile(dist, 0.95)"), 6).as("p95"))
@@ -1601,17 +1524,11 @@ object SimilarityQueries {
       .select("vec_id", "own_label", "s", "subv")
       .materializeOnce
 
-  /** Per-subspace codebooks (code_label, s, centroid, cdot). */
+  /** Per-subspace codebooks (code_label, s, centroid, cdot): the label
+    * centroids of each subspace's subvectors. */
   private def pqCodebook(spark: SparkSession, sub: DataFrame): DataFrame =
-    sub
-      .select(col("own_label"), col("s"), posexplode(col("subv")).as(Seq("pos", "v")))
-      .groupBy(col("own_label"), col("s"), col("pos"))
-      .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-      .groupBy(col("own_label"), col("s"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cv")))),
-        x => x.getField("cv")).as("centroid"))
-      .select(col("own_label").as("code_label"), col("s"), col("centroid"))
+    centroids(sub.withColumnRenamed("subv", "embedding"), Seq("s"), cluster = "own_label")
+      .select(col("c_label").as("code_label"), col("s"), col("centroid"))
       .withColumn("cdot", dotFast(spark)(col("centroid"), col("centroid")))
 
   /** All (vec_id, s, code_label, sqd) subvector↔codeword distances —
@@ -1777,16 +1694,8 @@ object SimilarityQueries {
     * queries and ScaleSmoke. */
   private[graft] def ivfPqParts(spark: SparkSession, embIn: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val assign = pqAssignFast(spark) _
-    // coarse centroids (c_label, centroid), components rounded per convention
-    val cent = embIn
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label").as("c_label"), col("pos"))
-      .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-      .groupBy(col("c_label"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cv")))),
-        x => x.getField("cv")).as("centroid"))
-      .materializeOnce
+    // coarse centroids (c_label, centroid, c_norm): the label centroids
+    val cent = centroids(embIn, cluster = "label").materializeOnce
     // integer micro-unit residuals (vec_id, own_label, rv)
     val r = embIn.join(broadcast(cent), col("label") === col("c_label"))
       .select(col("vec_id"), col("label").as("own_label"),
@@ -1843,24 +1752,16 @@ object SimilarityQueries {
     * (code → Σdiff²) per subspace, so a corpus row's ADC distance is
     * [[NSub]] lookups summed in place — no per-(q, vec) aggregate. */
   private def ivfPqAdc(spark: SparkSession, dir: String): DataFrame = {
-    val dotF = dotFast(spark) _
     val emb = Tables.embeddings(spark, dir)
     val (cent, codebook, codes) = ivfPqParts(spark, emb)
-    val centN = cent.withColumn("c_norm", sqrt(dotF(col("centroid"), col("centroid"))))
     val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .withColumn("q_norm", sqrt(dotF(col("q_emb"), col("q_emb"))))
+      .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
     // query cell probes: top-2 coarse cells by cosine, each with the
     // query's residual against that cell's centroid, same micro units
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_label"))
-    val qr = q.crossJoin(broadcast(centN))
-      .withColumn("c_sim",
-        round(dotF(col("q_emb"), col("centroid")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(wProbe))
+    val qr = rankCentroids(q, cent)
       .filter(col("rn") <= 2)
-      .select(col("q_id"), col("c_label").as("cell"),
-        microResidual(col("q_emb"), col("centroid")).as("rv"))
+      .select(col("vec_id").as("q_id"), col("c_label").as("cell"),
+        microResidual(col("embedding"), col("centroid")).as("rv"))
     // per-(query, probed cell) distance table: exact integer Σdiff²
     val dtable = qr.crossJoin(broadcast(codebook))
       .select(col("q_id"), col("cell"), array((0 until NSub).map(s =>

@@ -236,6 +236,29 @@ class RegistryAuditSpec extends AnyFunSuite with SparkSpec {
     assert(builders === Seq("graft/Sessions.scala"))
   }
 
+  // One IVF core: the assignment order (rounded cosine desc, then
+  // c_label) lives only in SimilarityQueries.rankCentroids and the
+  // centroid-array pack only in SimilarityQueries.centroids, so a query
+  // that copies either convention instead of calling the helper fails
+  // here. The DuckDB oracle strings (triple-quoted) and comments are
+  // excluded; whitespace is ignored.
+  test("SimilarityQueries ranks and packs centroids only in its IVF core helpers") {
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/scala/graft/queries/SimilarityQueries.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val code = "(?s)/\\*.*?\\*/".r.replaceAllIn(
+      "(?s)\"\"\".*?\"\"\"".r.replaceAllIn(src, ""), "")
+    // each def's text runs to the next def; code before the first is "<object>"
+    val starts = "\\bdef\\s+(\\w+)".r.findAllMatchIn(code).map(m => m.start -> m.group(1)).toSeq
+    val blocks = ((0 -> "<object>") +: starts).zip(starts.map(_._1) :+ code.length)
+      .map { case ((from, name), to) => name -> code.substring(from, to).replaceAll("\\s", "") }
+    def owners(pattern: String): Seq[String] = blocks.flatMap { case (name, body) =>
+      Seq.fill(body.sliding(pattern.length).count(_ == pattern))(name)
+    }
+    assert(owners("col(\"c_sim\").desc") === Seq("rankCentroids"))
+    assert(owners("collect_list(struct(col(\"pos\"),col(\"cv\")))") === Seq("centroids"))
+  }
+
   test("the shared test session carries Bench's confs at 4 cores") {
     import org.apache.spark.sql.functions.{col, pow}
     assert(spark.sparkContext.master === "local[4]")
