@@ -33,7 +33,10 @@ base_arg=$1 change_arg=${2:-HEAD}
 repo=$(git rev-parse --show-toplevel)
 seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
   "$repo/BENCHMARK.json")
-work=$(mktemp -d "${TMPDIR:-/tmp}/bench_ab.XXXXXX")
+# /tmp, not $TMPDIR: perfbench's sbt puts its server socket ~70 characters
+# below each exported tree, and a longer prefix passes the 108-byte Unix
+# socket path limit ("Cannot fit name" on the first build)
+work=$(mktemp -d /tmp/bab.XXXXXX)
 trap 'rm -rf "$work/base" "$work/change"' EXIT # exported trees and their builds
 echo "bench_ab: work files in $work"
 
@@ -77,6 +80,8 @@ change = [float(r[2]) for r in rows]
 better = next(e["better"] for e in json.load(open(sys.argv[3]))["end_to_end"]
               if e["name"] == sys.argv[2])
 def q(xs):
+    if len(xs) < 2:  # one pair: no spread to report
+        return xs[0], xs[0], xs[0]
     q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q2, q3
 wins = sum((c < b) if better == "lower" else (c > b) for b, c in zip(base, change))

@@ -41,6 +41,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // sorted order: per-query timings comparable across rounds regardless
+    // of Map iteration order. SPARK_GRAFT_BENCH_ONLY (comma-separated
+    // names, dev only) narrows the run for adjudicating a single query's
+    // regression without paying the full-registry sweep. An unknown name
+    // fails here, before the session starts.
+    val only = Recorder.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"), SparkEntry.queries.keys)
+    val queries = SparkEntry.queries.filter(kv => only(kv._1)).toSeq.sortBy(_._1)
     val spark = Sessions.local(cpus)
 
     def loadAvg(): Double = {
@@ -61,16 +68,6 @@ object Bench {
     val probeStart = gate.probeSec
     val contentionWaits = gate.waits
     val contended = gate.contended
-
-    // sorted order: per-query timings comparable across rounds regardless
-    // of Map iteration order. SPARK_GRAFT_BENCH_ONLY (comma-separated
-    // names, dev only) narrows the run for adjudicating a single query's
-    // regression without paying the full-registry sweep.
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(s) if s.nonEmpty => s.split(",").toSet
-      case _                     => _ => true
-    }
-    val queries = SparkEntry.queries.filter(kv => only(kv._1)).toSeq.sortBy(_._1)
 
     // warmup: one untimed pass over EVERY query — session init, parquet
     // footer reads, and per-query codegen all land outside the timings.
@@ -136,7 +133,7 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val loadEnd = loadAvg()
     val probes =
-      s""""probe_sec_start":$probeStart,"probe_sec_end":$probeEnd,""" +
+      f""""probe_sec_start":$probeStart,"probe_steal_start":${gate.steal}%.4f,"probe_sec_end":$probeEnd,""" +
         s""""probe_idle_ref":${ContentionGate.ProbeIdleRef},"contended":$contended,""" +
         s""""contention_waits":$contentionWaits,"sweep_steal":$sweepStealJson"""
     val full =

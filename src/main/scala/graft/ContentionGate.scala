@@ -3,34 +3,51 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The measurement contention gate, shared by every recording main
-  * (`Bench`, `ScaleSmoke`, `StreamBench`): the harness box suffers
-  * co-located steal in ~10-minute waves that the load average reports
-  * unreliably, and three rounds' bench recordings (r2/r5/r10) plus the
-  * r11 scale rows (`knn_inc_recall` 14.2–17.7 s vs 10.9–12.5 s with
-  * untouched code; the `state_lsh_neardup` 2400 s-horizon wall) were
-  * contaminated because only `Bench` carried a gate. Every recorded
-  * row now goes through [[awaitCalm]] and carries its probe stamp, so
-  * a contaminated datapoint is self-identifying instead of needing
-  * cross-round archaeology.
+  * (`Bench`, and `ScaleSmoke`/`StreamBench` through [[Recorder]]): the
+  * harness box suffers co-located steal in ~10-minute waves that the
+  * load average reports unreliably, and three rounds' bench recordings
+  * (r2/r5/r10) plus the r11 scale rows (`knn_inc_recall` 14.2–17.7 s vs
+  * 10.9–12.5 s with untouched code; the `state_lsh_neardup` 2400
+  * s-horizon wall) were contaminated because only `Bench` carried a
+  * gate. Every recorded row now goes through [[awaitCalm]] and carries
+  * its probe stamp, so a contaminated datapoint is self-identifying
+  * instead of needing cross-round archaeology.
   *
   * The probe is a fixed CPU-bound reference job — a codegen'd 400M-row
   * range sum, no I/O, no shuffle, no data dependence — timed min-of-3
-  * after two warm passes. On this box idle it reads ~[[ProbeIdleRef]] s;
-  * under co-located load it stretches by the same factor the query
-  * timings do, so a reader can normalize any row as
-  * `wall × (ProbeIdleRef / probe_sec)` without consulting the baseline
-  * archive. */
+  * after two warm passes. On the 32-core reference host idle it reads
+  * ~[[ProbeIdleRef]] s; under co-located load it stretches by the same
+  * factor the query timings do, so a reader can normalize any row as
+  * `wall × (ProbeIdleRef / probe_sec)`.
+  *
+  * "Calm" is decided from the host's own steal share while the probe
+  * runs (the probe keeps every core runnable, so steal taken during it
+  * is co-tenant contention by definition), not from the probe time
+  * against [[ProbeIdleRef]]: that reference holds only on the
+  * reference hardware, and on any other host the probe never reached
+  * it, so every gated row slept through all its waits. Load from other
+  * processes inside the same VM shows no steal and is no longer gated;
+  * it still shows in the stamped `probe_sec`. So Bench's `contended`
+  * means "steal above [[MaxSteal]] after every wait" from round 17 on,
+  * where earlier BENCH rounds meant "probe above 1.3 × ProbeIdleRef". */
 object ContentionGate {
 
   /** Idle-box reference (min-of-3 of the twice-warmed probe at 32
-    * threads, measured on the harness machine near-idle; re-measure if
-    * the hardware changes). */
+    * threads, measured on the 32-core reference host near-idle).
+    * Stamped into every row for normalization; it does not decide calm. */
   val ProbeIdleRef = 0.11
 
-  /** Above this × [[ProbeIdleRef]] the box is treated as contended and
-    * [[awaitCalm]] waits (r10's polluted start read 1.75×; a quiet box
-    * reads ≤ ~1.2× even cold). */
-  val ContendedFactor = 1.3
+  /** Above this steal share of all CPU time across the probe the host is
+    * contended and [[awaitCalm]] waits. Chosen from SCALE_r14.json (32-core
+    * reference host, every row passed by the old probe-time rule): of
+    * the 37 probes recorded more than once with walls ≥ 1 s, the 30 whose
+    * most-stolen run had a body `steal_integral` below 0.03 kept their
+    * walls within 0.79–1.28× of the fastest run, while 5 of the 7 at 0.03
+    * or more ran 1.37–1.74× longer (`containment_pairs` K=10 at 0.0585,
+    * `state_semantic_neardup` 600 s at 0.0727), all with start and end
+    * probes at or under 0.137 s. That data holds body-wide steal only;
+    * how well the start reading predicts it is unmeasured. */
+  val MaxSteal = 0.03
 
   /** Bounded wait: this many 30 s sleeps (+ re-probes) before recording
     * anyway with `contended=true` — a permanently busy box must still
@@ -39,12 +56,13 @@ object ContentionGate {
 
   val WaitMs = 30000L
 
-  /** One gated measurement window: last probe reading, waits spent, and
-    * whether the window is still contended (record anyway, stamped). */
-  case class Window(probeSec: Double, waits: Int, contended: Boolean) {
+  /** One gated measurement window: last probe reading, the steal share
+    * across it, waits spent, and whether the window is still contended
+    * (record anyway, stamped). */
+  case class Window(probeSec: Double, steal: Double, waits: Int, contended: Boolean) {
     /** The JSON fields every gated artifact row carries. */
     def jsonFields: String =
-      s""""probe_sec":$probeSec,"probe_idle_ref":$ProbeIdleRef,"contended":$contended"""
+      f""""probe_sec":$probeSec,"probe_steal":$steal%.4f,"probe_idle_ref":$ProbeIdleRef,"contended":$contended"""
   }
 
   def probe(spark: SparkSession, threads: Int = 32): Double = {
@@ -59,18 +77,25 @@ object ContentionGate {
   }
 
   /** REFUSE to start a measurement on a contended box: probe, and while
-    * the reading is above [[ContendedFactor]] × idle, sleep 30 s and
-    * re-probe, up to `maxWaits` times. ~0.5 s on a calm box. */
+    * the steal share across the probe is above [[MaxSteal]], sleep 30 s
+    * and re-probe, up to `maxWaits` times. One probe (~0.5–2.5 s) on a
+    * calm box. */
   def awaitCalm(spark: SparkSession, threads: Int = 32,
       maxWaits: Int = MaxWaits, label: String = ""): Window = {
-    var p = probe(spark, threads)
-    var waits = 0
-    while (p > ContendedFactor * ProbeIdleRef && waits < maxWaits) {
-      waits += 1
-      println(f"""{"metric":"contention_wait","probe":"$label","attempt":$waits,"probe_sec":$p}""")
-      Thread.sleep(WaitMs)
-      p = probe(spark, threads)
+    /** (probe seconds, steal share across the probe) */
+    def reading(): (Double, Double) = {
+      val sm = StealMonitor.start()
+      val p = probe(spark, threads)
+      (p, sm.stop().stealIntegral)
     }
-    Window(p, waits, p > ContendedFactor * ProbeIdleRef)
+    var (probeSec, steal) = reading()
+    var waits = 0
+    while (steal > MaxSteal && waits < maxWaits) {
+      waits += 1
+      println(f"""{"metric":"contention_wait","probe":"$label","attempt":$waits,"probe_sec":$probeSec,"steal":$steal%.4f}""")
+      Thread.sleep(WaitMs)
+      reading() match { case (p, s) => probeSec = p; steal = s }
+    }
+    Window(probeSec, steal, waits, steal > MaxSteal)
   }
 }

@@ -6,11 +6,35 @@ import graft.operators.DedupOps
 
 /** Dev-only scale probe: replicate the documents corpus K× (doc_id
   * offsets, small text perturbation via an id suffix so dedup isn't
-  * trivially degenerate) and measure the MinHash/LSH pipeline's scaling
-  * behavior — the empirical check behind the "survives a scale-up" claims
-  * in COVERAGE.md.
+  * trivially degenerate) and time the registered operators on it — the
+  * empirical check behind the "survives a scale-up" claims in
+  * COVERAGE.md. This file holds only feeds and probe names: every probe
+  * calls a production entry point (RegistryAuditSpec rejects an inline
+  * query pipeline here), and every row goes through [[Recorder]].
+  *
+  * Usage: `runMain graft.ScaleSmoke [K [probes]]` — K (default 10) is
+  * the replica count; `probes` is a comma-separated subset of
+  * [[Probes]] (an unknown name fails), so a single probe can be sized at
+  * several K without re-running the sweep. Rows append to
+  * `SPARK_GRAFT_SCALE_OUT` (see [[Recorder.appendRow]]).
   */
 object ScaleSmoke {
+
+  /** Every probe this main can record, in run order (RegistryAuditSpec
+    * checks it against the `time("…")` calls below). */
+  val Probes: Seq[String] = Seq("shingles", "minhash_wide", "lsh_bands",
+    "lsh_candidates", "simhash", "simhash_banded_cand",
+    "simhash_banded_capped", "winnow_fps", "rake_phrases", "dup_spans",
+    "span_rewrite", "ngram_novelty", "corpus_yield", "token_pmi",
+    "snm_candidates", "jaccard_prefix_capped", "containment_pairs",
+    "boilerplate_share", "dedup_components", "dedup_cc_only",
+    "dedup_canonical_keep", "source_dedup_crossrate", "hll_registers",
+    "cms_sketch", "asof_carry", "nearest_bidir", "copurchase_pairs",
+    "lpa_modularity", "weighted_median", "ivf_kmeans_refine",
+    "kmeans_init", "semantic_dedup", "ivfpq_codes", "knn_inc_recall",
+    "ivf_delta_assign", "pca_moment_build", "media_sha_dedup",
+    "decode_fanout", "caption_pairs", "cem_att", "kmv_distinct",
+    "kmv_overlap", "hist_quantiles", "mann_kendall", "permutation_test")
 
   /** The K×-replica corpus every scale cell measures (the r14
     * containment stage table in BASELINE.md was profiled on this same
@@ -32,6 +56,7 @@ object ScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(10)
+    val selected = Recorder.select(args.lift(1), Probes)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(32)
     import spark.implicits._
@@ -42,61 +67,23 @@ object ScaleSmoke {
     val n = scaled.count()
     println(s"[scale] corpus ${n0} -> $n docs (${k}x)")
 
-    // optional 2nd arg: comma-separated probe-name subset, so a single
-    // new probe can be sized at several K without re-running the sweep
-    val only: Option[Set[String]] = args.lift(1).map(_.split(",").toSet)
-    // every datapoint also lands as one JSON line in the scale artifact
-    // (probe, k, wall, rows, sf) so the ~linear claims are machine-
-    // checkable the way CORRECTNESS/BENCH are — appended per probe so a
-    // crashed sweep still keeps its finished rows. Repeated or partial
-    // sweeps therefore ACCUMULATE lines: consumers must treat the NEWEST
-    // line per (probe, k, sf) as authoritative (last-write-wins), or set
-    // SPARK_GRAFT_SCALE_TRUNCATE=1 to start a fresh full sweep
-    val scaleOut = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_r15.json")
-    if (sys.env.get("SPARK_GRAFT_SCALE_TRUNCATE").contains("1"))
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(scaleOut))
-    // extra: additional JSON fields (e.g. `"passes":3`), evaluated AFTER
-    // the probe body so the body can surface run observables through a var.
-    // Every row is CONTENTION-GATED (r12, extending the r11 Bench gate):
-    // the probe waits out co-located steal waves before the timed body
-    // and its reading is stamped into the row, so a contaminated
-    // datapoint (the r11 knn_inc_recall drift) is self-identifying and
-    // normalizable as wall × (idle_ref / probe_sec). Since r13 the row
-    // ALSO carries an END-of-body probe (`probe_sec_end`, mirroring
-    // Bench): the start gate cannot see a steal wave that begins
-    // mid-body, and the one unexplained r12 drift (dedup_components
-    // K=50, 55.3 s vs 47.6 with identical code, plans and passes) sat
-    // exactly in that blind spot — a row whose end probe is hot is
-    // contaminated even when it started calm. Since r14 every row ALSO
-    // carries the body-wide StealMonitor integral (VERDICT #3): the
-    // endpoint probes are instants, and the multi-minute cells straddle
-    // steal waves neither endpoint sees — `steal_integral`/`steal_peak`
-    // make mid-body contention a stamped number, so a cross-round drift
-    // adjudication reads one field instead of re-running the cell in a
-    // hunted-for calm window.
-    def time(name: String, extra: => String = "")(f: => Long): Unit =
-      if (only.forall(_.contains(name))) {
-      val gate = graft.ContentionGate.awaitCalm(spark, 32, label = name)
-      val sm = StealMonitor.start()
-      val t0 = System.nanoTime()
-      val rows = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      val smr = sm.stop()
-      val probeEnd = graft.ContentionGate.probe(spark, 32)
-      val ex = { val e = extra; if (e.isEmpty) "" else "," + e }
-      println(f"[scale] $name%-22s $wall%8.2f s  ($rows rows)")
-      val line = f"""{"probe":"$name","k":$k,"wall_sec":$wall%.3f,"rows":$rows$ex,${gate.jsonFields},"probe_sec_end":$probeEnd,${smr.jsonFields},"sf":"$sfDir"}%n"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(scaleOut),
-        line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+    // one row per probe: (probe, k, wall, rows, extra, contention stamp,
+    // sf), so the ~linear claims are machine-checkable the way
+    // CORRECTNESS/BENCH are. `extra` (e.g. `"passes":3`) is evaluated
+    // AFTER the body so the body can surface run observables through a var
+    def time(name: String, extra: => String = "")(f: => Long): Unit = {
+      if (selected(name)) {
+        val (rows, wall, stamp) = Recorder.record(spark, name)(f)
+        val ex = { val e = extra; if (e.isEmpty) "" else "," + e }
+        println(f"[scale] $name%-22s $wall%8.2f s  ($rows rows)")
+        Recorder.appendRow(f"""{"probe":"$name","k":$k,"wall_sec":$wall%.3f,"rows":$rows$ex,${stamp.jsonFields},"sf":"$sfDir"}""")
+      }
     }
     // section guard: skip a block's (untimed) scaffolding — corpus
     // replication, index training, feed synthesis — when none of its
-    // probes are in the subset, so a targeted multi-K sweep doesn't pay
-    // for tiers it never times
-    def needed(names: String*): Boolean =
-      only.forall(ns => names.exists(ns.contains))
+    // probes are selected, so a targeted multi-K sweep doesn't pay for
+    // tiers it never times
+    def needed(names: String*): Boolean = names.exists(selected)
     val sh = DedupOps.docShingles(scaled).cache()
     time("shingles")(sh.count())
     time("minhash_wide")(DedupOps.minhashWide(spark, sh).count())
@@ -136,17 +123,11 @@ object ScaleSmoke {
     // should track dup_spans within a small constant factor
     time("span_rewrite")(
       graft.queries.DedupQueries.dedupSpanRewriteFrom(spark, scaled).count())
-    // ingestion-order novelty, aggregate-only shape (mirrors the registered
-    // query): per-doc denominators + first-occurrence counts, joined as two
-    // doc-sized frames — the only shingle-sized shuffle is groupBy(shingle)
-    time("ngram_novelty") {
-      val ex = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
-      val perDoc = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-      val novel = ex.groupBy(col("s")).agg(min(col("doc_id")).as("first_doc"))
-        .groupBy(col("first_doc")).agg(count(lit(1)).as("n_novel"))
-        .select(col("first_doc").as("doc_id"), col("n_novel"))
-      perDoc.join(novel, Seq("doc_id"), "left").count()
-    }
+    // ingestion-order novelty, aggregate-only shape: per-doc denominators
+    // + first-occurrence counts, joined as two doc-sized frames — the only
+    // shingle-sized shuffle is the per-shingle min
+    time("ngram_novelty")(
+      graft.queries.DedupQueries.docNgramNoveltyFrom(scaled).count())
 
     // corpus-curation capstone funnel (mirrors corpus_yield_report): the
     // r9 fence for the eager-checkpoint adjudication — ONE per-doc
@@ -158,30 +139,12 @@ object ScaleSmoke {
     time("corpus_yield")(
       graft.queries.PipelineQueries.corpusYieldReportFrom(spark, scaled).count())
 
-    // PMI collocation mining (mirrors token_pmi_top minus the fixed top-20
-    // tail): unigram + shifted-slice pair counts are ∝ tokens (map-side
-    // explodes, one groupBy each); the scored join is on the pair-vocab
-    // frame, which saturates at vocab² regardless of corpus size — wall
-    // should track K, not K²
-    time("token_pmi") {
-      val docs = scaled
-        .select(graft.functions.TextFunctions.tokens(col("text")).as("toks")).cache()
-      val uni = docs.select(explode(col("toks")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c")).cache()
-      def sp(d: Int) = docs.select(explode(zip_with(
-        slice(col("toks"), lit(1), greatest(size(col("toks")) - d, lit(0))),
-        slice(col("toks"), lit(1 + d), greatest(size(col("toks")) - d, lit(0))),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("pr"))
-        .select(col("pr.w1").as("w1"), col("pr.w2").as("w2"))
-      val pairs = sp(1).unionAll(sp(2))
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_xy"))
-      val n = pairs
-        .join(uni.select(col("w").as("w1"), col("c").as("c_x")), Seq("w1"))
-        .join(uni.select(col("w").as("w2"), col("c").as("c_y")), Seq("w2"))
-        .filter(col("c_xy") >= 5 && col("c_x") >= 10 && col("c_y") >= 10)
-        .count()
-      docs.unpersist(); uni.unpersist(); n
-    }
+    // PMI collocation mining: unigram + shifted-slice pair counts are ∝
+    // tokens (map-side explodes, one aggregate each); the scored join is on
+    // the pair-vocab frame, which saturates at vocab² regardless of corpus
+    // size — wall should track K, not K². rows = the top 20
+    time("token_pmi")(
+      graft.queries.TextQueries.tokenPmiTopFrom(scaled).count())
 
     // sorted-neighborhood candidate generation (mirrors sorted_neighbor_dups
     // pre-verify, PRODUCTION numbering): candidates are exactly N·(w−1) by
@@ -259,38 +222,26 @@ object ScaleSmoke {
       }
     }
 
+    // document metadata the keeper and attribution queries read: n_chars
+    // from the replica text, and 20 hash-assigned sources
+    val scaledMeta = scaled.select(col("doc_id"),
+      length(col("text")).cast("long").as("n_chars"),
+      concat(lit("src"), pmod(hash(col("doc_id")), lit(20)).cast("string"))
+        .as("source"))
+
     // canonical-keeper selection END-TO-END (pairs → components → keeper
     // window): everything after pair generation is ∝ the dup subset, so
     // the wall should track dedup_components + a dup-sized window
-    time("dedup_canonical_keep") {
-      val pairs = graft.queries.DedupQueries.minhashLshDupsFrom(spark, scaled)
-        .select(col("a_id"), col("b_id"))
-      val comps = DedupOps.connectedComponents(spark, pairs)
-      val meta = scaled.select(col("doc_id"), length(col("text")).as("n_chars"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("component_id"))
-        .orderBy(col("n_chars").desc, col("doc_id"))
-      comps.join(meta, Seq("doc_id"))
-        .withColumn("keeper_id", first(col("doc_id")).over(w))
-        .count()
-    }
+    time("dedup_canonical_keep")(
+      graft.queries.DedupQueries.dedupCanonicalKeepFrom(spark, scaled, scaledMeta)
+        .count())
 
-    // cross-source dup attribution END-TO-END (pairs → 2 broadcast dim
-    // joins → enum-keyed aggregate): cost is the LSH pipeline; the
-    // attribution adds two dup-sized hash joins + a 20²-group aggregate
-    time("source_dedup_crossrate") {
-      val pairs = graft.queries.DedupQueries.minhashLshDupsFrom(spark, scaled)
-      val src = scaled.select(col("doc_id"),
-        pmod(hash(col("doc_id")), lit(20)).as("source"))
-      pairs
-        .join(src.select(col("doc_id").as("a_id"), col("source").as("src_a")), "a_id")
-        .join(src.select(col("doc_id").as("b_id"), col("source").as("src_b")), "b_id")
-        .groupBy(least(col("src_a"), col("src_b")).as("s1"),
-          greatest(col("src_a"), col("src_b")).as("s2"))
-        .agg(count(lit(1)).as("n"),
-          (floor(sum(col("jaccard") * 1e6) / count(lit(1))) / 1e6).as("mj"))
-        .count()
-    }
+    // cross-source dup attribution END-TO-END (pairs → 2 dim joins →
+    // enum-keyed aggregate): cost is the LSH pipeline; the attribution
+    // adds two dup-sized hash joins + a 20²-group aggregate
+    time("source_dedup_crossrate")(
+      graft.queries.DedupQueries.sourceDedupCrossrateFrom(spark, scaled, scaledMeta)
+        .count())
 
     // deterministic-sketch tier: both are one-scan aggregates whose
     // shuffle is BOUNDED regardless of corpus size (256 HLL registers /
@@ -329,14 +280,14 @@ object ScaleSmoke {
     evScaled.unpersist()
     }
 
-    // relational tier: K× the order baskets through the co-purchase pair
-    // generation (the dominant stage of part_pair_lift/part_triangles).
-    // Replicated orders multiply each pair's support by K (so the
-    // support>=2 edge SET saturates — the claim under test is the pair
-    // JOIN's ~linear time in Σ basket², not the edge count)
+    // relational tier: K× the order baskets through the co-purchase edge
+    // build shared by the graph-census queries. Replicated orders multiply
+    // each pair's support by K (so the support>=2 edge SET saturates — the
+    // claim under test is the pair pass's ~linear time in Σ basket², not
+    // the edge count)
     if (needed("copurchase_pairs", "lpa_modularity")) {
     val li0 = graft.sources.Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
+      .select(col("l_orderkey"), col("l_partkey"))
     val okOff = Option(li0.agg(max(col("l_orderkey"))).head().get(0))
       .fold(sys.error(s"empty lineitem table in $sfDir"))(_.asInstanceOf[Number].longValue) + 1
     val liScaled = (0 until k).map { i =>
@@ -344,13 +295,8 @@ object ScaleSmoke {
         col("l_partkey").as("pk"))
     }.reduce(_ unionAll _).repartition(32).cache()
     println(s"[scale] baskets ${li0.count()} -> ${liScaled.count()} rows (${k}x)")
-    time("copurchase_pairs") {
-      val a = liScaled.select(col("ok"), col("pk").as("src"))
-      val b = liScaled.select(col("ok"), col("pk").as("dst"))
-      a.join(b, "ok").filter(col("src") < col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2).count()
-    }
+    time("copurchase_pairs")(
+      graft.queries.AnalyticsQueries.coPurchaseEdgesFrom(spark, liScaled).count())
 
     // graph tier end-to-end (mirrors part_community_modularity): K×
     // replicated baskets on the FIXED 200-part catalog densify the
@@ -367,40 +313,27 @@ object ScaleSmoke {
 
     }
 
-    // exact weighted median (mirrors returnflag_weighted_median): the
-    // fact collapses to (group, price) DECIMAL weight sums FIRST — one
-    // shuffle, the only data-sized stage; prices are perturbed per
-    // replica so the collapsed frame grows with K too (the worst case
-    // for the windowed half-mass pass)
-    time("weighted_median") {
-      val li = graft.sources.Tables.lineitem(spark, sfDir)
-        .select(col("l_returnflag"), col("l_extendedprice"), col("l_quantity"))
-      val liK = (0 until k).map { i =>
-        li.select(col("l_returnflag"),
-          (col("l_extendedprice") + lit(i * 0.01)).as("l_extendedprice"),
-          col("l_quantity"))
-      }.reduce(_ unionAll _)
-      val byPrice = liK.groupBy(col("l_returnflag"), col("l_extendedprice"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("w"))
-      val ord = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("l_returnflag")).orderBy(col("l_extendedprice"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val all = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("l_returnflag"))
-      byPrice
-        .withColumn("cumw", sum(col("w")).over(ord))
-        .withColumn("totw", sum(col("w")).over(all))
-        .filter(col("cumw") * 2 >= col("totw"))
-        .groupBy(col("l_returnflag"))
-        .agg(min(col("l_extendedprice")), max(col("totw")))
-        .count()
+    // exact weighted median: the fact collapses to (group, price) DECIMAL
+    // weight sums FIRST — one shuffle, the only data-sized stage; prices
+    // are perturbed per replica so the collapsed frame grows with K too
+    // (the worst case for the windowed half-mass pass)
+    if (needed("weighted_median")) {
+    val li = graft.sources.Tables.lineitem(spark, sfDir)
+      .select(col("l_returnflag"), col("l_extendedprice"), col("l_quantity"))
+    val liK = (0 until k).map { i =>
+      li.select(col("l_returnflag"),
+        (col("l_extendedprice") + lit(i * 0.01)).as("l_extendedprice"),
+        col("l_quantity"))
+    }.reduce(_ unionAll _)
+    time("weighted_median")(
+      graft.queries.AnalyticsQueries.returnflagWeightedMedianFrom(liK).count())
     }
 
     // vector tier: K× the embeddings corpus through the IVF refine step
     // (broadcast-centroid assignment is map-side — should scale ~linearly)
     if (needed("ivf_kmeans_refine", "kmeans_init", "semantic_dedup",
         "ivfpq_codes", "ivf_delta_assign", "pca_moment_build",
-        "pca_moment_op", "media_sha_dedup", "decode_fanout",
+        "media_sha_dedup", "decode_fanout",
         "caption_pairs", "knn_inc_recall")) {
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val vecOff = Option(emb.agg(max(col("vec_id"))).head().get(0))
@@ -434,15 +367,6 @@ object ScaleSmoke {
     time("ivfpq_codes")(
       graft.queries.SimilarityQueries.ivfPqParts(spark, scaledEmb)._3
         .agg(sum(size(col("codes")))).head().getLong(0))
-    // incremental IVF maintenance: centroids trained on the K×-scaled
-    // base OUTSIDE the timed stage (build ∝ corpus, paid once); the
-    // timed stage is the maintenance op itself — broadcast-assign a
-    // FIXED-size delta (the unscaled embeddings table) to the existing
-    // centroids. Wall must track |delta|, i.e. stay ~flat as K grows —
-    // the number that justifies calling the index incremental
-    val centInc = graft.queries.SimilarityQueries
-      .refinedCentroidsFrom(spark, scaledEmb).cache()
-    println(s"[scale] ivf centroids trained on ${k}x base (${centInc.count()} cells, untimed)")
     // maintenance-recall report end-to-end (mirrors
     // knn_incremental_recall): all four index variants train in ONE
     // variant-keyed Lloyd chain over the K×-scaled corpus — every stage
@@ -452,30 +376,32 @@ object ScaleSmoke {
     time("knn_inc_recall")(
       graft.queries.SimilarityQueries.knnIncrementalRecallFrom(
         spark, scaledEmb).count())
+    // incremental IVF maintenance: centroids trained on the K×-scaled
+    // base OUTSIDE the timed stage (build ∝ corpus, paid once); the
+    // timed stage is the maintenance op itself — broadcast-assign a
+    // FIXED-size delta (the unscaled embeddings table) to the existing
+    // centroids. Wall must track |delta|, i.e. stay ~flat as K grows —
+    // the number that justifies calling the index incremental
+    if (needed("ivf_delta_assign")) {
+    val centInc = graft.queries.SimilarityQueries
+      .refinedCentroidsFrom(spark, scaledEmb).cache()
+    println(s"[scale] ivf centroids trained on ${k}x base (${centInc.count()} cells, untimed)")
     time("ivf_delta_assign")(
       graft.queries.SimilarityQueries.assignToCentroids(spark, emb, centInc).count())
     centInc.unpersist()
-    // PCA moment matrix: the full build (checkpoint + d²-key aggregate +
-    // broadcast joins) and the bare aggregate — both must stay ~flat as
-    // K grows because the shuffle is bounded at d² keys (the r6
-    // gram-fold-vs-posexplode adjudication is in BASELINE.md; posexplode
-    // won end-to-end on codegen size)
+    }
+    // PCA moment matrix, the full build (checkpoint + upper-triangle
+    // d²-key aggregate + broadcast joins): must stay ~flat as K grows
+    // because the shuffle is bounded at d² keys (the r6 bare-aggregate
+    // figures are in BASELINE.md)
     time("pca_moment_build")(
       graft.queries.SimilarityQueries.pcaMomentFrom(spark, scaledEmb).count())
-    time("pca_moment_op") {
-      val mv = scaledEmb.select(
-        transform(col("embedding"), x => round(x * 1e6).cast("long")).as("m"))
-      mv.select(col("m"), posexplode(col("m")).as(Seq("i", "xi")))
-        .select(col("i"), col("xi"), posexplode(col("m")).as(Seq("j", "xj")))
-        .groupBy(col("i"), col("j"))
-        .agg(sum((col("xi") * col("xj")).cast("decimal(38,0)")).as("sxx"))
-        .count()
-    }
 
     // multimodal tier: real binary blobs (non-UTF-8, varied lengths) at
-    // K× the base media count. decode_fanout is the mapPartitions frame
-    // sampler — row fan-out ∝ total bytes, no shuffle; caption_pairs is
-    // the media⋈embeddings id equi-join — one shuffle each side, ~linear
+    // K× the base media count. media_sha_dedup is one digest-keyed
+    // shuffle; decode_fanout is the mapPartitions frame sampler — row
+    // fan-out ∝ total bytes, no shuffle; caption_pairs is the
+    // media⋈embeddings id equi-join — one shuffle each side, ~linear
     val nMedia = n0 * k
     val media = graft.operators.Multimodal.syntheticMedia(spark, nMedia)
       .select(col("media_id"), col("kind"), col("content"),
@@ -487,16 +413,12 @@ object ScaleSmoke {
       .repartition(32).cache()
     println(s"[scale] media $nMedia blobs (${k}x base corpus count)")
     time("media_sha_dedup")(
-      media.groupBy(sha2(col("content"), 256)).agg(count(lit(1))).count())
+      graft.queries.MultimodalQueries.mediaDedupFrom(media).count())
     time("decode_fanout")(
       graft.operators.Multimodal.sampleFrames(
         spark, media.as[graft.operators.Multimodal.MediaRow], everyN = 4).count())
     time("caption_pairs")(
-      media.join(scaledEmb, media("media_id") === scaledEmb("vec_id"))
-        .select(col("media_id"), octet_length(col("content")),
-          expr("aggregate(embedding, 0L, (acc, x) -> " +
-            "acc + cast(round(cast(x as double) * 1000000) as bigint))"))
-        .count())
+      graft.queries.MultimodalQueries.mediaCaptionPairsFrom(media, scaledEmb).count())
 
     }
 

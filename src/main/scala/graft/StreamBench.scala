@@ -12,100 +12,101 @@ import org.apache.spark.sql.functions._
   * which records state size against retention horizon. The sensor
   * pipeline itself (parse → try-cast → watermarked window) is timed by
   * `perfbench` (`sensor_replay`, `sensor_live`). Input synthesis happens
-  * OFF the clock.
+  * OFF the clock, and every timed body goes through [[Recorder]].
   *
-  * Usage: `runMain graft.StreamBench [nFile [nFed]]` (file-source legs'
-  * and MemoryStream legs' row counts), or `runMain graft.StreamBench
-  * state-curves`.
+  * Usage: `runMain graft.StreamBench [nFile [nFed [legs]]]` (file-source
+  * legs' and MemoryStream legs' row counts; `legs` a comma-separated
+  * subset of [[Legs]]), or `runMain graft.StreamBench state-curves
+  * [probes]` (a subset of [[StateProbes]]; `state_changelog_debt` runs
+  * only when it is the one probe named). An unknown name fails. Feeds
+  * are synthesized only for selected legs and probes.
+  * `SPARK_GRAFT_ROCKSDB_CHANGELOG` (1/0) forces RocksDB changelog
+  * checkpointing on or off for every leg; unset leaves the provider's
+  * snapshot default, and each line stamps the effective value.
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1) is the corpus the LSH and
+  * semantic legs replicate.
   */
 object StreamBench {
+
+  val Legs: Seq[String] = Seq("streaming_asof", "streaming_topk",
+    "streaming_topk_filesource", "streaming_dedup_gate",
+    "streaming_dedup_gate_filesource", "streaming_lsh_neardup_filesource",
+    "streaming_semantic_neardup_filesource")
+
+  val StateProbes: Seq[String] = Seq("state_dedup_gate", "state_lsh_neardup",
+    "state_semantic_neardup", "state_lsh_capped_bucket",
+    "state_semantic_capped_bucket", "state_changelog_debt")
+
+  /** State probes that need a JVM of their own: the debt probe sets the
+    * state-store maintenance cadence, which is fixed JVM-wide at the
+    * first state-store load, so in a shared sweep its setting would be
+    * silently ignored and the row would stamp an interval never used. */
+  val RunsAlone: Set[String] = Set("state_changelog_debt")
+
+  /** The state probes a `state-curves` run selects ([[Recorder.select]]),
+    * keeping [[RunsAlone]] in processes of their own: a full sweep (absent
+    * or blank `spec`) leaves them out, and one runs only as the one probe
+    * named. */
+  def selectStateProbes(spec: Option[String]): Set[String] = {
+    val names = Recorder.select(spec, StateProbes)
+    if (spec.forall(_.replace(",", "").trim.isEmpty)) names -- RunsAlone
+    else {
+      val lone = names & RunsAlone
+      require(lone.isEmpty || names.size == 1,
+        s"${lone.toSeq.sorted.mkString(",")} must be the only probe named: " +
+          "it runs in a process of its own")
+      names
+    }
+  }
+
+  /** Samples per leg (min-of-N, as Bench's per-query timings): a trend in
+    * a single-shot rate is unfalsifiable (the dedup-gate file leg slid
+    * 279k -> 247k -> 157k ev/s across single-shot rounds). */
+  private val Samples = 3
+
+  private val ChangelogConf =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
   def main(args: Array[String]): Unit = {
-    val nFile = args.headOption.filterNot(_ == "state-curves")
+    val curves = args.headOption.contains("state-curves")
+    val selected =
+      if (curves) selectStateProbes(args.lift(1))
+      else Recorder.select(args.lift(2), Legs)
+    val nFile = args.headOption.filterNot(_ => curves)
       .map(_.toLong).getOrElse(2000000L)
-    val nFed = args.drop(1).headOption.map(_.toLong).getOrElse(500000L)
+    val nFed = args.lift(1).filterNot(_ => curves).map(_.toLong).getOrElse(500000L)
     // state-size curves sample per-trigger progress; keep enough of them
     val spark = Sessions.local(32,
       Map("spark.sql.streaming.numRecentProgressUpdates" -> "256"))
     import spark.implicits._
+    sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG")
+      .foreach(v => spark.conf.set(ChangelogConf, (v == "1").toString))
 
-    if (args.headOption.contains("state-curves")) {
-      stateCurves(spark)
+    if (curves) {
+      stateCurves(spark, selected)
       spark.stop()
       return
     }
 
-    // SPARK_GRAFT_ROCKSDB_CHANGELOG (1/0) applies to every leg: unset
-    // leaves the provider's snapshot default, and each leg's line stamps
-    // the effective value so a cross-round reader never guesses the mode.
-    val changelogConfMain =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG")
-      .foreach(v => spark.conf.set(changelogConfMain, (v == "1").toString))
-    val changelogMain = spark.conf.get(changelogConfMain, "false")
-
-    // every leg's timed section is contention-gated (r12, extending the
-    // r11 Bench gate): the probe waits out steal waves and its reading
-    // is appended to the leg's printed line, so a contaminated rate is
-    // self-identifying. r13 added an END-of-body probe; r14 adds the
-    // min-of-N protocol Bench's per-query timings always had (VERDICT
-    // #1: the dedup-gate file leg slid 279k -> 247k -> 157k ev/s across
-    // rounds in SINGLE-shot recordings — the same integral-vs-instant
-    // gap the LSH state-curve walls carry at ±35% between gated
-    // samples; a trend in a single-shot metric is unfalsifiable either
-    // way) plus a body-wide [[StealMonitor]] integral, so a mid-leg
-    // steal wave is a stamped number instead of a blind spot. Every
-    // sample prints its own fully-stamped line (all samples are kept);
-    // the MIN line is the figure of record under additive noise.
-    val nSamples = sys.env.get("SPARK_GRAFT_STREAM_SAMPLES")
-      .map(_.toInt).getOrElse(3)
-    // SPARK_GRAFT_STREAM_ONLY (comma-separated leg labels): re-record a
-    // subset of legs without paying the full pass — the main-leg analog
-    // of SPARK_GRAFT_STATE_ONLY; feeds are synthesized only for legs
-    // actually selected. Tokens are trimmed and validated against the
-    // known labels (r14 review fix: a stray space or typo used to
-    // silently select nothing and exit 0 — an empty re-record pass that
-    // LOOKED like a run)
-    val knownLegs = Set("streaming_asof", "streaming_topk",
-      "streaming_topk_filesource", "streaming_dedup_gate",
-      "streaming_dedup_gate_filesource", "streaming_lsh_neardup_filesource",
-      "streaming_semantic_neardup_filesource")
-    val legOnly: String => Boolean =
-      sys.env.get("SPARK_GRAFT_STREAM_ONLY") match {
-        case Some(v) if v.trim.nonEmpty =>
-          val sel = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          val unknown = sel -- knownLegs
-          require(unknown.isEmpty,
-            s"unknown SPARK_GRAFT_STREAM_ONLY legs: ${unknown.mkString(",")} " +
-              s"(known: ${knownLegs.toSeq.sorted.mkString(",")})")
-          sel
-        case _ => _ => true
-      }
-    /** Runs `body` [[nSamples]] times, each sample gated, end-probed and
-      * steal-integrated. `body` times its OWN measured section (so query
-      * startup/teardown stays off the clock exactly as in prior rounds'
-      * single-shot lines) and returns (units processed, measured wall,
-      * detail tail); the summary MIN line re-derives the rate from the
-      * fastest sample. The steal integral wraps the whole body — a
+    /** Runs `body` [[Samples]] times, each sample recorded. `body` times
+      * its OWN measured section (so query startup/teardown stays off the
+      * clock) and returns (units processed, measured wall, detail tail);
+      * every sample prints its own stamped line, and the MIN line (the
+      * figure of record under additive noise) re-derives the rate from
+      * the fastest sample. The steal integral wraps the whole body — a
       * fraction, so the slightly wider window only makes it more
       * conservative. */
     def sampled(label: String, unit: String)
-        (body: () => (Long, Double, String)): Unit =
-      if (legOnly(label)) {
-        val runs = (1 to nSamples).map { i =>
-          val gate = graft.ContentionGate.awaitCalm(spark, 32, label = label)
-          val sm = StealMonitor.start()
-          val (n, wall, detail) = body()
-          val smr = sm.stop()
-          val probeEnd = graft.ContentionGate.probe(spark, 32)
-          println(f"[streambench] $label sample=$i/$nSamples n=$n t=$wall%.2f s " +
-            f"rate=${n / wall}%.0f $unit$detail" +
-            f" probe=${gate.probeSec}%.3f contended=${gate.contended} probe_end=$probeEnd%.3f" +
-            f" steal_integral=${smr.stealIntegral}%.4f steal_peak=${smr.stealPeak}%.4f steal_samples=${smr.samples}")
-          (wall, n)
-        }
-        val (minW, minN) = runs.minBy(_._1)
-        println(f"[streambench] $label MIN t=$minW%.2f s rate=${minN / minW}%.0f $unit samples=$nSamples")
+        (body: () => (Long, Double, String)): Unit = {
+      val runs = (1 to Samples).map { i =>
+        val ((n, wall, detail), _, stamp) = Recorder.record(spark, label)(body())
+        println(f"[streambench] $label sample=$i/$Samples n=$n t=$wall%.2f s " +
+          f"rate=${n / wall}%.0f $unit$detail ${stamp.textFields}")
+        (wall, n)
       }
+      val (minW, minN) = runs.minBy(_._1)
+      println(f"[streambench] $label MIN t=$minW%.2f s rate=${minN / minW}%.0f $unit samples=$Samples")
+    }
     /** Times f, returning (its result, wall seconds). */
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -125,8 +126,8 @@ object StreamBench {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // every leg runs on RocksDB state — stamp the effective
     // checkpoint-maintenance mode into each line
-    val clogStamp = s" changelog=$changelogMain"
-    if (legOnly("streaming_asof")) {
+    val clogStamp = s" changelog=${spark.conf.get(ChangelogConf, "false")}"
+    if (selected("streaming_asof")) {
       val asofRows = spark.range(nFed).select(
           concat(lit("u"), pmod(col("id"), lit(5000L))).as("userId"),
           (lit(1700000000000000L) + col("id") * 1000L).as("tsUs"),
@@ -158,7 +159,7 @@ object StreamBench {
     // every window but the last closes mid-run — the measured rate includes
     // timer-driven emission, not just state folds.
     val winMs = 60L * 1000
-    if (legOnly("streaming_topk")) {
+    if (selected("streaming_topk")) {
       val topkRows = spark.range(nFed).select(
           (lit(1700000000000L) + col("id") * 10L).as("tsMs"),
           concat(lit("st"), pmod(col("id"), lit(33L))).as("stationId"),
@@ -195,7 +196,7 @@ object StreamBench {
     // so the measured rate bounds the STATE STORE path, not MemoryStream.
     // Uses the larger file-leg row count (nFile): the MemoryStream feed
     // is no longer the limiting factor.
-    if (legOnly("streaming_topk_filesource")) {
+    if (selected("streaming_topk_filesource")) {
       val topkFsRows = spark.range(nFile).select(
           (lit(1700000000000L) + col("id") * 10L).as("tsMs"),
           concat(lit("st"), pmod(col("id"), lit(33L))).as("stationId"),
@@ -245,7 +246,7 @@ object StreamBench {
     val dedupInit = spark.range(100000)
       .select(concat(lit("base"), col("id")).as("fp")).as[String]
       .groupByKey(identity).mapValues(_ => true)
-    if (legOnly("streaming_dedup_gate")) {
+    if (selected("streaming_dedup_gate")) {
       val dedupRows = spark.range(nFed).select(
           col("id").as("docId"),
           concat(lit("fp"), expr("id div 3")).as("fingerprint"),
@@ -274,7 +275,7 @@ object StreamBench {
     // rows pre-written as parquet off the clock, so the measured rate
     // bounds the keyed ValueState + eviction-timer path, not driver
     // feeding
-    if (legOnly("streaming_dedup_gate_filesource")) {
+    if (selected("streaming_dedup_gate_filesource")) {
       val dedupFsRows = spark.range(nFile).select(
           col("id").as("docId"),
           concat(lit("fp"), expr("id div 3")).as("fingerprint"),
@@ -317,7 +318,7 @@ object StreamBench {
     // with near-dup suffixes (each base doc becomes an 8-clique), rows
     // event-time-ordered like the other file legs.
     val lshSfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (legOnly("streaming_lsh_neardup_filesource")) {
+    if (selected("streaming_lsh_neardup_filesource")) {
       val docs0 = graft.sources.Tables.documents(spark, lshSfDir)
         .select(col("doc_id"), col("text"))
       val nBase = docs0.count()
@@ -369,7 +370,7 @@ object StreamBench {
     // duplicates — every replica pair scores cos = 1), so per-bucket
     // membership grows to ~corpus/64 x 8 and the quadratic-in-bucket
     // emission is exercised, not dodged.
-    if (legOnly("streaming_semantic_neardup_filesource")) {
+    if (selected("streaming_semantic_neardup_filesource")) {
       val emb0 = graft.sources.Tables.embeddings(spark, lshSfDir)
         .select(col("vec_id"), col("embedding"))
       val nEmbBase = emb0.count()
@@ -514,7 +515,7 @@ object StreamBench {
     * through a listener, and appends one JSON line per (tracker, horizon)
     * to the SCALE artifact. The claim holds iff state_rows_max tracks
     * horizon × key-rate (plus the fixed base index for the fingerprint
-    * gate), not feed size. Every leg is contention-gated and stamped
+    * gate), not feed size. Every leg is recorded through [[Recorder]]
     * (r12 — the r11 `state_lsh_neardup` 2400 s-horizon wall was recorded
     * inside a steal wave with no gate).
     *
@@ -522,51 +523,36 @@ object StreamBench {
     * evictions, so each micro-batch must cover event time ≪ horizon —
     * 128 single-file triggers over the span keep the trigger quantum at
     * ~2-4% of the smallest horizon. */
-  private def stateCurves(spark: SparkSession): Unit = {
+  private def stateCurves(spark: SparkSession, selected: Set[String]): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // SPARK_GRAFT_ROCKSDB_CHANGELOG (1/0): force per-commit CHANGELOG
-    // uploads on or off — full RocksDB snapshot zips per commit (the
-    // provider default on this build is false = snapshot mode,
-    // bytecode-verified) carry a maintenance cost ∝ retained keys,
-    // which changelog mode removes (A/B on the 2400 s-horizon LSH leg:
-    // 217.6 s snapshot vs 135.1 s changelog, wall flat across horizons).
-    // UNSET leaves the provider default; the row stamps the EFFECTIVE
-    // value as "changelog" so A/B lines are distinguishable.
-    val changelogConf =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG")
-      .foreach(v => spark.conf.set(changelogConf, (v == "1").toString))
-    val changelog = spark.conf.get(changelogConf, "false")
-    val scaleOut = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_r15.json")
-    def emit(line0: String, clog: String = changelog): Unit = {
-      // splice the changelog stamp in before the closing brace
-      val line = line0.stripSuffix("}") + s""","changelog":$clog}"""
-      println(s"[scale] $line")
-      java.nio.file.Files.write(java.nio.file.Paths.get(scaleOut),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-    /** One completed state-curve leg. `probeEnd` is the END-of-body
-      * contention probe (r13, mirroring Bench's probe_sec_end — the
-      * start gate cannot see a steal wave that begins mid-leg, and
-      * these are the repo's longest single recordings); `steal` is the
-      * body-wide [[StealMonitor]] integral (r14, VERDICT #3 — the
-      * endpoint probes provably miss mid-body waves on these
-      * multi-minute legs, so every row now carries the integrated
-      * figure); `runId` keys this run's
-      * [[graft.streaming.AdmissionDrops]] counters;
-      * `observedDrops` is the refusal total read back from
+    // per-commit CHANGELOG uploads vs full RocksDB snapshot zips per
+    // commit (the provider default on this build is false = snapshot
+    // mode, bytecode-verified), which carry a maintenance cost ∝
+    // retained keys (A/B on the 2400 s-horizon LSH leg: 217.6 s snapshot
+    // vs 135.1 s changelog, wall flat across horizons). The row stamps
+    // the EFFECTIVE value as "changelog" so A/B lines are distinguishable.
+    val changelog = spark.conf.get(ChangelogConf, "false")
+    /** One completed state-curve leg. `stamp` is its [[Recorder]]
+      * contention stamp; `runId` keys this run's
+      * [[graft.streaming.AdmissionDrops]] counters; `observedDrops` is
+      * the refusal total read back from
       * `StreamingQueryProgress.observedMetrics` when the leg's build
       * wrapped the tracker in `observeDrops`. */
     case class LegResult(wall: Double, outRows: Long, stateRowsMax: Long,
-        sstMax: Long, lastBatch: Long, probeEnd: Double,
-        steal: StealMonitor.Result, runId: java.util.UUID,
-        observedDrops: Option[Long], sstSeries: Seq[(Long, Long)])
-    /** Runs `build(queryName)` to completion. */
+        sstMax: Long, lastBatch: Long, stamp: Recorder.Stamp,
+        runId: java.util.UUID, observedDrops: Option[Long],
+        sstSeries: Seq[(Long, Long)])
+    /** Prints and appends one state-curve row. */
+    def emit(probe: String, horizonMs: Long, r: LegResult, fields: String,
+        sf: String, clog: String = changelog): Unit = {
+      val line = f"""{"probe":"$probe","horizon_ms":$horizonMs,"wall_sec":${r.wall}%.3f,"rows":${r.outRows},$fields,${r.stamp.jsonFields},"sf":"$sf","changelog":$clog}"""
+      println(s"[scale] $line")
+      Recorder.appendRow(line)
+    }
+    /** Runs `build(queryName)` to completion, recorded. */
     def run(queryName: String,
         build: String => org.apache.spark.sql.streaming.DataStreamWriter[_],
         dropsMetric: Option[String] = None)
@@ -574,13 +560,11 @@ object StreamBench {
       val listener = new StateMaxListener(queryName, dropsMetric)
       spark.streams.addListener(listener)
       try {
-        val sm = StealMonitor.start()
-        val t0 = System.nanoTime()
-        val q = build(queryName).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val steal = sm.stop()
-        val probeEnd = graft.ContentionGate.probe(spark, 32)
+        val (q, wall, stamp) = Recorder.record(spark, queryName) {
+          val q = build(queryName).trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          q
+        }
         // merge the synchronous buffer: complete for ≤256-trigger legs,
         // and a floor against listener events still in flight at stop.
         // Every per-batch figure (SST, drops) is batchId-keyed in the
@@ -595,7 +579,7 @@ object StreamBench {
         // free the memory sink's driver-side rows before the next horizon
         spark.catalog.dropTempView(queryName)
         LegResult(wall, outRows, listener.maxRows.get(), listener.maxSst.get(),
-          listener.lastBatch.get(), probeEnd, steal, q.runId, observedDrops,
+          listener.lastBatch.get(), stamp, q.runId, observedDrops,
           listener.sstSeries(16))
       } finally spark.streams.removeListener(listener)
     }
@@ -631,34 +615,11 @@ object StreamBench {
         s""""state_members_max_sampled":$peak,"members_sampled_batches":${m._2.mkString("[", ",", "]")}"""
       case None => s""""state_members_error":"no_readable_snapshot""""
     }
-    // SPARK_GRAFT_STATE_ONLY (comma-separated probe names): re-record a
-    // single contaminated leg in a calm window without paying the full
-    // multi-tracker sweep — the state-curve analog of
-    // SPARK_GRAFT_BENCH_ONLY. Feeds are only synthesized for probes
-    // actually selected. Tokens trimmed + validated like the main legs'
-    // SPARK_GRAFT_STREAM_ONLY (r14 review fix). The debt probe is NOT
-    // part of an unfiltered sweep: it requires its own process for the
-    // maintenance-cadence conf, enforced at its block.
-    val knownProbes = Set("state_dedup_gate", "state_lsh_neardup",
-      "state_semantic_neardup", "state_lsh_capped_bucket",
-      "state_semantic_capped_bucket", "state_changelog_debt")
-    val onlyProbe: String => Boolean =
-      sys.env.get("SPARK_GRAFT_STATE_ONLY") match {
-        case Some(v) if v.trim.nonEmpty =>
-          val sel = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          val unknown = sel -- knownProbes
-          require(unknown.isEmpty,
-            s"unknown SPARK_GRAFT_STATE_ONLY probes: ${unknown.mkString(",")} " +
-              s"(known: ${knownProbes.toSeq.sorted.mkString(",")})")
-          sel
-        case _ => p => p != "state_changelog_debt"
-      }
-
     // ---- fingerprint gate: ValueState + base index -----------------------
     // feed: 2M rows, 10 ms event-time spacing (span 20,000 s), a new
     // fingerprint every 3 rows (~33 fp/s) + a 100k-fp durable base index.
     // Expected state: ~100k + horizon_s × 33 — the slope is the claim.
-    if (onlyProbe("state_dedup_gate")) {
+    if (selected("state_dedup_gate")) {
     val nFeed = 2000000L
     val dedupRows = spark.range(nFeed).select(
         col("id").as("docId"),
@@ -676,14 +637,13 @@ object StreamBench {
         .option("maxFilesPerTrigger", "1").parquet(dedupDir)
         .as[graft.streaming.DedupIn]
       val name = s"fpcurve_$horizonMs"
-      val gate = graft.ContentionGate.awaitCalm(spark, 32, label = name)
       val r = run(name, n =>
         in.withWatermark("ts", "10 seconds")
           .groupByKey(_.fingerprint)
           .transformWithState(new graft.streaming.FingerprintDedupTracker(horizonMs),
             TimeMode.EventTime(), OutputMode.Append(), dedupInit)
           .writeStream.outputMode("append").format("memory").queryName(n))
-      emit(f"""{"probe":"state_dedup_gate","horizon_ms":$horizonMs,"wall_sec":${r.wall}%.3f,"rows":${r.outRows},"feed_rows":$nFeed,"base_index":100000,"state_rows_max":${r.stateRowsMax},"state_sst_bytes_max":${r.sstMax},${gate.jsonFields},"probe_sec_end":${r.probeEnd},${r.steal.jsonFields},"sf":"synthetic"}""")
+      emit("state_dedup_gate", horizonMs, r, s""""feed_rows":$nFeed,"base_index":100000,"state_rows_max":${r.stateRowsMax},"state_sst_bytes_max":${r.sstMax}""", "synthetic")
     }
     }
 
@@ -691,7 +651,7 @@ object StreamBench {
     // feed: sf0.1 documents ×8 near-dup replicas, 100 ms spacing (span
     // 4,000 s at 10 docs/s). State rows ≈ in-horizon docs × 4 bands.
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (onlyProbe("state_lsh_neardup")) {
+    if (selected("state_lsh_neardup")) {
     val docs0 = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     val lshDocs = (0 until 8).map { i =>
@@ -708,7 +668,6 @@ object StreamBench {
         .option("maxFilesPerTrigger", "1").parquet(lshDir)
       val name = s"lshcurve_$horizonMs"
       val ckpt = java.nio.file.Files.createTempDirectory(s"ckpt_$name").toString
-      val gate = graft.ContentionGate.awaitCalm(spark, 32, label = name)
       val r = run(name, n =>
         graft.streaming.LshDedupTracker.ingest(
           graft.streaming.LshDedupTracker.streamInput(in)
@@ -721,13 +680,13 @@ object StreamBench {
       graft.streaming.AdmissionDrops.clear(
         graft.streaming.LshDedupTracker.DropsTag, r.runId)
       val members = maxListMembers(ckpt, "bucket", r.lastBatch)
-      emit(f"""{"probe":"state_lsh_neardup","horizon_ms":$horizonMs,"wall_sec":${r.wall}%.3f,"rows":${r.outRows},"feed_rows":$nLsh,"state_rows_max":${r.stateRowsMax},${membersFields(members)},"state_sst_bytes_max":${r.sstMax},"max_bucket":${graft.streaming.LshDedupTracker.DefaultMaxBucket},"admission_drops":$drops,"admission_drops_progress":${r.observedDrops.getOrElse(-1L)},${gate.jsonFields},"probe_sec_end":${r.probeEnd},${r.steal.jsonFields},"sf":"$sfDir"}""")
+      emit("state_lsh_neardup", horizonMs, r, s""""feed_rows":$nLsh,"state_rows_max":${r.stateRowsMax},${membersFields(members)},"state_sst_bytes_max":${r.sstMax},"max_bucket":${graft.streaming.LshDedupTracker.DefaultMaxBucket},"admission_drops":$drops,"admission_drops_progress":${r.observedDrops.getOrElse(-1L)}""", sfDir)
     }
     }
 
     // ---- semantic near-dup tracker: per-bucket ListState -----------------
     // feed: sf0.1 embeddings ×8 exact-dup replicas, 100 ms spacing.
-    if (onlyProbe("state_semantic_neardup")) {
+    if (selected("state_semantic_neardup")) {
     val emb0 = graft.sources.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val semDocs = (0 until 8).map { i =>
@@ -746,7 +705,6 @@ object StreamBench {
         .as[graft.streaming.SemIn]
       val name = s"semcurve_$horizonMs"
       val ckpt = java.nio.file.Files.createTempDirectory(s"ckpt_$name").toString
-      val gate = graft.ContentionGate.awaitCalm(spark, 32, label = name)
       val r = run(name, n =>
         graft.streaming.SemanticDedupTracker.ingest(in, horizonMs)
           .writeStream.outputMode("append").format("memory")
@@ -757,7 +715,7 @@ object StreamBench {
       graft.streaming.AdmissionDrops.clear(
         graft.streaming.SemanticDedupTracker.DropsTag, r.runId)
       val members = maxListMembers(ckpt, "bucket", r.lastBatch)
-      emit(f"""{"probe":"state_semantic_neardup","horizon_ms":$horizonMs,"wall_sec":${r.wall}%.3f,"rows":${r.outRows},"feed_rows":$nSem,"state_rows_max":${r.stateRowsMax},${membersFields(members)},"state_sst_bytes_max":${r.sstMax},"max_bucket":${graft.streaming.SemanticDedupTracker.DefaultMaxBucket},"admission_drops":$drops,"admission_drops_progress":${r.observedDrops.getOrElse(-1L)},${gate.jsonFields},"probe_sec_end":${r.probeEnd},${r.steal.jsonFields},"sf":"$sfDir"}""")
+      emit("state_semantic_neardup", horizonMs, r, s""""feed_rows":$nSem,"state_rows_max":${r.stateRowsMax},${membersFields(members)},"state_sst_bytes_max":${r.sstMax},"max_bucket":${graft.streaming.SemanticDedupTracker.DefaultMaxBucket},"admission_drops":$drops,"admission_drops_progress":${r.observedDrops.getOrElse(-1L)}""", sfDir)
     }
     }
 
@@ -770,7 +728,7 @@ object StreamBench {
     // arrival i emits i−1 pairs (Σ ≈ 2M pairs per bucket, state ∝ feed);
     // capped, out_rows ≈ 4 bands × (C(64,2) + 1936 × 64) and
     // state_members_max_sampled ≤ 4 × 64 however long the feed runs.
-    if (onlyProbe("state_lsh_capped_bucket")) {
+    if (selected("state_lsh_capped_bucket")) {
     val hotN = 2000L
     val hotDocs = spark.range(hotN).select(
         col("id").as("doc_id"),
@@ -784,7 +742,6 @@ object StreamBench {
         .option("maxFilesPerTrigger", "1").parquet(hotDir)
       val name = "lshhotbucket"
       val ckpt = java.nio.file.Files.createTempDirectory(s"ckpt_$name").toString
-      val gate = graft.ContentionGate.awaitCalm(spark, 32, label = name)
       val cap = graft.streaming.LshDedupTracker.DefaultMaxBucket
       val r = run(name, n =>
         graft.streaming.LshDedupTracker.ingest(
@@ -798,7 +755,7 @@ object StreamBench {
       graft.streaming.AdmissionDrops.clear(
         graft.streaming.LshDedupTracker.DropsTag, r.runId)
       val members = maxListMembers(ckpt, "bucket", r.lastBatch)
-      emit(f"""{"probe":"state_lsh_capped_bucket","horizon_ms":3600000,"wall_sec":${r.wall}%.3f,"rows":${r.outRows},"feed_rows":$hotN,"state_rows_max":${r.stateRowsMax},${membersFields(members)},"state_sst_bytes_max":${r.sstMax},"max_bucket":$cap,"admission_drops":$drops,"admission_drops_progress":${r.observedDrops.getOrElse(-1L)},${gate.jsonFields},"probe_sec_end":${r.probeEnd},${r.steal.jsonFields},"sf":"synthetic"}""")
+      emit("state_lsh_capped_bucket", 3600000L, r, s""""feed_rows":$hotN,"state_rows_max":${r.stateRowsMax},${membersFields(members)},"state_sst_bytes_max":${r.sstMax},"max_bucket":$cap,"admission_drops":$drops,"admission_drops_progress":${r.observedDrops.getOrElse(-1L)}""", "synthetic")
     }
     }
 
@@ -813,7 +770,7 @@ object StreamBench {
     // accuracy contract holds because refused arrivals still score
     // against the capped membership — random-vector pairs at cos ≥ 0.3
     // (~2.4σ of the N(0, 1/64) cosine distribution) keep out_rows > 0.
-    if (onlyProbe("state_semantic_capped_bucket")) {
+    if (selected("state_semantic_capped_bucket")) {
     val semCap = graft.streaming.SemanticDedupTracker.DefaultMaxBucket
     val nHotVecs = semCap + 904L // 5000 arrivals, 904 past the cap
     val rawVecs = spark.range(400000).select(
@@ -837,7 +794,6 @@ object StreamBench {
         .as[graft.streaming.SemIn]
       val name = "semhotbucket"
       val ckpt = java.nio.file.Files.createTempDirectory(s"ckpt_$name").toString
-      val gate = graft.ContentionGate.awaitCalm(spark, 32, label = name)
       val r = run(name, n =>
         graft.streaming.SemanticDedupTracker.ingest(in, 3600000L)
           .writeStream.outputMode("append").format("memory")
@@ -848,7 +804,7 @@ object StreamBench {
       graft.streaming.AdmissionDrops.clear(
         graft.streaming.SemanticDedupTracker.DropsTag, r.runId)
       val members = maxListMembers(ckpt, "bucket", r.lastBatch)
-      emit(f"""{"probe":"state_semantic_capped_bucket","horizon_ms":3600000,"wall_sec":${r.wall}%.3f,"rows":${r.outRows},"feed_rows":$nHotVecs,"state_rows_max":${r.stateRowsMax},${membersFields(members)},"state_sst_bytes_max":${r.sstMax},"max_bucket":$semCap,"admission_drops":$drops,"admission_drops_progress":${r.observedDrops.getOrElse(-1L)},${gate.jsonFields},"probe_sec_end":${r.probeEnd},${r.steal.jsonFields},"sf":"synthetic"}""")
+      emit("state_semantic_capped_bucket", 3600000L, r, s""""feed_rows":$nHotVecs,"state_rows_max":${r.stateRowsMax},${membersFields(members)},"state_sst_bytes_max":${r.sstMax},"max_bucket":$semCap,"admission_drops":$drops,"admission_drops_progress":${r.observedDrops.getOrElse(-1L)}""", "synthetic")
     }
     }
 
@@ -867,24 +823,11 @@ object StreamBench {
     // in the row); the recorded SCALE_r14 run's ~90 s body spanned ~6
     // maintenance cycles and captured three full saw-tooth cycles
     // returning to the same floor (the figure StateStoreDefaults
-    // documents). RUN THIS PROBE IN ITS
-    // OWN PROCESS (SPARK_GRAFT_STATE_ONLY=state_changelog_debt): the
-    // executor-side maintenance scheduler is started once per JVM at the
-    // first state-store load, so a cadence set mid-sweep would be
-    // silently ignored.
-    if (onlyProbe("state_changelog_debt")) {
-    // ENFORCED, not advisory (r14 review fix): in a shared sweep the
-    // per-JVM maintenance scheduler is already running at the default
-    // cadence and the 15 s setting below would be silently ignored —
-    // the row would then stamp a maintenance_interval the run never
-    // used, mislabeling the bounded-debt recording
-    require(sys.env.get("SPARK_GRAFT_STATE_ONLY").map(_.trim)
-        .contains("state_changelog_debt"),
-      "state_changelog_debt must run in its OWN process: " +
-        "SPARK_GRAFT_STATE_ONLY=state_changelog_debt (the state-store " +
-        "maintenance cadence is fixed JVM-wide at first state-store load)")
+    // documents). It runs only in its OWN process (`state-curves
+    // state_changelog_debt`, enforced by [[selectStateProbes]]).
+    if (selected("state_changelog_debt")) {
     val maintenanceConf = "spark.sql.streaming.stateStore.maintenanceInterval"
-    spark.conf.set(changelogConf, "true") // the mode under test
+    spark.conf.set(ChangelogConf, "true") // the mode under test
     spark.conf.set(maintenanceConf, "15s")
     try {
     val nFeed = 4000000L
@@ -906,7 +849,6 @@ object StreamBench {
         .as[graft.streaming.DedupIn]
       val name = "fpdebt"
       val ckpt = java.nio.file.Files.createTempDirectory(s"ckpt_$name").toString
-      val gate = graft.ContentionGate.awaitCalm(spark, 32, label = name)
       val r = run(name, n =>
         in.withWatermark("ts", "10 seconds")
           .groupByKey(_.fingerprint)
@@ -916,11 +858,10 @@ object StreamBench {
           .option("checkpointLocation", ckpt).queryName(n))
       val series = r.sstSeries
         .map { case (b, s) => s"[$b,$s]" }.mkString("[", ",", "]")
-      emit(f"""{"probe":"state_changelog_debt","horizon_ms":$horizonMs,"wall_sec":${r.wall}%.3f,"rows":${r.outRows},"feed_rows":$nFeed,"base_index":100000,"state_rows_max":${r.stateRowsMax},"state_sst_bytes_max":${r.sstMax},"sst_series":$series,"maintenance_interval":"15s",${gate.jsonFields},"probe_sec_end":${r.probeEnd},${r.steal.jsonFields},"sf":"synthetic"}""",
-        clog = "true")
+      emit("state_changelog_debt", horizonMs, r, s""""feed_rows":$nFeed,"base_index":100000,"state_rows_max":${r.stateRowsMax},"state_sst_bytes_max":${r.sstMax},"sst_series":$series,"maintenance_interval":"15s"""", "synthetic", clog = "true")
     }
     } finally {
-      spark.conf.set(changelogConf, changelog)
+      spark.conf.set(ChangelogConf, changelog)
       spark.conf.unset(maintenanceConf)
     }
     }

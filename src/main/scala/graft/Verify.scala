@@ -7,8 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg (dev only): comma-separated query-name subset,
     // so a new query iterates without re-running the whole registry.
-    val keep: String => Boolean =
-      if (args.length > 2) args(2).split(",").toSet else (_ => true)
+    val keep = Recorder.select(args.lift(2), SparkEntry.queries.keys)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // a failed query must not leave the PREVIOUS run's parquet in place —

@@ -332,13 +332,6 @@ object DedupOps {
         greatest(col("a_id"), col("b_id")).as("v"))
       .filter(col("u") =!= col("v"))
     var rounds = 0
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var tLast = System.nanoTime()
-    def mark(what: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"[cc] $what%-18s ${(now - tLast) / 1e9}%7.2f s")
-      tLast = now
-    }
     def spend(): Unit = {
       rounds += 1
       // exiting via the cap would silently emit non-minimal labels (one
@@ -357,7 +350,6 @@ object DedupOps {
       var p = sym.groupBy(col("node")).agg(min(col("nbr")).as("mn"))
         .select(col("node"), least(col("mn"), col("node")).as("root"))
         .localCheckpoint(true)
-      mark("parent_forest")
       // pointer halving to forest roots: root ← root(root) until stable
       // (node-sized self-joins; tree depth halves per step). Total join:
       // every root value is itself a node of this level's node set.
@@ -369,7 +361,6 @@ object DedupOps {
             Seq("root"))
           .localCheckpoint(true)
         halved = step.filter(col("root") =!= col("root2")).isEmpty
-        mark("halving")
         p = step.select(col("node"), col("root2").as("root"))
       }
       mappings = p :: mappings
@@ -383,7 +374,6 @@ object DedupOps {
           greatest(col("ru"), col("rv")).as("v"))
         .filter(col("u") =!= col("v"))
         .distinct().localCheckpoint(true)
-      mark("contract")
     }
     // compose the level mappings bottom-up. The level-1 forest's domain
     // IS the node set of every non-self-loop edge (so no separate
@@ -411,7 +401,6 @@ object DedupOps {
         lab.unionAll(selfOnly.select(col("node"), col("node").as("comp")))
     }
     labels = labels.localCheckpoint(true)
-    mark("compose")
     (labels.select(col("node").as("doc_id"), col("comp").as("component_id")), rounds)
   }
 }

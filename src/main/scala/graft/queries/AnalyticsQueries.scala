@@ -104,8 +104,13 @@ object AnalyticsQueries {
     * cumulative/total windows and the half-mass filter run on the
     * collapsed frame, ∝ distinct prices per group. The 2·cumw ≥ totw
     * comparison is exact decimal arithmetic. */
-  def returnflagWeightedMedian(spark: SparkSession, dir: String): DataFrame = {
-    val byPrice = Tables.lineitem(spark, dir)
+  def returnflagWeightedMedian(spark: SparkSession, dir: String): DataFrame =
+    returnflagWeightedMedianFrom(Tables.lineitem(spark, dir))
+
+  /** Frame-based core of [[returnflagWeightedMedian]] over lineitem rows
+    * (l_returnflag, l_extendedprice, l_quantity). */
+  def returnflagWeightedMedianFrom(lineitem: DataFrame): DataFrame = {
+    val byPrice = lineitem
       .groupBy(col("l_returnflag"), col("l_extendedprice"))
       .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("w"))
     val ord = Window.partitionBy(col("l_returnflag")).orderBy(col("l_extendedprice"))

@@ -279,13 +279,19 @@ object DedupQueries {
     * (one hash join on doc_id) + one per-component window — every stage
     * after pair generation is proportional to the DUPLICATE subset, not
     * the corpus. */
-  def dedupCanonicalKeep(spark: SparkSession, dir: String): DataFrame = {
+  def dedupCanonicalKeep(spark: SparkSession, dir: String): DataFrame =
+    dedupCanonicalKeepFrom(spark, Tables.documentsWide(spark, dir),
+      Tables.documents(spark, dir))
+
+  /** Frame-based core of [[dedupCanonicalKeep]]: pairs come from `docs`
+    * (doc_id, text), keeper metadata from `meta` (doc_id, n_chars). */
+  def dedupCanonicalKeepFrom(spark: SparkSession, docs: DataFrame,
+      meta: DataFrame): DataFrame = {
     val comps = DedupOps.connectedComponents(
-      spark, minhashLshDups(spark, dir).select("a_id", "b_id"))
-    val meta = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
+      spark, minhashLshDupsFrom(spark, docs).select("a_id", "b_id"))
     val w = Window.partitionBy(col("component_id"))
       .orderBy(col("n_chars").desc, col("doc_id"))
-    comps.join(meta, Seq("doc_id"))
+    comps.join(meta.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
       .withColumn("keeper_id", first(col("doc_id")).over(w))
       .select(
         col("doc_id"), col("component_id"), col("n_chars"), col("keeper_id"),
@@ -684,9 +690,16 @@ object DedupQueries {
     * joins and an enum-keyed aggregate — free at any scale. Mean Jaccard
     * in fixed-point (sum of 6-decimal values is exact in doubles;
     * floor-division per the round-half divergence rule). */
-  def sourceDedupCrossrate(spark: SparkSession, dir: String): DataFrame = {
-    val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-    minhashLshDups(spark, dir)
+  def sourceDedupCrossrate(spark: SparkSession, dir: String): DataFrame =
+    sourceDedupCrossrateFrom(spark, Tables.documentsWide(spark, dir),
+      Tables.documents(spark, dir))
+
+  /** Frame-based core of [[sourceDedupCrossrate]]: pairs come from `docs`
+    * (doc_id, text), sources from `meta` (doc_id, source). */
+  def sourceDedupCrossrateFrom(spark: SparkSession, docs: DataFrame,
+      meta: DataFrame): DataFrame = {
+    val src = meta.select(col("doc_id"), col("source"))
+    minhashLshDupsFrom(spark, docs)
       .join(src.select(col("doc_id").as("a_id"), col("source").as("src_a")), "a_id")
       .join(src.select(col("doc_id").as("b_id"), col("source").as("src_b")), "b_id")
       .groupBy(
@@ -1698,8 +1711,12 @@ object DedupQueries {
     * groupBy(shingle) min. Docs with no shingles (empty text) have no
     * novelty denominator and are omitted (inner semantics, like
     * doc_lm_score). */
-  def docNgramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val ex = DedupOps.docShingles(Tables.documentsWide(spark, dir))
+  def docNgramNovelty(spark: SparkSession, dir: String): DataFrame =
+    docNgramNoveltyFrom(Tables.documentsWide(spark, dir))
+
+  /** Frame-based core of [[docNgramNovelty]] over (doc_id, text) rows. */
+  def docNgramNoveltyFrom(docs: DataFrame): DataFrame = {
+    val ex = DedupOps.docShingles(docs)
       // explode_outer + null-filter: see DedupOps.minhashWide
       .select(col("doc_id"), explode_outer(col("shingles")).as("s"))
       .filter(col("s").isNotNull)

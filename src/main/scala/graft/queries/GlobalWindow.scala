@@ -152,35 +152,11 @@ object GlobalWindow {
       .cast("int")
   }
 
-  /** GRAFT_GLOBALWINDOW=plain (adjudication-only escape hatch): the
-    * pre-conversion single-task global window, so the two-phase overhead
-    * can be A/B-measured against the plain form in ONE JVM under
-    * identical JIT/load conditions (the r5→r6 regression adjudication in
-    * BASELINE.md). Never the default, never set by any execution path;
-    * the RegistryAuditSpec ban keeps registered plans two-phase. */
-  private def plainNumbered(df: DataFrame, order: Seq[Column],
-      rn: Option[String], total: Option[String],
-      runSum: Option[(Column, String)]): DataFrame = {
-    val w = Window.orderBy(order: _*)
-    val whole = Window.partitionBy()
-    Seq(
-      rn.map(c => (f: DataFrame) =>
-        f.withColumn(c, row_number().over(w).cast("long"))),
-      total.map(c => (f: DataFrame) =>
-        f.withColumn(c, count(lit(1)).over(whole))),
-      runSum.map { case (v, c) => (f: DataFrame) =>
-        f.withColumn(c, sum(v).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))) }
-    ).flatten.foldLeft(df)((acc, f) => f(acc))
-  }
-
   private def numbered(df: DataFrame, numParts: Int, order: Seq[Column],
       rn: Option[String], total: Option[String],
       runSum: Option[(Column, String)]): DataFrame = {
     import QueryConventions.MaterializeSyntax
     require(numParts >= 1, s"numParts must be positive, got $numParts")
-    if (sys.env.get("GRAFT_GLOBALWINDOW").contains("plain"))
-      return plainNumbered(df, order, rn, total, runSum)
     // Local numbering is MAP-SIDE: after the range shuffle the partition
     // is sorted in place and monotonically_increasing_id reads off
     // (partition index << 33 | within-partition position) in that sorted

@@ -496,8 +496,12 @@ object TextQueries {
     * positions self-join), unigram counts from one explode; the pair
     * frame hash-joins the unigram frame twice on the token key and the
     * two one-row totals broadcast. Everything is ∝ tokens at 100 TB. */
-  def tokenPmiTop(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
+  def tokenPmiTop(spark: SparkSession, dir: String): DataFrame =
+    tokenPmiTopFrom(Tables.documents(spark, dir))
+
+  /** Frame-based core of [[tokenPmiTop]] over rows with a `text` column. */
+  def tokenPmiTopFrom(corpus: DataFrame): DataFrame = {
+    val docs = corpus
       .select(tokens(col("text")).as("toks"))
       .materializeOnce // feeds the unigram explode and both pair explodes
     val uni = docs.select(explode(col("toks")).as("w"))

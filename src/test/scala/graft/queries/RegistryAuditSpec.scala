@@ -259,6 +259,25 @@ class RegistryAuditSpec extends AnyFunSuite with SparkSpec {
     assert(owners("collect_list(struct(col(\"pos\"),col(\"cv\")))") === Seq("centroids"))
   }
 
+  // ScaleSmoke times production entry points, never a hand-written copy
+  // of a query: a copy drifts from what ships (two copies once timed
+  // shapes production no longer had). Its feeds need only select,
+  // unionAll, filter and repartition, so any of these operators in its
+  // code (comments excluded) is an inline query pipeline.
+  test("ScaleSmoke builds no inline query pipeline") {
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/scala/graft/ScaleSmoke.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val code = "(?m)//.*$".r.replaceAllIn("(?s)/\\*.*?\\*/".r.replaceAllIn(src, ""), "")
+    val found = Seq("groupBy(", ".join(", "Window", "explode(", "posexplode(")
+      .filter(code.contains)
+    assert(found.isEmpty, s"inline operators in ScaleSmoke.scala: $found")
+    // the selector validates against Probes, so a name there with no
+    // `time` call would select nothing and exit 0
+    val timed = "time\\(\"([a-z0-9_]+)\"".r.findAllMatchIn(code).map(_.group(1)).toSeq
+    assert(timed === graft.ScaleSmoke.Probes)
+  }
+
   test("the shared test session carries Bench's confs at 4 cores") {
     import org.apache.spark.sql.functions.{col, pow}
     assert(spark.sparkContext.master === "local[4]")
