@@ -1,7 +1,7 @@
 #!/bin/sh
 # Dev-only suite-wall recorder (r15, VERDICT #2): runs `sbt test` with
-# the same /proc/stat steal bracket StealMonitor puts on SCALE and
-# StreamBench bodies, and appends ONE machine-readable JSON line to
+# the same /proc/stat steal bracket StealMonitor puts on Bench sweeps,
+# and appends ONE machine-readable JSON line to
 # SUITE_r{N}.json — so the suite-wall series (7:44 calm record, 8:29
 # typical, ≤9:00 bar) is adjudicated by an in-artifact integral instead
 # of prose-matched load averages. The integral between two cumulative

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.queries.Registry
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query wall-clock seconds.
@@ -46,7 +47,7 @@ object Bench {
     // names, dev only) narrows the run for adjudicating a single query's
     // regression without paying the full-registry sweep. An unknown name
     // fails here, before the session starts.
-    val only = Recorder.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"), SparkEntry.queries.keys)
+    val only = Registry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val queries = SparkEntry.queries.filter(kv => only(kv._1)).toSeq.sortBy(_._1)
     val spark = Sessions.local(cpus)
 

@@ -2,39 +2,36 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The measurement contention gate, shared by every recording main
-  * (`Bench`, and `ScaleSmoke`/`StreamBench` through [[Recorder]]): the
-  * harness box suffers co-located steal in ~10-minute waves that the
-  * load average reports unreliably, and three rounds' bench recordings
-  * (r2/r5/r10) plus the r11 scale rows (`knn_inc_recall` 14.2–17.7 s vs
-  * 10.9–12.5 s with untouched code; the `state_lsh_neardup` 2400
-  * s-horizon wall) were contaminated because only `Bench` carried a
-  * gate. Every recorded row now goes through [[awaitCalm]] and carries
-  * its probe stamp, so a contaminated datapoint is self-identifying
-  * instead of needing cross-round archaeology.
+/** The measurement contention gate: `graft.Bench` refuses to start its
+  * sweeps on a contended host ([[awaitCalm]]) and stamps start and end
+  * [[probe]] readings into its line; perfbench times the same [[probe]]
+  * as its `machine.probe_ms` layer. The harness box suffers co-located
+  * steal in ~10-minute waves that the load average reports unreliably,
+  * and three rounds' bench recordings (r2/r5/r10) were contaminated
+  * before Bench carried a gate.
   *
   * The probe is a fixed CPU-bound reference job — a codegen'd 400M-row
   * range sum, no I/O, no shuffle, no data dependence — timed min-of-3
   * after two warm passes. On the 32-core reference host idle it reads
   * ~[[ProbeIdleRef]] s; under co-located load it stretches by the same
-  * factor the query timings do, so a reader can normalize any row as
-  * `wall × (ProbeIdleRef / probe_sec)`.
+  * factor the query timings do, so a reader can normalize a Bench line
+  * as `wall × (ProbeIdleRef / probe_sec)`.
   *
   * "Calm" is decided from the host's own steal share while the probe
   * runs (the probe keeps every core runnable, so steal taken during it
   * is co-tenant contention by definition), not from the probe time
   * against [[ProbeIdleRef]]: that reference holds only on the
   * reference hardware, and on any other host the probe never reached
-  * it, so every gated row slept through all its waits. Load from other
-  * processes inside the same VM shows no steal and is no longer gated;
-  * it still shows in the stamped `probe_sec`. So Bench's `contended`
+  * it, so every gated run slept through all its waits. Load from other
+  * processes inside the same VM shows no steal and is not gated; it
+  * still shows in the stamped `probe_sec`. So Bench's `contended`
   * means "steal above [[MaxSteal]] after every wait" from round 17 on,
   * where earlier BENCH rounds meant "probe above 1.3 × ProbeIdleRef". */
 object ContentionGate {
 
   /** Idle-box reference (min-of-3 of the twice-warmed probe at 32
     * threads, measured on the 32-core reference host near-idle).
-    * Stamped into every row for normalization; it does not decide calm. */
+    * Stamped into Bench's line for normalization; it does not decide calm. */
   val ProbeIdleRef = 0.11
 
   /** Above this steal share of all CPU time across the probe the host is
@@ -59,13 +56,9 @@ object ContentionGate {
   /** One gated measurement window: last probe reading, the steal share
     * across it, waits spent, and whether the window is still contended
     * (record anyway, stamped). */
-  case class Window(probeSec: Double, steal: Double, waits: Int, contended: Boolean) {
-    /** The JSON fields every gated artifact row carries. */
-    def jsonFields: String =
-      f""""probe_sec":$probeSec,"probe_steal":$steal%.4f,"probe_idle_ref":$ProbeIdleRef,"contended":$contended"""
-  }
+  case class Window(probeSec: Double, steal: Double, waits: Int, contended: Boolean)
 
-  def probe(spark: SparkSession, threads: Int = 32): Double = {
+  def probe(spark: SparkSession, threads: Int): Double = {
     def once(): Double = {
       val t0 = System.nanoTime()
       spark.range(0, 400000000L, 1, threads)
@@ -78,10 +71,9 @@ object ContentionGate {
 
   /** REFUSE to start a measurement on a contended box: probe, and while
     * the steal share across the probe is above [[MaxSteal]], sleep 30 s
-    * and re-probe, up to `maxWaits` times. One probe (~0.5–2.5 s) on a
+    * and re-probe, up to [[MaxWaits]] times. One probe (~0.5–2.5 s) on a
     * calm box. */
-  def awaitCalm(spark: SparkSession, threads: Int = 32,
-      maxWaits: Int = MaxWaits, label: String = ""): Window = {
+  def awaitCalm(spark: SparkSession, threads: Int, label: String = ""): Window = {
     /** (probe seconds, steal share across the probe) */
     def reading(): (Double, Double) = {
       val sm = StealMonitor.start()
@@ -90,7 +82,7 @@ object ContentionGate {
     }
     var (probeSec, steal) = reading()
     var waits = 0
-    while (steal > MaxSteal && waits < maxWaits) {
+    while (steal > MaxSteal && waits < MaxWaits) {
       waits += 1
       println(f"""{"metric":"contention_wait","probe":"$label","attempt":$waits,"probe_sec":$probeSec,"steal":$steal%.4f}""")
       Thread.sleep(WaitMs)

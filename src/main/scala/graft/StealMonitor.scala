@@ -2,33 +2,33 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-/** INTEGRATED contention observability for long measurement bodies
-  * (r14, VERDICT #3): [[ContentionGate]]'s start/end probes are
-  * instantaneous — a multi-minute leg can start calm, straddle a
-  * co-tenant steal wave, and end calm, leaving a contaminated wall
-  * with two green stamps (measured: the r13 suite runs caught waves
-  * both endpoint probes missed, and the LSH state-curve walls carry
-  * ±35% between gated samples for exactly this reason). This monitor
-  * integrates host contention OVER the timed body instead of sampling
-  * its endpoints: a daemon thread reads the kernel's cumulative CPU
-  * accounting (`/proc/stat` first line) every few seconds, and the
-  * result is the body-wide STEAL fraction — time the hypervisor ran
-  * a co-tenant while this VM had runnable work, the one column that
-  * is contention by definition and never includes our own load — plus
-  * the peak per-sample-window steal fraction (a wave's footprint even
-  * when the body-wide mean is small). The r13 host-level audit showed
-  * the waves are steal-visible (in-VM process audit empty while walls
-  * inflated), so a future drift adjudication reads ONE field instead
-  * of re-running legs in hunted-for calm windows:
+/** Integrated contention observability for long measurement bodies:
+  * `graft.Bench` brackets each timed sweep with this monitor (its
+  * `sweep_steal` tuples), and [[ContentionGate.awaitCalm]] reads the
+  * steal share across each probe. The gate's start/end probes are
+  * instants — a multi-minute sweep can start calm, straddle a co-tenant
+  * steal wave, and end calm, leaving a contaminated wall with two green
+  * stamps (measured: the r13 suite runs caught waves both endpoint
+  * probes missed). This monitor integrates host contention OVER the
+  * timed body instead of sampling its endpoints: a daemon thread reads
+  * the kernel's cumulative CPU accounting (`/proc/stat` first line)
+  * every few seconds, and the result is the body-wide STEAL fraction —
+  * time the hypervisor ran a co-tenant while this VM had runnable work,
+  * the one column that is contention by definition and never includes
+  * our own load — plus the peak per-sample-window steal fraction (a
+  * wave's footprint even when the body-wide mean is small). The r13
+  * host-level audit showed the waves are steal-visible (in-VM process
+  * audit empty while walls inflated), so a drift adjudication reads ONE
+  * field instead of re-running sweeps in hunted-for calm windows:
   * `steal_integral` ≈ 0 means the wall is trustworthy; a hot
   * `steal_peak` names the wave the endpoint probes missed.
   *
   * Overhead: one ~30-byte proc read per period on a daemon thread —
   * nothing measurable inside the timed body (unlike re-running the
-  * 0.11 s Spark probe mid-leg, which parks 32 cores and perturbs
-  * micro-batch scheduling). Boxes without a steal column (bare metal)
-  * degrade to zeros with `steal_samples` recording how many reads
-  * succeeded, so a zero is distinguishable from a missing monitor. */
+  * 0.11 s Spark probe mid-sweep, which parks every core). Boxes without
+  * a steal column (bare metal) degrade to zeros with `samples`
+  * recording how many reads succeeded, so a zero is distinguishable
+  * from a missing monitor. */
 object StealMonitor {
 
   /** Cumulative jiffies from `/proc/stat`'s aggregate cpu line:
@@ -54,8 +54,7 @@ object StealMonitor {
   /** One monitored window. [[stop]] is idempotent — the first call
     * computes and latches the result, later calls return it (a
     * re-reading second stop would append a duplicate tail window into
-    * the peak set — r14 ADVICE); the result renders the artifact
-    * fields. */
+    * the peak set — r14 ADVICE). */
   final class Running private[StealMonitor] (periodMs: Long) {
     private val t0 = System.nanoTime()
     private val start = read()
@@ -131,12 +130,7 @@ object StealMonitor {
     * single sample window. `samples == 0` means the proc read failed —
     * the zeros are then "unmeasured", not "calm". */
   case class Result(seconds: Double, stealIntegral: Double,
-      stealPeak: Double, samples: Int) {
-    /** The JSON fields an integrated artifact row carries (alongside
-      * the endpoint `probe_sec`/`probe_sec_end` stamps). */
-    def jsonFields: String =
-      f""""steal_integral":$stealIntegral%.4f,"steal_peak":$stealPeak%.4f,"steal_samples":$samples"""
-  }
+      stealPeak: Double, samples: Int)
 
   /** Start monitoring; call [[Running.stop]] when the timed body ends. */
   def start(periodMs: Long = 5000L): Running = new Running(periodMs)

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.queries.Registry
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,7 +8,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg (dev only): comma-separated query-name subset,
     // so a new query iterates without re-running the whole registry.
-    val keep = Recorder.select(args.lift(2), SparkEntry.queries.keys)
+    val keep = Registry.select(args.lift(2))
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // a failed query must not leave the PREVIOUS run's parquet in place —

@@ -313,8 +313,8 @@ object DedupOps {
 
   /** [[connectedComponents]] plus the number of distributed passes it
     * took to converge — the scale-behavior observable (passes grow
-    * log-, not linearly, in component diameter) that ScaleSmoke records
-    * in the `dedup_components` probe row. */
+    * log-, not linearly, in component diameter; SCALE_r14.json's
+    * `dedup_components` rows record it per K). */
   def connectedComponentsWithRounds(
       spark: SparkSession, edges: DataFrame, maxIters: Int = 40): (DataFrame, Int) = {
     // materialize the caller's edge frame ONCE: it is typically the tail

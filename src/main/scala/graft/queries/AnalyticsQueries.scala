@@ -104,12 +104,8 @@ object AnalyticsQueries {
     * cumulative/total windows and the half-mass filter run on the
     * collapsed frame, ∝ distinct prices per group. The 2·cumw ≥ totw
     * comparison is exact decimal arithmetic. */
-  def returnflagWeightedMedian(spark: SparkSession, dir: String): DataFrame =
-    returnflagWeightedMedianFrom(Tables.lineitem(spark, dir))
-
-  /** Frame-based core of [[returnflagWeightedMedian]] over lineitem rows
-    * (l_returnflag, l_extendedprice, l_quantity). */
-  def returnflagWeightedMedianFrom(lineitem: DataFrame): DataFrame = {
+  def returnflagWeightedMedian(spark: SparkSession, dir: String): DataFrame = {
+    val lineitem = Tables.lineitem(spark, dir)
     val byPrice = lineitem
       .groupBy(col("l_returnflag"), col("l_extendedprice"))
       .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("w"))
@@ -1340,8 +1336,7 @@ object AnalyticsQueries {
     coPurchaseEdgesFrom(spark, Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
 
-  /** [[coPurchaseEdges]] over an arbitrary (ok, pk) basket frame — the
-    * ScaleSmoke entry point for the graph tier.
+  /** [[coPurchaseEdges]] over an arbitrary (ok, pk) basket frame.
     *
     * Each order folds to one row holding its sorted distinct parts,
     * `array_sort(collect_set(pk))`, and every i < j pair of that array
@@ -2009,15 +2004,8 @@ object AnalyticsQueries {
     * collision between two user_ids would deflate users but not this
     * baseline, so the error column stays an honest sketch-vs-its-own-
     * hash-space comparison. */
-  def userKmvDistinct(spark: SparkSession, dir: String): DataFrame =
-    userKmvDistinctFrom(spark, Tables.events(spark, dir))
-
-  /** [[userKmvDistinct]] over an arbitrary events frame — the ScaleSmoke
-    * entry point: the distinct collapse is the only data-sized stage
-    * (map-side partial dedup), so wall must track the feed ~linearly
-    * with a flat per-group sketch tail. */
-  private[graft] def userKmvDistinctFrom(
-      spark: SparkSession, events: DataFrame): DataFrame = {
+  def userKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
+    val events = Tables.events(spark, dir)
     val hashes = events
       .select(col("event_type"),
         DedupOps.h60(col("user_id").cast("string")).as("h"))
@@ -2087,15 +2075,8 @@ object AnalyticsQueries {
     * dialects (the `user_overlap_matrix` convention). Exactness: pure
     * integer arithmetic; the estimate divisions run in DECIMAL/HUGEINT
     * and floor identically. */
-  def userKmvOverlap(spark: SparkSession, dir: String): DataFrame =
-    userKmvOverlapFrom(spark, Tables.events(spark, dir))
-
-  /** [[userKmvOverlap]] over an arbitrary events frame — the ScaleSmoke
-    * entry point: the distinct collapse and the h-keyed exact anchor are
-    * the only data-sized stages, so wall must track the feed ~linearly
-    * while the sketch-combine stages stay |types|²·k-sized. */
-  private[graft] def userKmvOverlapFrom(
-      spark: SparkSession, events: DataFrame): DataFrame = {
+  def userKmvOverlap(spark: SparkSession, dir: String): DataFrame = {
+    val events = Tables.events(spark, dir)
     val hashes = events
       .select(col("event_type"),
         DedupOps.h60(col("user_id").cast("string")).as("h"))
@@ -2234,14 +2215,8 @@ object AnalyticsQueries {
     * Exactness: values quantize to micro-unit BIGINTs via floor (no
     * half-case round), every boundary and interpolation is integer
     * division — no float anywhere. */
-  def valueHistQuantiles(spark: SparkSession, dir: String): DataFrame =
-    valueHistQuantilesFrom(spark, Tables.events(spark, dir))
-
-  /** [[valueHistQuantiles]] over an arbitrary events frame — the
-    * ScaleSmoke entry point: two map-side-partial scans plus bin-frame
-    * arithmetic on the sketch path; only the exact-anchor leg sorts. */
-  private[graft] def valueHistQuantilesFrom(
-      spark: SparkSession, events: DataFrame): DataFrame = {
+  def valueHistQuantiles(spark: SparkSession, dir: String): DataFrame = {
+    val events = Tables.events(spark, dir)
     val qPcts = Seq(25L, 50L, 75L, 90L, 99L)
     val v = events
       .filter(col("value").isNotNull)
@@ -2479,7 +2454,7 @@ object AnalyticsQueries {
     partCommunityModularityFrom(coPurchaseEdges(spark, dir))
 
   /** [[partCommunityModularity]] over an arbitrary co-purchase edge
-    * frame — the ScaleSmoke entry point: the LPA rounds plus the
+    * frame: the LPA rounds plus the
     * node-keyed label joins are the data-sized stages, the community
     * fold and ppm arithmetic run on the community frame. */
   private[graft] def partCommunityModularityFrom(edges0: DataFrame): DataFrame = {

@@ -83,8 +83,7 @@ object DedupQueries {
   def minhashLshDups(spark: SparkSession, dir: String): DataFrame =
     minhashLshDupsFrom(spark, Tables.documentsWide(spark, dir))
 
-  /** Frame-based core of [[minhashLshDups]] (also driven by ScaleSmoke
-    * at K× corpus size). */
+  /** Frame-based core of [[minhashLshDups]] over (doc_id, text) rows. */
   def minhashLshDupsFrom(spark: SparkSession, docs: DataFrame): DataFrame = {
     // candidate PAIRS are tiny (ids only) — materialize them once; the
     // expensive signature pipeline then runs once, downstream reuses
@@ -183,11 +182,8 @@ object DedupQueries {
     * aggregate and the join-back (hash-keyed, map-side partials); at
     * 100 TB the df table is the vocabulary of shingles — large but
     * ∝ distinct content, never corpus positions. */
-  def docBoilerplateShare(spark: SparkSession, dir: String): DataFrame =
-    docBoilerplateShareFrom(spark, Tables.documentsWide(spark, dir))
-
-  /** [[docBoilerplateShare]] over an arbitrary (doc_id, text) frame. */
-  def docBoilerplateShareFrom(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def docBoilerplateShare(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documentsWide(spark, dir)
     val ex = DedupOps.docShingles(docs)
       // explode_outer + null-filter: see DedupOps.minhashWide (a bare
       // explode re-runs the shingle pipeline 2x in the inferred filter)
@@ -279,14 +275,9 @@ object DedupQueries {
     * (one hash join on doc_id) + one per-component window — every stage
     * after pair generation is proportional to the DUPLICATE subset, not
     * the corpus. */
-  def dedupCanonicalKeep(spark: SparkSession, dir: String): DataFrame =
-    dedupCanonicalKeepFrom(spark, Tables.documentsWide(spark, dir),
-      Tables.documents(spark, dir))
-
-  /** Frame-based core of [[dedupCanonicalKeep]]: pairs come from `docs`
-    * (doc_id, text), keeper metadata from `meta` (doc_id, n_chars). */
-  def dedupCanonicalKeepFrom(spark: SparkSession, docs: DataFrame,
-      meta: DataFrame): DataFrame = {
+  def dedupCanonicalKeep(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documentsWide(spark, dir)
+    val meta = Tables.documents(spark, dir)
     val comps = DedupOps.connectedComponents(
       spark, minhashLshDupsFrom(spark, docs).select("a_id", "b_id"))
     val w = Window.partitionBy(col("component_id"))
@@ -690,14 +681,9 @@ object DedupQueries {
     * joins and an enum-keyed aggregate — free at any scale. Mean Jaccard
     * in fixed-point (sum of 6-decimal values is exact in doubles;
     * floor-division per the round-half divergence rule). */
-  def sourceDedupCrossrate(spark: SparkSession, dir: String): DataFrame =
-    sourceDedupCrossrateFrom(spark, Tables.documentsWide(spark, dir),
-      Tables.documents(spark, dir))
-
-  /** Frame-based core of [[sourceDedupCrossrate]]: pairs come from `docs`
-    * (doc_id, text), sources from `meta` (doc_id, source). */
-  def sourceDedupCrossrateFrom(spark: SparkSession, docs: DataFrame,
-      meta: DataFrame): DataFrame = {
+  def sourceDedupCrossrate(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documentsWide(spark, dir)
+    val meta = Tables.documents(spark, dir)
     val src = meta.select(col("doc_id"), col("source"))
     minhashLshDupsFrom(spark, docs)
       .join(src.select(col("doc_id").as("a_id"), col("source").as("src_a")), "a_id")
@@ -755,8 +741,7 @@ object DedupQueries {
   /** Prefix-join threshold: pairs with exact Jaccard ≥ τ are emitted. */
   val PrefixTau = 0.5
 
-  /** Frame-based core of [[jaccardPrefixJoin]] (ScaleSmoke drives it at
-    * K× corpus size).
+  /** Frame-based core of [[jaccardPrefixJoin]].
     *
     * @param maxBucket the standard frequent-bucket guard, same shape as
     *   `DedupOps.candidatesFromShingles` / `simhashBandedCandidates`:
@@ -959,8 +944,7 @@ object DedupQueries {
   def docContainmentPairs(spark: SparkSession, dir: String): DataFrame =
     docContainmentPairsFrom(spark, Tables.documentsWide(spark, dir))
 
-  /** Frame-based core of [[docContainmentPairs]] (ScaleSmoke probes it at
-    * K× corpus size). */
+  /** Frame-based core of [[docContainmentPairs]] over (doc_id, text) rows. */
   def docContainmentPairsFrom(spark: SparkSession, docs: DataFrame): DataFrame = {
     val ex = DedupOps.docShingles(docs)
       // explode_outer + null-filter: see DedupOps.minhashWide
@@ -1209,8 +1193,9 @@ object DedupQueries {
     * shingles held by more than this many docs are excluded from
     * candidate generation (they contribute bucket²/2 candidates while
     * signaling boilerplate / exact-dup cliques that belong to the exact
-    * pass). This is the bound that kept the 10×-replica ScaleSmoke probe
-    * from the OOM the uncapped shape hit. */
+    * pass). This is the bound that kept the 10×-replica scale probe
+    * (SCALE_r14.json `jaccard_prefix_capped`) from the OOM the uncapped
+    * shape hit. */
   val PrefixCap = 64
 
   /** The CAPPED prefix join as its own oracled entry — the configuration
@@ -1329,20 +1314,24 @@ object DedupQueries {
     * Hamming <= [[HammingK]] — but the pair step is an equi-join on
     * (band, 24-bit chunk) instead of an N² cross join: candidate count
     * tracks duplicate-clique size, not corpus², so it survives 100 TB
-    * (measured candidates ∝ dups in ScaleSmoke). Candidates are then
-    * Hamming-verified exactly. */
+    * (measured candidates ∝ dups: SCALE_r14.json `simhash_banded_cand`).
+    * Candidates are then Hamming-verified exactly. */
   def simhashBandedDup(spark: SparkSession, dir: String): DataFrame =
-    simhashBandedDupFrom(spark, Tables.documents(spark, dir))
+    simhashBandedCandidates(spark, Tables.documents(spark, dir))
+      .withColumn("hamming", expr("bit_count(ha ^ hb)"))
+      .filter(col("hamming") <= HammingK)
+      .select("a_id", "b_id", "hamming")
+      .orderBy("a_id", "b_id")
 
   /** Candidate pairs from the banding equi-join — distinct (a_id, b_id)
     * with both signatures, BEFORE Hamming verification. Exposed so
-    * ScaleSmoke can measure that candidate count tracks duplicate-clique
-    * size, not corpus².
+    * the skew-guard spec can count candidates before verification.
     *
     * `maxBucket` is the LSH hot-bucket skew guard: a (band, chunk) bucket
     * holding b docs contributes b²/2 candidate pairs, so one hot chunk
-    * value (boilerplate-heavy corpora, or ScaleSmoke's 50× replica
-    * pathology — 324M candidates from replica-saturated buckets) can
+    * value (boilerplate-heavy corpora, or a 50× replica
+    * corpus — 324M candidates from replica-saturated buckets, SCALE_r14.json
+    * `simhash_banded_cand`) can
     * dominate the whole join. Capping drops ONLY buckets above the
     * threshold (the standard LSH trick: a bucket that large is either
     * boilerplate — near-dup detection on it is meaningless — or must be
@@ -1378,14 +1367,6 @@ object DedupQueries {
       // a pair with Hamming 0 in both chunks matches in both bands
       .select("a_id", "b_id", "ha", "hb").distinct()
   }
-
-  /** Frame-based core of [[simhashBandedDup]] (also driven by ScaleSmoke). */
-  def simhashBandedDupFrom(spark: SparkSession, docs: DataFrame): DataFrame =
-    simhashBandedCandidates(spark, docs)
-      .withColumn("hamming", expr("bit_count(ha ^ hb)"))
-      .filter(col("hamming") <= HammingK)
-      .select("a_id", "b_id", "hamming")
-      .orderBy("a_id", "b_id")
 
   private val simhashBandedDupSql: String =
     s"""WITH $toksCte,
@@ -1711,11 +1692,8 @@ object DedupQueries {
     * groupBy(shingle) min. Docs with no shingles (empty text) have no
     * novelty denominator and are omitted (inner semantics, like
     * doc_lm_score). */
-  def docNgramNovelty(spark: SparkSession, dir: String): DataFrame =
-    docNgramNoveltyFrom(Tables.documentsWide(spark, dir))
-
-  /** Frame-based core of [[docNgramNovelty]] over (doc_id, text) rows. */
-  def docNgramNoveltyFrom(docs: DataFrame): DataFrame = {
+  def docNgramNovelty(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documentsWide(spark, dir)
     val ex = DedupOps.docShingles(docs)
       // explode_outer + null-filter: see DedupOps.minhashWide
       .select(col("doc_id"), explode_outer(col("shingles")).as("s"))
@@ -2047,8 +2025,7 @@ object DedupQueries {
   def docDupSpans(spark: SparkSession, dir: String): DataFrame =
     docDupSpansFrom(spark, Tables.documents(spark, dir))
 
-  /** [[docDupSpans]] over an arbitrary (doc_id, text) frame — the
-    * ScaleSmoke probe entry. */
+  /** [[docDupSpans]] over an arbitrary (doc_id, text) frame. */
   def docDupSpansFrom(spark: SparkSession, docs: DataFrame): DataFrame = {
     val byPos = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val tok = docs.select(col("doc_id"),
@@ -2114,8 +2091,7 @@ object DedupQueries {
   def dedupSpanRewrite(spark: SparkSession, dir: String): DataFrame =
     dedupSpanRewriteFrom(spark, Tables.documents(spark, dir))
 
-  /** [[dedupSpanRewrite]] over an arbitrary (doc_id, text) frame — the
-    * ScaleSmoke probe entry. */
+  /** [[dedupSpanRewrite]] over an arbitrary (doc_id, text) frame. */
   def dedupSpanRewriteFrom(spark: SparkSession, docs: DataFrame): DataFrame = {
     val byPos = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val tok = docs.select(col("doc_id"),
@@ -2323,10 +2299,8 @@ object DedupQueries {
     * integral `div` (HUGEINT `//` in DuckDB), so both engines floor the
     * same quotient. No DOUBLE and no DecimalType reaches the output
     * (RegistryAuditSpec's type ban). */
-  def docsHllCardinality(spark: SparkSession, dir: String): DataFrame =
-    docsHllCardinalityFrom(spark, Tables.documents(spark, dir))
-
-  def docsHllCardinalityFrom(spark: SparkSession, documents: DataFrame): DataFrame = {
+  def docsHllCardinality(spark: SparkSession, dir: String): DataFrame = {
+    val documents = Tables.documents(spark, dir)
     val docs = documents.select(h60(col("text")).as("h"), col("text"))
     val regs = docs
       .withColumn("idx", pmod(col("h"), lit(256L)))

@@ -37,14 +37,8 @@ object ExperimentQueries {
     *
     * One user-level aggregate, one strata-level aggregate, one row out —
     * all integer (per-stratum diffs via integral division in micro). */
-  def cemAttEstimate(spark: SparkSession, dir: String): DataFrame =
-    cemAttEstimateFrom(spark, Tables.events(spark, dir))
-
-  /** The CEM shape over an arbitrary events frame — the ScaleSmoke probe
-    * replays it on a K×-replicated feed to prove the matching stays
-    * bin-grid-bounded (the strata frame never grows past eb × db cells,
-    * however many users the corpus holds). */
-  def cemAttEstimateFrom(spark: SparkSession, events: DataFrame): DataFrame = {
+  def cemAttEstimate(spark: SparkSession, dir: String): DataFrame = {
+    val events = Tables.events(spark, dir)
     val users = events
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),

@@ -131,17 +131,15 @@ object MultimodalQueries {
     * media_id survives. One hash-shuffle on the digest; at 100 TB this
     * is the first pass of any image/audio corpus ingest, and the digest
     * doubles as the content-addressed storage key. */
-  def mediaDedup(spark: SparkSession, dir: String): DataFrame =
-    mediaDedupFrom(Multimodal.fromDocuments(Tables.documents(spark, dir)))
-
-  /** Frame-based core of [[mediaDedup]] over (media_id, content) rows. */
-  def mediaDedupFrom(media: DataFrame): DataFrame =
+  def mediaDedup(spark: SparkSession, dir: String): DataFrame = {
+    val media = Multimodal.fromDocuments(Tables.documents(spark, dir))
     media.groupBy(sha2(col("content"), 256).as("sha256"))
       .agg(
         min(col("media_id")).as("keep_media_id"),
         count(lit(1)).as("n_copies"),
         max(octet_length(col("content"))).as("n_bytes"))
       .orderBy("sha256")
+  }
 
   private val mediaDedupSql: String =
     """SELECT sha256(text) AS sha256,
@@ -160,13 +158,9 @@ object MultimodalQueries {
     * makes it shuffle-free); no broadcast. The embedding feature is an
     * exact-integer micro-unit sum, so the pair rows hash identically
     * cross-engine. */
-  def mediaCaptionPairs(spark: SparkSession, dir: String): DataFrame =
-    mediaCaptionPairsFrom(Multimodal.fromDocuments(Tables.documents(spark, dir)),
-      Tables.embeddings(spark, dir))
-
-  /** Frame-based core of [[mediaCaptionPairs]]: a media frame (the
-    * [[Multimodal.fromDocuments]] schema) joined to embedding rows. */
-  def mediaCaptionPairsFrom(media: DataFrame, emb: DataFrame): DataFrame = {
+  def mediaCaptionPairs(spark: SparkSession, dir: String): DataFrame = {
+    val media = Multimodal.fromDocuments(Tables.documents(spark, dir))
+    val emb = Tables.embeddings(spark, dir)
     media.join(emb, media("media_id") === emb("vec_id"))
       .select(
         col("media_id"), col("kind"),

@@ -1740,15 +1740,8 @@ object PipelineQueries {
     * times; fusing onto the array frame cut the query from 3.2 s to
     * ~2 s at sf0.1 (r9 A/B) while keeping the eager-checkpoint deadlock
     * fix intact. */
-  def corpusYieldReport(spark: SparkSession, dir: String): DataFrame =
-    corpusYieldReportFrom(spark, Tables.documents(spark, dir))
-
-  /** [[corpusYieldReport]] over an arbitrary (doc_id, text) frame — the
-    * ScaleSmoke entry point that fences the eager-checkpoint cost: the
-    * probe's wall must track the corpus ~linearly (the one checkpoint
-    * is corpus-sized bytes either way; the eager flip costs a constant
-    * number of extra JOBS, not a data-proportional factor). */
-  def corpusYieldReportFrom(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def corpusYieldReport(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
     // the ONE materialization point: per-doc distinct shingle arrays
     val sh = DedupOps.docShingles(docs).materializeOnce
     // LSH dup losers — identical derivation to cleanCorpus, but fed
@@ -2996,15 +2989,8 @@ object PipelineQueries {
     * counts and sums are integers, per-side means are truncated
     * micro-unit divisions, and the extremeness test is pure integer
     * comparison — no float anywhere. */
-  def sourcePermutationTest(spark: SparkSession, dir: String): DataFrame =
-    sourcePermutationTestFrom(spark, Tables.documents(spark, dir))
-
-  /** [[sourcePermutationTest]] over an arbitrary documents frame (doc_id,
-    * source, text) — the ScaleSmoke entry point: wall must track the
-    * corpus ~linearly because the seed explode partial-aggregates
-    * map-side (the shuffle carries seed-level sums, not seed×docs). */
-  private[graft] def sourcePermutationTestFrom(
-      spark: SparkSession, documents: DataFrame): DataFrame = {
+  def sourcePermutationTest(spark: SparkSession, dir: String): DataFrame = {
+    val documents = Tables.documents(spark, dir)
     import QueryConventions.MaterializeSyntax
     val base = documents
       .filter(col("source").isin("src0", "src1"))

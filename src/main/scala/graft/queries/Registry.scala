@@ -32,4 +32,22 @@ object Registry {
   // silently downgrades the driver's check to rows-only
   require(queries.keySet == oracle.keySet,
     s"query/oracle mismatch: ${(queries.keySet diff oracle.keySet) ++ (oracle.keySet diff queries.keySet)}")
+
+  /** The query names a run selects (`graft.Bench`'s
+    * `SPARK_GRAFT_BENCH_ONLY`, `graft.Verify`'s third argument). `spec`
+    * is a comma-separated list; names are trimmed. Absent or blank
+    * selects every query. An unknown name fails, naming itself and the
+    * known set: a typo must not select nothing and exit 0 looking like a
+    * run. */
+  def select(spec: Option[String]): Set[String] = {
+    val names = spec.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    if (names.isEmpty) queries.keySet
+    else {
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty,
+        s"unknown names: ${unknown.toSeq.sorted.mkString(",")} " +
+          s"(known: ${queries.keySet.toSeq.sorted.mkString(",")})")
+      names
+    }
+  }
 }

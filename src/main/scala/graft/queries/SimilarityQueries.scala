@@ -519,7 +519,7 @@ object SimilarityQueries {
 
   /** Lloyd-refined centroid frame over an arbitrary embeddings frame —
     * the INDEX half of the IVF build, exposed so incremental maintenance
-    * (and ScaleSmoke) can train once and assign deltas later. */
+    * can train once and assign deltas later. */
   private[graft] def refinedCentroidsFrom(spark: SparkSession,
       embIn: DataFrame, iters: Int = 3): DataFrame = {
     val emb = embIn
@@ -549,8 +549,8 @@ object SimilarityQueries {
     * delta batch means a full index rebuild ∝ corpus. Trade-off: cell
     * geometry reflects the base distribution until the next re-train;
     * `IvfIncrementalSpec` pins the union-vs-one-shot assignment identity
-    * and the delta-only cost, ScaleSmoke's `ivf_delta_assign` stage
-    * measures it at 10×/25× base scale. */
+    * and the delta-only cost, SCALE_r14.json's `ivf_delta_assign` rows
+    * record it at 10×–50× base scale. */
   def knnIvfIncremental(spark: SparkSession, dir: String): DataFrame = {
     val dotF = dotFast(spark) _
     val emb = Tables.embeddings(spark, dir)
@@ -726,35 +726,6 @@ object SimilarityQueries {
        |ORDER BY q_id, rank""".stripMargin
   }
 
-  /** Recall under index MAINTENANCE — the quality number that justifies
-    * (or bounds) [[knnIvfIncremental]]'s admit-without-retrain fast
-    * path: `knn_ivf_incremental` proves the COST is ∝ delta, but stale
-    * centroids are the known failure mode of incremental admission, and
-    * without this report a deployment has no measured point at which the
-    * index must be re-trained. For each delta fraction (10% / 25% / 50%
-    * of the corpus arriving after the index was built), recall@5 of the
-    * probe-2 search over the incrementally-admitted index (centroids
-    * trained on the base slice only) is compared against the same search
-    * over a FULL re-trained rebuild — both graded against the exact
-    * brute-force top-5 ([[knnRecallCurve]]'s discipline: integer hit
-    * counts, fixed-point floor ratios, vec_id tie-breaks). The spec pins
-    * that the degradation is graceful (no cliff) as the stale fraction
-    * grows.
-    *
-    * Scale shape: |Q| is fixed and every assignment is a broadcast map
-    * stage — and the four index builds (three base slices + the full
-    * rebuild) do NOT run as four serial Lloyd pipelines: `variant` is a
-    * grouping key, so ONE variant-tagged training frame drives one
-    * Lloyd chain producing all four centroid sets in the same
-    * aggregates (4 serial builds cost 9.3 s at sf0.1; the fused chain
-    * runs the report in ~2 s), each equal to its own unkeyed chain
-    * (IvfCoreSpec). Per-vector assignment is map-side, so
-    * indexing each variant over the whole corpus is EXACTLY the
-    * base-assign ∪ delta-admit union — the identity IvfIncrementalSpec
-    * pins as claim (1). */
-  def knnIncrementalRecall(spark: SparkSession, dir: String): DataFrame =
-    knnIncrementalRecallFrom(spark, Tables.embeddings(spark, dir))
-
   /** [[knnIncrementalRecall]]'s index variants: name → the percent of the
     * corpus (`vec_id % 100 < pct`) that arrives after training. */
   private[queries] val RecallVariants = Seq("full" -> 0, "f10" -> 10, "f25" -> 25, "f50" -> 50)
@@ -782,11 +753,34 @@ object SimilarityQueries {
     (cent, assignTo(tagged(emb), cent, Seq("variant")))
   }
 
-  /** Frame-based core of [[knnIncrementalRecall]] (ScaleSmoke probes it
-    * at K× corpus size — every stage is a broadcast map pass or a
-    * dim-bounded aggregate, so wall must track the corpus ~linearly). */
-  private[graft] def knnIncrementalRecallFrom(spark: SparkSession,
-      embRaw: DataFrame): DataFrame = {
+  /** Recall under index MAINTENANCE — the quality number that justifies
+    * (or bounds) [[knnIvfIncremental]]'s admit-without-retrain fast
+    * path: `knn_ivf_incremental` proves the COST is ∝ delta, but stale
+    * centroids are the known failure mode of incremental admission, and
+    * without this report a deployment has no measured point at which the
+    * index must be re-trained. For each delta fraction (10% / 25% / 50%
+    * of the corpus arriving after the index was built), recall@5 of the
+    * probe-2 search over the incrementally-admitted index (centroids
+    * trained on the base slice only) is compared against the same search
+    * over a FULL re-trained rebuild — both graded against the exact
+    * brute-force top-5 ([[knnRecallCurve]]'s discipline: integer hit
+    * counts, fixed-point floor ratios, vec_id tie-breaks). The spec pins
+    * that the degradation is graceful (no cliff) as the stale fraction
+    * grows.
+    *
+    * Scale shape: |Q| is fixed and every assignment is a broadcast map
+    * stage — and the four index builds (three base slices + the full
+    * rebuild) do NOT run as four serial Lloyd pipelines: `variant` is a
+    * grouping key, so ONE variant-tagged training frame drives one
+    * Lloyd chain producing all four centroid sets in the same
+    * aggregates (4 serial builds cost 9.3 s at sf0.1; the fused chain
+    * runs the report in ~2 s), each equal to its own unkeyed chain
+    * (IvfCoreSpec). Per-vector assignment is map-side, so
+    * indexing each variant over the whole corpus is EXACTLY the
+    * base-assign ∪ delta-admit union — the identity IvfIncrementalSpec
+    * pins as claim (1). */
+  def knnIncrementalRecall(spark: SparkSession, dir: String): DataFrame = {
+    val embRaw = Tables.embeddings(spark, dir)
     val dotF = dotFast(spark) _
     val emb = embRaw
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
@@ -1339,12 +1333,8 @@ object SimilarityQueries {
     * 6 so the assignment argmax is engine-stable (tie-break on cluster
     * id). Shuffle cost: dim × N partials for the recompute — identical to
     * the initial build; assignment itself is embarrassingly parallel. */
-  def ivfKmeansRefine(spark: SparkSession, dir: String): DataFrame =
-    ivfKmeansRefineFrom(spark, Tables.embeddings(spark, dir))
-
-  /** Frame-based core of [[ivfKmeansRefine]] (also driven by ScaleSmoke
-    * at K× corpus size). */
-  def ivfKmeansRefineFrom(spark: SparkSession, embIn: DataFrame): DataFrame = {
+  def ivfKmeansRefine(spark: SparkSession, dir: String): DataFrame = {
+    val embIn = Tables.embeddings(spark, dir)
     val emb = embIn
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
     assignTo(emb, centroids(emb, cluster = "label"))
@@ -1404,12 +1394,8 @@ object SimilarityQueries {
     * cluster fits an executor (production SemDeDup uses K ~ 10k–100k).
     * Assignment stages are broadcast map-side passes; only the
     * dim × K centroid recomputes shuffle. */
-  def semanticDedup(spark: SparkSession, dir: String): DataFrame =
-    semanticDedupFrom(spark, Tables.embeddings(spark, dir))
-
-  /** Frame-based core of [[semanticDedup]] (also driven by ScaleSmoke at
-    * K× corpus size). */
-  def semanticDedupFrom(spark: SparkSession, embIn: DataFrame): DataFrame = {
+  def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
+    val embIn = Tables.embeddings(spark, dir)
     val dotF = dotFast(spark) _
     val emb = embIn
       .withColumn("norm", sqrt(dotFast(spark)(col("embedding"), col("embedding"))))
@@ -1690,8 +1676,7 @@ object SimilarityQueries {
     * partitioning, so the double sums fold in the same order.
     *
     * Returns the index build (centroids, one-row codebook, corpus codes),
-    * the half that scales with the corpus; shared by the registered
-    * queries and ScaleSmoke. */
+    * the half that scales with the corpus. */
   private[graft] def ivfPqParts(spark: SparkSession, embIn: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val assign = pqAssignFast(spark) _
     // coarse centroids (c_label, centroid, c_norm): the label centroids
@@ -2024,30 +2009,17 @@ object SimilarityQueries {
     * materialized (i, j, a) frame of d² = 4096 DECIMAL(38,0) rows —
     * shared by [[embeddingPcaPower]] and [[embeddingPcaTwo]].
     *
-    * The moment pass is a GRAM-ROW FOLD, not a double posexplode: one row
-    * per (vector, i) carrying the full d-array of products xi·x computed
-    * in a tight per-row array transform, then d per-column decimal sums
-    * per i, unpivoted to the (i, j, sxx) moment rows. Same exact integers
-    * as the naive N·d² explode, but only N·d intermediate rows — the d×
-    * row-machinery cut the r5 VERDICT asked for (the shuffle was always
-    * bounded at d² keys; this removes the CPU of materializing and
-    * hashing N·d² individual rows). */
-  private def pcaMoment(spark: SparkSession, dir: String): DataFrame =
-    pcaMomentFrom(spark, Tables.embeddingsWide(spark, dir))
-
-  /** [[pcaMoment]] over an arbitrary embeddings frame — the ScaleSmoke
-    * entry point for probing the moment pass at K× corpus sizes.
-    *
-    * Moment shape, ADJUDICATED r6 (PcaProbe + ScaleSmoke datapoints):
-    * the double posexplode (N·d² narrow rows into a d²-key map-side
-    * partial agg) BEATS the per-vector Gram-row fold end-to-end. The
-    * fold's aggregate alone is faster (0.4 s vs 0.7 s at 10× sf0.1),
-    * but re-shaping its 64-wide decimal sum row back to (i, j, sxx)
-    * costs a 64-element array unpivot whose generated code dominates
-    * the stage (seconds of compile, flat 10×→25× — compile-bound, not
-    * data-bound). Narrow rows keep every stage's codegen small, and the
-    * shuffle was always bounded at d² keys either way. */
-  def pcaMomentFrom(spark: SparkSession, emb: DataFrame): DataFrame = {
+    * Moment shape, adjudicated in r6: the double posexplode (N·d² narrow
+    * rows into a d²-key map-side partial agg) BEATS the per-vector
+    * Gram-row fold end-to-end. The fold's aggregate alone is faster
+    * (0.4 s vs 0.7 s at 10× sf0.1), but re-shaping its 64-wide decimal
+    * sum row back to (i, j, sxx) costs a 64-element array unpivot whose
+    * generated code dominates the stage (seconds of compile, flat
+    * 10×→25× — compile-bound, not data-bound). Narrow rows keep every
+    * stage's codegen small, and the shuffle was always bounded at d²
+    * keys either way. */
+  private def pcaMoment(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddingsWide(spark, dir)
     val mvec = emb.select(
       transform(col("embedding"), x => round(x * 1e6).cast("long")).as("m"))
       .materializeOnce // feeds the moment pass AND the per-dim sums
@@ -2076,7 +2048,7 @@ object SimilarityQueries {
     // the checkpoint boundary hides stats, so every tiny frame is
     // broadcast EXPLICITLY — otherwise Catalyst plans sort-merge joins
     // (3 shuffles each) for 64-row sides, which dominated the wall in
-    // the r6 probe (pcaMomentFrom ~5 s of which the aggregate was 0.4 s)
+    // the r6 probe (the moment pass ~5 s, of which the aggregate was 0.4 s)
     op.join(broadcast(sx.select(col("i"), col("sx").as("sx_i"))), "i")
       .join(broadcast(sx.select(col("i").as("j"), col("sx").as("sx_j"))), "j")
       .crossJoin(broadcast(nRow))
@@ -2612,10 +2584,8 @@ object SimilarityQueries {
     * inequality hash_frac·φ < l·M·d² in DECIMAL(38,0) (the probability-
     * integral-transform trick — reproducible and cluster-size-
     * independent, no RNG); weights are exact counts. No float anywhere. */
-  def kmeansParallelInit(spark: SparkSession, dir: String): DataFrame =
-    kmeansParallelInitFrom(spark, Tables.embeddings(spark, dir))
-
-  def kmeansParallelInitFrom(spark: SparkSession, emb: DataFrame): DataFrame = {
+  def kmeansParallelInit(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
     val ldot = (a: Column, b: Column) =>
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
     val mv = emb

@@ -778,7 +778,7 @@ object StatQueries {
     // forward fold as a backward `last` over the REVERSED ordering —
     // Spark rescans an unbounded-FOLLOWING frame from every row to the
     // partition end (quadratic in partition depth; caught by the
-    // nearest_bidir ScaleSmoke probe), while this growing frame is
+    // `nearest_bidir` scale probe, SCALE_r14.json), while this growing frame is
     // incremental; current row included in both forms, so a non-null
     // current value still picks itself
     val fwd = Window.partitionBy(col("station_id"))

@@ -496,11 +496,8 @@ object TextQueries {
     * positions self-join), unigram counts from one explode; the pair
     * frame hash-joins the unigram frame twice on the token key and the
     * two one-row totals broadcast. Everything is ∝ tokens at 100 TB. */
-  def tokenPmiTop(spark: SparkSession, dir: String): DataFrame =
-    tokenPmiTopFrom(Tables.documents(spark, dir))
-
-  /** Frame-based core of [[tokenPmiTop]] over rows with a `text` column. */
-  def tokenPmiTopFrom(corpus: DataFrame): DataFrame = {
+  def tokenPmiTop(spark: SparkSession, dir: String): DataFrame = {
+    val corpus = Tables.documents(spark, dir)
     val docs = corpus
       .select(tokens(col("text")).as("toks"))
       .materializeOnce // feeds the unigram explode and both pair explodes
@@ -1534,10 +1531,8 @@ object TextQueries {
     * (count-desc, token-asc tiebreak), exact count, CMS estimate
     * (min over the 4 rows), and the overestimate, which CMS guarantees
     * is >= 0 — all BIGINT integer arithmetic. */
-  def tokenCmsFreqEst(spark: SparkSession, dir: String): DataFrame =
-    tokenCmsFreqEstFrom(spark, Tables.documents(spark, dir))
-
-  def tokenCmsFreqEstFrom(spark: SparkSession, documents: DataFrame): DataFrame = {
+  def tokenCmsFreqEst(spark: SparkSession, dir: String): DataFrame = {
+    val documents = Tables.documents(spark, dir)
     val d = 4
     val w = 1024L
     val cnt = documents
@@ -2029,10 +2024,8 @@ object TextQueries {
     * truncating integer divisions, phrase scores exact sums of those —
     * ties broken by phrase text, and phrases are distinct, so the cut
     * is deterministic. */
-  def docKeyphraseRake(spark: SparkSession, dir: String): DataFrame =
-    docKeyphraseRakeFrom(spark, Tables.documents(spark, dir))
-
-  private[graft] def docKeyphraseRakeFrom(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def docKeyphraseRake(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val phrases = docs

@@ -571,7 +571,7 @@ object TimeSeriesQueries {
     hourlyMeansFrom(validReadings(spark, dir))
 
   /** [[hourlyMeans]] over an arbitrary pre-shaped readings frame
-    * (ts, sensor_id, value_numeric) — the ScaleSmoke entry point. */
+    * (ts, sensor_id, value_numeric). */
   private[graft] def hourlyMeansFrom(valid: DataFrame): DataFrame =
     valid
       .groupBy(col("sensor_id"), date_trunc("hour", col("ts")).as("h"))
@@ -1078,10 +1078,8 @@ object TimeSeriesQueries {
     *
     * Errors with no prior reading emit NULL reading columns (ASOF LEFT).
     * gap_us is exact integer microseconds. */
-  def errorAsofReading(spark: SparkSession, dir: String): DataFrame =
-    errorAsofReadingFrom(spark, Tables.events(spark, dir))
-
-  def errorAsofReadingFrom(spark: SparkSession, ev: DataFrame): DataFrame = {
+  def errorAsofReading(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
     val rd = ev.filter(col("event_type") =!= "error" && col("value").isNotNull)
       .select(col("user_id"), col("ts"), lit(0).as("tag"), col("event_id"),
         lit(null).cast("long").as("error_id"),
@@ -1151,10 +1149,8 @@ object TimeSeriesQueries {
     * NULLs. gap_us is the exact |microsecond| distance to the picked
     * reading. Oracle: DuckDB native backward + forward ASOF LEFT JOINs
     * combined by the same nearest/tie CASE. */
-  def errorNearestReading(spark: SparkSession, dir: String): DataFrame =
-    errorNearestReadingFrom(spark, Tables.events(spark, dir))
-
-  def errorNearestReadingFrom(spark: SparkSession, ev: DataFrame): DataFrame = {
+  def errorNearestReading(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
     val rd = ev.filter(col("event_type") =!= "error" && col("value").isNotNull)
       .select(col("user_id"), col("ts"), lit(0).as("tag"), col("event_id"),
         lit(null).cast("long").as("error_id"),
@@ -1172,8 +1168,9 @@ object TimeSeriesQueries {
     // The forward carry is a backward `last` over the REVERSED ordering,
     // NOT a `first` over (currentRow, unboundedFollowing): Spark evaluates
     // an unbounded-FOLLOWING frame by rescanning from each row to the
-    // partition end — O(depth²) per user, measured 6× superlinear at the
-    // 50× ScaleSmoke point — while a growing unbounded-PRECEDING frame is
+    // partition end — O(depth²) per user, measured 6× superlinear at 50×
+    // (SCALE_r14.json `nearest_bidir` holds the fixed shape, linear) —
+    // while a growing unbounded-PRECEDING frame is
     // incremental. Reversing (ts, tag, event_id DESC) → (ts DESC, tag
     // DESC, event_id) preserves the exact row choice: same-ts readings
     // still land on the error's excluded side (tag), and within the
@@ -1274,7 +1271,7 @@ object TimeSeriesQueries {
     sensorMannKendallFromHours(hourlyMeans(spark, dir))
 
   /** [[sensorMannKendall]] over an arbitrary hours frame (sensor_id, h,
-    * x_micro) — the ScaleSmoke entry point: the pair join must stay
+    * x_micro): the pair join must stay
     * CALENDAR²-bounded however much raw data fed the hourly collapse. */
   private[graft] def sensorMannKendallFromHours(hours: DataFrame): DataFrame = {
     import QueryConventions.MaterializeSyntax

@@ -49,7 +49,7 @@ object AdmissionDrops {
     * progress sequence that covers every batch — `recentProgress`
     * truncates at `numRecentProgressUpdates` entries, so legs with
     * more triggers than the buffer must sum through a listener
-    * instead (see StreamBench's batchId-keyed listener sum). */
+    * instead, keyed by batchId. */
   def observedTotal(
       progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress],
       metric: String): Long =

@@ -33,11 +33,7 @@ import org.apache.spark.sql.SparkSession
   * ~4–5× the live SST per store; tighten the maintenance interval to
   * trade upload frequency for a lower debt ceiling. Never compare SST
   * bytes across modes at an instant — mode changes the debt phase, not
-  * the live data (rows/members are the authoritative size curve).
-  *
-  * Dev probes (`StreamBench`) deliberately do NOT route through this
-  * helper: their artifact rows are mode-stamped and A/B-comparable, so
-  * they keep explicit, env-driven configuration. */
+  * the live data (rows/members are the authoritative size curve). */
 object StateStoreDefaults {
 
   val Provider =

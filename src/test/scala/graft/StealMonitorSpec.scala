@@ -2,15 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit behavior of the body-wide contention integral: the SCALE and
-  * StreamBench artifacts stake drift adjudications on these fields, so
+/** Unit behavior of the body-wide contention integral: Bench's
+  * `sweep_steal` tuples and the contention gate read these fields, so
   * the monitor must (a) actually sample on this platform, (b) produce
   * fractions, and (c) degrade to a self-identifying zero (samples = 0)
   * rather than a fabricated calm reading when the proc read fails. No
   * Spark session involved — the monitor is pure /proc arithmetic. */
 class StealMonitorSpec extends AnyFunSuite {
 
-  test("integrates a short window and renders the artifact fields") {
+  test("integrates a short window into steal fractions") {
     val m = StealMonitor.start(periodMs = 50L)
     // burn a little CPU so the window has nonzero total jiffies
     val t0 = System.nanoTime()
@@ -25,12 +25,6 @@ class StealMonitorSpec extends AnyFunSuite {
     assert(r.stealPeak >= 0.0 && r.stealPeak <= 1.0)
     assert(r.stealPeak >= r.stealIntegral - 1e-9,
       "the worst window cannot be below the mean")
-    val json = r.jsonFields
-    assert(json.contains("\"steal_integral\":") &&
-      json.contains("\"steal_peak\":") && json.contains("\"steal_samples\":"),
-      json)
-    // fields render as bare numbers (the artifact rows splice them raw)
-    assert(!json.contains("NaN") && !json.contains("Infinity"), json)
   }
 
   test("stop is safe immediately after start (sub-period body)") {

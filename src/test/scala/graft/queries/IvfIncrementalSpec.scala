@@ -11,8 +11,8 @@ import graft.sources.Tables
   * centroids and unioning postings yields EXACTLY the index a one-shot
   * assignment of base∪delta against the same centroids would — per-vector
   * assignment is map-side, so union maintenance introduces zero drift;
-  * (2) the maintenance operation touches only delta rows. ScaleSmoke's
-  * `ivf_delta_assign` stage measures claim (2)'s wall-clock at scaled
+  * (2) the maintenance operation touches only delta rows. SCALE_r14.json's
+  * `ivf_delta_assign` rows record claim (2)'s wall-clock at 10×–50×
   * base sizes. */
 class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
 

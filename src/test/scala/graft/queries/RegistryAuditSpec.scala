@@ -221,19 +221,41 @@ class RegistryAuditSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** Every main-tree source file: (path under src/main/scala, text). */
+  private def mainSources: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) {
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).map { p =>
+        root.relativize(p).toString -> new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8)
+      }.toSeq.sortBy(_._1)
+    }
+  }
+
   // One session builder: every main and SparkSpec go through
   // graft.Sessions, so the PlanShape ↔ test-session conf match that the
   // currency test above relies on is one function, not a comment.
   test("SparkSession.builder appears under src/main/scala only in Sessions.scala") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val builders = scala.util.Using.resource(java.nio.file.Files.walk(root)) {
-      _.iterator.asScala.filter(_.toString.endsWith(".scala")).filter { p =>
-        new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8).contains("SparkSession.builder")
-      }.map(root.relativize(_).toString).toSeq.sorted
-    }
+    val builders = mainSources.collect { case (p, src) if src.contains("SparkSession.builder") => p }
     assert(builders === Seq("graft/Sessions.scala"))
+  }
+
+  // The runnable surface is the driver pair (Bench, Verify) and the plan
+  // and profile tools; perfbench is the measurement tool. A dev main
+  // beside them is code no gate runs (the retired ScaleSmoke and
+  // StreamBench figures live in SCALE_r14.json and BASELINE.md).
+  test("the objects under src/main/scala that define main are the five tools") {
+    val mains = mainSources.flatMap { case (_, src) =>
+      val code = "(?m)//.*$".r.replaceAllIn("(?s)/\\*.*?\\*/".r.replaceAllIn(src, ""), "")
+      // each main belongs to the nearest object declared above it
+      val objects = "(?m)^\\s*(?:private(?:\\[\\w+\\])?\\s+|case\\s+)*object\\s+(\\w+)".r
+        .findAllMatchIn(code).map(m => m.start -> m.group(1)).toSeq
+      "\\bdef\\s+main\\s*\\(".r.findAllMatchIn(code).map { m =>
+        objects.filter(_._1 < m.start).lastOption.fold("<none>")(_._2)
+      }
+    }.toSet
+    assert(mains === Set("Bench", "Verify", "PlanShape", "PlanDiff", "QueryProf"))
   }
 
   // One IVF core: the assignment order (rounded cosine desc, then
@@ -257,25 +279,6 @@ class RegistryAuditSpec extends AnyFunSuite with SparkSpec {
     }
     assert(owners("col(\"c_sim\").desc") === Seq("rankCentroids"))
     assert(owners("collect_list(struct(col(\"pos\"),col(\"cv\")))") === Seq("centroids"))
-  }
-
-  // ScaleSmoke times production entry points, never a hand-written copy
-  // of a query: a copy drifts from what ships (two copies once timed
-  // shapes production no longer had). Its feeds need only select,
-  // unionAll, filter and repartition, so any of these operators in its
-  // code (comments excluded) is an inline query pipeline.
-  test("ScaleSmoke builds no inline query pipeline") {
-    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "src/main/scala/graft/ScaleSmoke.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val code = "(?m)//.*$".r.replaceAllIn("(?s)/\\*.*?\\*/".r.replaceAllIn(src, ""), "")
-    val found = Seq("groupBy(", ".join(", "Window", "explode(", "posexplode(")
-      .filter(code.contains)
-    assert(found.isEmpty, s"inline operators in ScaleSmoke.scala: $found")
-    // the selector validates against Probes, so a name there with no
-    // `time` call would select nothing and exit 0
-    val timed = "time\\(\"([a-z0-9_]+)\"".r.findAllMatchIn(code).map(_.group(1)).toSeq
-    assert(timed === graft.ScaleSmoke.Probes)
   }
 
   test("the shared test session carries Bench's confs at 4 cores") {
@@ -465,7 +468,7 @@ class RegistryAuditSpec extends AnyFunSuite with SparkSpec {
     "calibration_isotonic",  // PAV minimax joins over the 10-row bin frame
     // generated hourly spine × small station dim
     "sensor_hourly_spine",
-    // bounded pair stage (Σ basket², measured linear to 50× in ScaleSmoke)
+    // bounded pair stage (Σ basket², measured linear to 50×: SCALE_r14.json `copurchase_pairs`)
     "part_pair_lift", "part_triangles",
     // same pair stage as part_pair_lift; the broadcast side is the
     // one-row n_orders frame crossed onto the rule aggregate

@@ -7,7 +7,8 @@ import graft.SparkSpec
 
 /** The LSH hot-bucket skew guard on the banded SimHash join: a bucket of
   * b docs contributes b²/2 candidate pairs, so boilerplate-heavy corpora
-  * (or heavy replication — the ScaleSmoke 50× pathology, 324M candidates)
+  * (or heavy replication — 324M candidates at 50×, SCALE_r14.json
+  * `simhash_banded_cand`)
   * need the cap to keep the pair join bounded. */
 class SimhashSkewGuardSpec extends AnyFunSuite with SparkSpec {
 

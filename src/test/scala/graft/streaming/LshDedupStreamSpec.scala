@@ -31,8 +31,7 @@ class LshDedupStreamSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** Corpus with planted near-dups: every doc_id < 40 gets a replica
-    * (text + suffix) at doc_id + 10000 — the ScaleSmoke perturbation,
-    * which keeps Jaccard high enough to collide in at least one band
+    * (text + suffix) at doc_id + 10000, a perturbation that keeps Jaccard high enough to collide in at least one band
     * for most pairs without being exact dups. */
   private def corpus() = {
     val d0 = graft.sources.Tables.documents(spark, dir)
