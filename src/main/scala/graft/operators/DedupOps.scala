@@ -147,9 +147,6 @@ object DedupOps {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
 
-  def lshBands(spark: SparkSession, docs: DataFrame): DataFrame =
-    bandsFromShingles(spark, docShingles(docs))
-
   /** Candidate pairs: same (band, band_key) in any band, deduplicated.
     *
     * `maxBucket` is the same hot-bucket skew guard as the banded SimHash

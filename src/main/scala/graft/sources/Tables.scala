@@ -51,11 +51,6 @@ object Tables {
   def ordersWide(spark: SparkSession, dir: String): DataFrame =
     fanOutNarrowScan(orders(spark, dir), col("o_orderkey"))
 
-  /** [[lineitem]] fanned out on l_orderkey — for the self-join-heavy
-    * basket/graph builders. */
-  def lineitemWide(spark: SparkSession, dir: String): DataFrame =
-    fanOutNarrowScan(lineitem(spark, dir), col("l_orderkey"))
-
   /** [[embeddings]] fanned out on vec_id — ONLY for decimal-exact
     * consumers (the PCA moment pass); the float-avg Lloyd paths keep
     * their scan partitioning so double-sum accumulation order is
