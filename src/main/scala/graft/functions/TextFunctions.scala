@@ -40,6 +40,41 @@ object TextFunctions {
 
   def tokenCount(c: Column): Column = size(tokens(c))
 
+  // ---- DuckDB mirrors, spliced into the oracle SQL -------------------------
+  // Each fragment below is the one SQL spelling of the Spark definition
+  // above it; an oracle that tokenizes or scores text splices these
+  // instead of writing its own copy.
+
+  /** [[Ws]] as a DuckDB string expression. */
+  private val WsSql = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
+
+  /** [[tokens]] of the `text` column as a DuckDB VARCHAR[]. */
+  val tokensSql: String =
+    s"CASE WHEN length(trim(text, $WsSql)) = 0 THEN []::VARCHAR[] " +
+      s"ELSE string_split_regex(trim(text, $WsSql), '\\s+') END"
+
+  /** [[tokenCount]] of the `text` column. */
+  val tokenCountSql: String = s"len($tokensSql)"
+
+  /** A stopword list as a DuckDB list literal. */
+  def wordsSql(words: Seq[String]): String = words.map(w => s"'$w'").mkString("[", ", ", "]")
+
+  /** [[stopwordRatio]] over the VARCHAR[] expression `toks`. */
+  def stopwordRatioSql(toks: String, words: Seq[String] = enStopwords): String =
+    s"""CASE WHEN len($toks) > 0
+       |THEN CAST(len(list_filter($toks, x -> list_contains(${wordsSql(words)}, x))) AS DOUBLE) / len($toks)
+       |ELSE 0.0 END""".stripMargin
+
+  /** [[alphaRatio]] of the VARCHAR expression `text`. */
+  def alphaRatioSql(text: String = "text"): String =
+    s"""CASE WHEN length($text) > 0
+       |THEN CAST(length(regexp_replace(lower($text), '[^a-z]', '', 'g')) AS DOUBLE) / length($text)
+       |ELSE 0.0 END""".stripMargin
+
+  /** [[qualityScore]] over three SQL expressions (unrounded). */
+  def qualityScoreSql(nTokens: String, alphaR: String, stopR: String): String =
+    s"0.3 * least(1.0, CAST($nTokens AS DOUBLE) / 50.0) + 0.3 * $alphaR + 0.4 * least(1.0, $stopR * 5.0)"
+
   /** BPE-ish subword count: runs of letters, runs of digits, or single
     * punctuation marks each count as one token. */
   def bpeTokenCount(c: Column): Column =
@@ -50,6 +85,11 @@ object TextFunctions {
     val lst = array(words.map(lit): _*)
     size(filter(toks, t => array_contains(lst, t)))
   }
+
+  /** Share of the `nTokens` tokens that are in `words`; 0.0 for no tokens. */
+  def stopwordRatio(toks: Column, nTokens: Column, words: Seq[String] = enStopwords): Column =
+    when(nTokens > 0, stopwordCount(toks, words).cast("double") / nTokens)
+      .otherwise(lit(0.0))
 
   /** Fraction of [a-z] characters after lowercasing; 0.0 for empty. */
   def alphaRatio(c: Column): Column =

@@ -722,7 +722,7 @@ object AnalyticsQueries {
   }
 
   private val partPairLiftSql: String =
-    """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    s"""WITH $basketsSql,
       |n AS (SELECT count(*) AS n_orders FROM orders),
       |supp AS (SELECT pk, count(*) AS n_part FROM li GROUP BY pk),
       |pairs AS (
@@ -797,7 +797,7 @@ object AnalyticsQueries {
   }
 
   private val partAssocRulesSql: String =
-    """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    s"""WITH $basketsSql,
       |n AS (SELECT count(*) AS n_orders FROM orders),
       |supp AS (SELECT pk, count(*) AS n_part FROM li GROUP BY pk),
       |pairs AS (
@@ -1154,11 +1154,9 @@ object AnalyticsQueries {
   }
 
   private val partTrianglesSql: String =
-    """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    s"""WITH $basketsSql,
       |e AS (
-      |  SELECT a.pk AS src, b.pk AS dst
-      |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      |  $coPurchaseEdgesSql),
       |ne AS (SELECT count(*) AS n_edges FROM e),
       |deg AS (SELECT v, count(*) AS d
       |        FROM (SELECT src AS v FROM e UNION ALL SELECT dst FROM e)
@@ -1253,11 +1251,9 @@ object AnalyticsQueries {
          |e$i AS MATERIALIZED (SELECT src, dst FROM e${i - 1}
          |        WHERE src IN (SELECT v FROM a$i) AND dst IN (SELECT v FROM a$i))""".stripMargin
     }.mkString(",\n")
-    s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    s"""WITH $basketsSql,
        |e0 AS MATERIALIZED (
-       |  SELECT a.pk AS src, b.pk AS dst
-       |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-       |  GROUP BY 1, 2 HAVING count(*) >= 2),
+       |  $coPurchaseEdgesSql),
        |$rounds,
        |fd AS (SELECT v, count(*) AS core_deg
        |       FROM (SELECT src AS v FROM e12 UNION ALL SELECT dst FROM e12)
@@ -1302,11 +1298,9 @@ object AnalyticsQueries {
   }
 
   private val partAssortativitySql: String =
-    """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    s"""WITH $basketsSql,
       |e AS (
-      |  SELECT a.pk AS src, b.pk AS dst
-      |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      |  $coPurchaseEdgesSql),
       |deg AS (SELECT v, count(*) AS d
       |        FROM (SELECT src AS v FROM e UNION ALL SELECT dst FROM e)
       |        GROUP BY v),
@@ -1335,6 +1329,17 @@ object AnalyticsQueries {
   private def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
     coPurchaseEdgesFrom(spark, Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
+
+  /** DuckDB mirror of the (ok, pk) baskets: the `li` CTE, one row per
+    * distinct (order, part). */
+  private def basketsSql: String =
+    "li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)"
+
+  /** DuckDB mirror of [[coPurchaseEdgesFrom]] over `li`: the (src, dst)
+    * part pairs, src < dst, that share at least two orders. */
+  private def coPurchaseEdgesSql: String =
+    "SELECT a.pk AS src, b.pk AS dst FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk " +
+      "GROUP BY 1, 2 HAVING count(*) >= 2"
 
   /** [[coPurchaseEdges]] over an arbitrary (ok, pk) basket frame.
     *
@@ -1527,11 +1532,9 @@ object AnalyticsQueries {
   }
 
   private val partLocalClusteringSql: String =
-    """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    s"""WITH $basketsSql,
       |e AS (
-      |  SELECT a.pk AS src, b.pk AS dst
-      |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      |  $coPurchaseEdgesSql),
       |deg AS (SELECT v, count(*) AS d
       |        FROM (SELECT src AS v FROM e UNION ALL SELECT dst FROM e)
       |        GROUP BY v),
@@ -2385,6 +2388,29 @@ object AnalyticsQueries {
       spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     lpaStateFrom(coPurchaseEdges(spark, dir))
 
+  /** DuckDB mirror of [[lpaState]]: CTEs li, e0 (edges), und (both
+    * directions), and the label rounds l0..l<LpaRounds>. */
+  private def lpaStateCtes: String = {
+    val rounds = (1 to LpaRounds).map { i =>
+      s"""l$i AS MATERIALIZED (
+         |  SELECT v, nl AS lbl FROM (
+         |    SELECT v, nl, row_number() OVER (PARTITION BY v
+         |                    ORDER BY c DESC, nl) AS rn
+         |    FROM (SELECT und.v, l${i - 1}.lbl AS nl, count(*) AS c
+         |          FROM und JOIN l${i - 1} ON l${i - 1}.v = und.u
+         |          GROUP BY 1, 2))
+         |  WHERE rn = 1)""".stripMargin
+    }.mkString(",\n")
+    s"""$basketsSql,
+       |e0 AS MATERIALIZED (
+       |  $coPurchaseEdgesSql),
+       |und AS MATERIALIZED (
+       |  SELECT src AS v, dst AS u FROM e0
+       |  UNION ALL SELECT dst AS v, src AS u FROM e0),
+       |l0 AS MATERIALIZED (SELECT DISTINCT v, v AS lbl FROM und),
+       |$rounds""".stripMargin
+  }
+
   private def lpaStateFrom(
       edges0: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val edges = edges0
@@ -2495,27 +2521,8 @@ object AnalyticsQueries {
       .orderBy("community")
   }
 
-  private val partCommunityModularitySql: String = {
-    val rounds = (1 to LpaRounds).map { i =>
-      s"""l$i AS MATERIALIZED (
-         |  SELECT v, nl AS lbl FROM (
-         |    SELECT v, nl, row_number() OVER (PARTITION BY v
-         |                    ORDER BY c DESC, nl) AS rn
-         |    FROM (SELECT und.v, l${i - 1}.lbl AS nl, count(*) AS c
-         |          FROM und JOIN l${i - 1} ON l${i - 1}.v = und.u
-         |          GROUP BY 1, 2))
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-       |e0 AS MATERIALIZED (
-       |  SELECT a.pk AS src, b.pk AS dst
-       |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-       |  GROUP BY 1, 2 HAVING count(*) >= 2),
-       |und AS MATERIALIZED (
-       |  SELECT src AS v, dst AS u FROM e0
-       |  UNION ALL SELECT dst AS v, src AS u FROM e0),
-       |l0 AS MATERIALIZED (SELECT DISTINCT v, v AS lbl FROM und),
-       |$rounds,
+  private val partCommunityModularitySql: String =
+    s"""WITH $lpaStateCtes,
        |mf AS (SELECT count(*) AS m FROM e0),
        |deg AS (SELECT v, count(*) AS d FROM und GROUP BY v),
        |ds AS (
@@ -2552,35 +2559,14 @@ object AnalyticsQueries {
        |       tot.q_total_ppm
        |FROM per CROSS JOIN tot
        |ORDER BY community""".stripMargin
-  }
 
-  private val partLabelPropagationSql: String = {
-    val rounds = (1 to LpaRounds).map { i =>
-      s"""l$i AS MATERIALIZED (
-         |  SELECT v, nl AS lbl FROM (
-         |    SELECT v, nl, row_number() OVER (PARTITION BY v
-         |                    ORDER BY c DESC, nl) AS rn
-         |    FROM (SELECT und.v, l${i - 1}.lbl AS nl, count(*) AS c
-         |          FROM und JOIN l${i - 1} ON l${i - 1}.v = und.u
-         |          GROUP BY 1, 2))
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-       |e0 AS MATERIALIZED (
-       |  SELECT a.pk AS src, b.pk AS dst
-       |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-       |  GROUP BY 1, 2 HAVING count(*) >= 2),
-       |und AS MATERIALIZED (
-       |  SELECT src AS v, dst AS u FROM e0
-       |  UNION ALL SELECT dst AS v, src AS u FROM e0),
-       |l0 AS MATERIALIZED (SELECT DISTINCT v, v AS lbl FROM und),
-       |$rounds,
+  private val partLabelPropagationSql: String =
+    s"""WITH $lpaStateCtes,
        |s AS (SELECT lbl, count(*) AS community_size FROM l$LpaRounds GROUP BY lbl)
        |SELECT l.v AS part_id, l.lbl AS community,
        |       CAST(s.community_size AS BIGINT) AS community_size
        |FROM l$LpaRounds l JOIN s USING (lbl)
        |ORDER BY part_id""".stripMargin
-  }
 
   /** Exact Gini coefficient of per-customer revenue + top-decile share —
     * the inequality summary behind "what fraction of revenue rides on

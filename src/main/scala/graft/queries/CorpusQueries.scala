@@ -30,10 +30,9 @@ object CorpusQueries {
 
   /** Whitespace-token CTE shared by the oracles (doc_id, source, toks). */
   private val toksCte =
-    """t AS (
+    s"""t AS (
       |  SELECT doc_id, source,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         $tokensSql AS toks
       |  FROM documents)""".stripMargin
 
   // ---------------------------------------------------------------- entropy

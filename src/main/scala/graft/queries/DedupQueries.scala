@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.QueryConventions.MaterializeSyntax
 
+import graft.functions.TextFunctions
 import graft.operators.DedupOps
 import graft.operators.DedupOps._
 import graft.sources.Tables
@@ -23,10 +24,9 @@ object DedupQueries {
   // ---- shared oracle fragments -------------------------------------------
 
   private val toksCte =
-    """toks AS (
+    s"""toks AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         ${TextFunctions.tokensSql} AS toks
       |  FROM documents)""".stripMargin
 
   /** [[toksCte]] over the deterministic 25% md5 hash-sample — the tuning

@@ -550,12 +550,10 @@ object PipelineQueries {
       .orderBy("source")
   }
 
-  private val sourceRankSpearmanSql: String = {
-    val ws = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
+  private val sourceRankSpearmanSql: String =
     s"""WITH base AS (
        |  SELECT source, n_chars AS v,
-       |         CASE WHEN length(trim(text, $ws)) = 0 THEN 0
-       |              ELSE len(string_split_regex(trim(text, $ws), '\\s+')) END AS w
+       |         ${TextFunctions.tokenCountSql} AS w
        |  FROM documents),
        |hx AS (
        |  SELECT source, v,
@@ -595,7 +593,6 @@ object PipelineQueries {
        |       END AS pearson_r
        |FROM m
        |ORDER BY source""".stripMargin
-  }
 
   /** Epoch/repeat schedule — the data-repetition plan a training run is
     * actually configured with: given a token budget (2× the corpus here)
@@ -630,10 +627,9 @@ object PipelineQueries {
   }
 
   private val sourceEpochScheduleSql: String =
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT source, count(*) AS n_docs,
-      |         sum(CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN 0
-      |                  ELSE len(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+')) END) AS src_tokens
+      |         sum(${TextFunctions.tokenCountSql}) AS src_tokens
       |  FROM documents GROUP BY source),
       |t AS (SELECT CAST(sum(src_tokens) AS BIGINT) AS total FROM c),
       |u AS (
@@ -713,8 +709,7 @@ object PipelineQueries {
   private val sourceUnimaxAllocSql: String =
     s"""WITH c AS (
        |  SELECT source,
-       |         sum(CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN 0
-       |                  ELSE len(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+')) END) AS src_tokens
+       |         sum(${TextFunctions.tokenCountSql}) AS src_tokens
        |  FROM documents GROUP BY source),
        |k AS (SELECT source, CAST(src_tokens AS BIGINT) AS src_tokens,
        |             CAST(src_tokens * $UnimaxEpochCap AS BIGINT) AS cap_tokens FROM c),
@@ -773,10 +768,7 @@ object PipelineQueries {
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("alpha_ratio", TextFunctions.alphaRatio(col("text")))
       .withColumn("stop_ratio",
-        when(col("n_tokens") > 0,
-          TextFunctions.stopwordCount(col("toks"), TextFunctions.enStopwords)
-            .cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        TextFunctions.stopwordRatio(col("toks"), col("n_tokens")))
       .withColumn("q", round(score, 6))
       .select(col("doc_id"), col("source"), col("q"))
       .materializeOnce // feeds the per-source ranks AND the global boundary frame
@@ -797,27 +789,19 @@ object PipelineQueries {
   }
 
   private val qualityQuantileNormSql: String = {
-    val stopList = TextFunctions.enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
     s"""WITH t AS (
        |  SELECT doc_id, source, text,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         ${TextFunctions.tokensSql} AS toks
        |  FROM documents),
        |m AS (
        |  SELECT doc_id, source,
        |         CAST(len(toks) AS INT) AS n_tokens,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS alpha_ratio,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS stop_ratio
+       |         ${TextFunctions.alphaRatioSql()} AS alpha_ratio,
+       |         ${TextFunctions.stopwordRatioSql("toks")} AS stop_ratio
        |  FROM t),
        |q AS (
        |  SELECT doc_id, source,
-       |         round(0.3 * least(1.0, CAST(n_tokens AS DOUBLE) / 50.0)
-       |               + 0.3 * alpha_ratio
-       |               + 0.4 * least(1.0, stop_ratio * 5.0), 6) AS q
+       |         round(${TextFunctions.qualityScoreSql("n_tokens", "alpha_ratio", "stop_ratio")}, 6) AS q
        |  FROM m),
        |tiled AS (
        |  SELECT doc_id, source, q,
@@ -853,10 +837,7 @@ object PipelineQueries {
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("alpha_ratio", TextFunctions.alphaRatio(col("text")))
       .withColumn("stop_ratio",
-        when(col("n_tokens") > 0,
-          TextFunctions.stopwordCount(col("toks"), TextFunctions.enStopwords)
-            .cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        TextFunctions.stopwordRatio(col("toks"), col("n_tokens")))
       .withColumn("quality_score", round(score, 6))
     GlobalWindow.ntile(scored, 10, "decile")(
       col("quality_score"), col("doc_id"))
@@ -870,27 +851,19 @@ object PipelineQueries {
   }
 
   private val docQualityDecilesSql: String = {
-    val stopList = TextFunctions.enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
     s"""WITH t AS (
        |  SELECT doc_id, text, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         ${TextFunctions.tokensSql} AS toks
        |  FROM documents),
        |m AS (
        |  SELECT doc_id, n_chars,
        |         CAST(len(toks) AS INT) AS n_tokens,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS alpha_ratio,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS stop_ratio
+       |         ${TextFunctions.alphaRatioSql()} AS alpha_ratio,
+       |         ${TextFunctions.stopwordRatioSql("toks")} AS stop_ratio
        |  FROM t),
        |q AS (
        |  SELECT doc_id, n_chars,
-       |         round(0.3 * least(1.0, CAST(n_tokens AS DOUBLE) / 50.0)
-       |               + 0.3 * alpha_ratio
-       |               + 0.4 * least(1.0, stop_ratio * 5.0), 6) AS quality_score
+       |         round(${TextFunctions.qualityScoreSql("n_tokens", "alpha_ratio", "stop_ratio")}, 6) AS quality_score
        |  FROM m),
        |d AS (
        |  SELECT n_chars, quality_score,
@@ -963,8 +936,7 @@ object PipelineQueries {
   private val sourceJsDivergenceSql: String =
     s"""WITH t AS (
        |  SELECT source,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         ${TextFunctions.tokensSql} AS toks
        |  FROM documents),
        |wc AS (SELECT source, unnest(toks) AS w FROM t),
        |cnt AS MATERIALIZED (SELECT source, w, count(*) AS c FROM wc GROUP BY 1, 2),
@@ -1023,10 +995,7 @@ object PipelineQueries {
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("alpha_ratio", TextFunctions.alphaRatio(col("text")))
       .withColumn("stop_ratio",
-        when(col("n_tokens") > 0,
-          TextFunctions.stopwordCount(col("toks"), TextFunctions.enStopwords)
-            .cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        TextFunctions.stopwordRatio(col("toks"), col("n_tokens")))
       .withColumn("quality_score", round(score, 6))
       .select("doc_id", "quality_score")
     val spans = DedupQueries.docDupSpans(spark, dir)
@@ -1045,30 +1014,22 @@ object PipelineQueries {
   }
 
   private val dupRateByQualitySql: String = {
-    val stopList = TextFunctions.enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
     val k = 8 // DedupQueries.DupSpanK — the span gram width, mirrored
     val leadDefs = (1 until k).map(i => s"lead(tk, $i) OVER w AS t$i").mkString(", ")
     val gramArgs = ("tk" +: (1 until k).map(i => s"t$i")).mkString(", ")
     s"""WITH t AS (
        |  SELECT doc_id, text,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         ${TextFunctions.tokensSql} AS toks
        |  FROM documents),
        |m AS (
        |  SELECT doc_id,
        |         CAST(len(toks) AS INT) AS n_tokens,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS alpha_ratio,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS stop_ratio
+       |         ${TextFunctions.alphaRatioSql()} AS alpha_ratio,
+       |         ${TextFunctions.stopwordRatioSql("toks")} AS stop_ratio
        |  FROM t),
        |q AS (
        |  SELECT doc_id,
-       |         round(0.3 * least(1.0, CAST(n_tokens AS DOUBLE) / 50.0)
-       |               + 0.3 * alpha_ratio
-       |               + 0.4 * least(1.0, stop_ratio * 5.0), 6) AS quality_score
+       |         round(${TextFunctions.qualityScoreSql("n_tokens", "alpha_ratio", "stop_ratio")}, 6) AS quality_score
        |  FROM m),
        |tok AS (
        |  SELECT doc_id, CAST(u.pos - 1 AS INT) AS pos, u.tk AS tk
@@ -1152,8 +1113,7 @@ object PipelineQueries {
 
   private val vocabZipfFitSql: String =
     s"""WITH tok AS (
-       |  SELECT unnest(CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |                     ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END) AS token
+       |  SELECT unnest(${TextFunctions.tokensSql}) AS token
        |  FROM documents),
        |f AS (SELECT token, count(*) AS freq FROM tok GROUP BY token),
        |r AS (
@@ -1204,15 +1164,12 @@ object PipelineQueries {
       .orderBy("doc_id", "chunk_idx")
   }
 
-  /** Canonical tokenization CTE `t(doc_id, toks)` — one copy per module
-    * (DedupQueries keeps its own); it must stay in lockstep with
-    * `TextFunctions.tokens` on the Spark side, so every consumer here
-    * references THIS val rather than inlining the fragment. */
+  /** Tokenization CTE `t(doc_id, toks)` over the
+    * [[TextFunctions.tokensSql]] mirror, shared by the chunking oracles. */
   private val toksCteSql: String =
-    """t AS (
+    s"""t AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         ${TextFunctions.tokensSql} AS toks
       |  FROM documents)""".stripMargin
 
   /** Shared chunking CTEs ending in `ch(doc_id, chunk_idx, n_chunk_tokens,
@@ -1422,10 +1379,7 @@ object PipelineQueries {
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("alpha_ratio", TextFunctions.alphaRatio(col("text")))
       .withColumn("stop_ratio",
-        when(col("n_tokens") > 0,
-          TextFunctions.stopwordCount(col("toks"), TextFunctions.enStopwords)
-            .cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        TextFunctions.stopwordRatio(col("toks"), col("n_tokens")))
       .withColumn("quality_score", round(score, 6))
       .filter(pmod(DedupOps.h60(col("text")), lit(10000L)).cast("double")
         < floor(col("quality_score") * 10000.0))
@@ -1434,27 +1388,19 @@ object PipelineQueries {
   }
 
   private val docQualitySampleSql: String = {
-    val stopList = TextFunctions.enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
     s"""WITH t AS (
        |  SELECT doc_id, text, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         ${TextFunctions.tokensSql} AS toks
        |  FROM documents),
        |m AS (
        |  SELECT doc_id, text, n_chars,
        |         CAST(len(toks) AS INT) AS n_tokens,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS alpha_ratio,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS stop_ratio
+       |         ${TextFunctions.alphaRatioSql()} AS alpha_ratio,
+       |         ${TextFunctions.stopwordRatioSql("toks")} AS stop_ratio
        |  FROM t),
        |q AS (
        |  SELECT doc_id, n_chars, text,
-       |         round(0.3 * least(1.0, CAST(n_tokens AS DOUBLE) / 50.0)
-       |               + 0.3 * alpha_ratio
-       |               + 0.4 * least(1.0, stop_ratio * 5.0), 6) AS quality_score
+       |         round(${TextFunctions.qualityScoreSql("n_tokens", "alpha_ratio", "stop_ratio")}, 6) AS quality_score
        |  FROM m)
        |SELECT doc_id, quality_score, n_chars FROM q
        |WHERE CAST(${hexpr.format("text")} % 10000 AS DOUBLE) < floor(quality_score * 10000.0)
@@ -1561,10 +1507,9 @@ object PipelineQueries {
       .limit(20)
 
   private val topTokensSql: String =
-    """SELECT token, count(*) AS df FROM (
+    s"""SELECT token, count(*) AS df FROM (
       |  SELECT doc_id, unnest(list_distinct(
-      |    CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |         ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END)) AS token
+      |    ${TextFunctions.tokensSql})) AS token
       |  FROM documents)
       |GROUP BY token
       |ORDER BY df DESC, token
@@ -1643,10 +1588,9 @@ object PipelineQueries {
   }
 
   private val tfidfTopSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id, unnest(
-      |    CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |         ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END) AS token
+      |    ${TextFunctions.tokensSql}) AS token
       |  FROM documents),
       |terms AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY doc_id, token),
       |dfreq AS (SELECT token, count(DISTINCT doc_id) AS df FROM terms GROUP BY token),
@@ -1708,9 +1652,7 @@ object PipelineQueries {
     val scored = docs
       .withColumn("n_tokens", size(toks))
       .withColumn("stop_ratio",
-        when(col("n_tokens") > 0,
-          TextFunctions.stopwordCount(toks, TextFunctions.enStopwords).cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        TextFunctions.stopwordRatio(toks, col("n_tokens")))
       .withColumn("quality",
         TextFunctions.qualityScore(col("n_tokens"), TextFunctions.alphaRatio(col("text")), col("stop_ratio")))
       .filter(col("quality") >= 0.5 && col("n_tokens") >= 20)
@@ -1771,10 +1713,7 @@ object PipelineQueries {
     val flags = docs
       .withColumn("n_tokens", size(toks))
       .withColumn("stop_ratio",
-        when(col("n_tokens") > 0,
-          TextFunctions.stopwordCount(toks, TextFunctions.enStopwords)
-            .cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        TextFunctions.stopwordRatio(toks, col("n_tokens")))
       .withColumn("quality",
         TextFunctions.qualityScore(col("n_tokens"),
           TextFunctions.alphaRatio(col("text")), col("stop_ratio")))
@@ -1806,11 +1745,9 @@ object PipelineQueries {
   private val corpusYieldReportSql: String = {
     import graft.operators.DedupOps.{BandRows, P, seeds}
     val seedsValues = seeds.map { case (k, a, b) => s"($k, $a, $b)" }.mkString(", ")
-    val stopList = TextFunctions.enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
     s"""WITH toks AS (
        |  SELECT doc_id, text,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         ${TextFunctions.tokensSql} AS toks
        |  FROM documents),
        |sh AS (
        |  SELECT doc_id,
@@ -1844,13 +1781,9 @@ object PipelineQueries {
        |flags AS (
        |  SELECT t.doc_id,
        |         CAST(len(t.toks) AS INT) AS n_tokens,
-       |         0.3 * least(1.0, CAST(len(t.toks) AS DOUBLE) / 50.0)
-       |           + 0.3 * (CASE WHEN length(t.text) > 0
-       |                    THEN CAST(length(regexp_replace(lower(t.text), '[^a-z]', '', 'g')) AS DOUBLE) / length(t.text)
-       |                    ELSE 0.0 END)
-       |           + 0.4 * least(1.0, (CASE WHEN len(t.toks) > 0
-       |                    THEN CAST(len(list_filter(t.toks, x -> list_contains($stopList, x))) AS DOUBLE) / len(t.toks)
-       |                    ELSE 0.0 END) * 5.0) AS quality,
+       |         ${TextFunctions.qualityScoreSql("len(t.toks)",
+                 s"(${TextFunctions.alphaRatioSql("t.text")})",
+                 s"(${TextFunctions.stopwordRatioSql("t.toks")})")} AS quality,
        |         CASE WHEN l.doc_id IS NULL THEN 0 ELSE 1 END AS is_loser,
        |         CASE WHEN c.doc_id IS NULL THEN 0 ELSE 1 END AS is_contam
        |  FROM toks t
@@ -1887,11 +1820,9 @@ object PipelineQueries {
   private val cleanCorpusCtes: String = {
     import graft.operators.DedupOps.{BandRows, P, seeds}
     val seedsValues = seeds.map { case (k, a, b) => s"($k, $a, $b)" }.mkString(", ")
-    val stopList = TextFunctions.enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
     s"""toks AS (
        |  SELECT doc_id, text,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         ${TextFunctions.tokensSql} AS toks
        |  FROM documents),
        |sh AS (
        |  SELECT doc_id,
@@ -1921,18 +1852,12 @@ object PipelineQueries {
        |scored AS (
        |  SELECT doc_id,
        |         CAST(len(toks) AS INT) AS n_tokens,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS alpha_ratio,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS stop_ratio
+       |         ${TextFunctions.alphaRatioSql()} AS alpha_ratio,
+       |         ${TextFunctions.stopwordRatioSql("toks")} AS stop_ratio
        |  FROM toks),
        |q AS (
        |  SELECT doc_id, n_tokens,
-       |         0.3 * least(1.0, CAST(n_tokens AS DOUBLE) / 50.0)
-       |           + 0.3 * alpha_ratio
-       |           + 0.4 * least(1.0, stop_ratio * 5.0) AS quality
+       |         ${TextFunctions.qualityScoreSql("n_tokens", "alpha_ratio", "stop_ratio")} AS quality
        |  FROM scored)""".stripMargin
   }
 
@@ -2334,8 +2259,7 @@ object PipelineQueries {
   private val docDsirWeightsSql: String =
     s"""WITH t AS (
        |  SELECT doc_id, lang, lang = 'en' AS is_t,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         ${TextFunctions.tokensSql} AS toks
        |  FROM documents),
        |e AS (
        |  SELECT doc_id, is_t,
@@ -2934,12 +2858,10 @@ object PipelineQueries {
       expr("ssb_micro * 1000000 div (ssb_micro + ssw_micro)").as("eta_sq_ppm"))
   }
 
-  private val sourceAnovaFSql: String = {
-    val ws = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
+  private val sourceAnovaFSql: String =
     s"""WITH base AS (
        |  SELECT source,
-       |         CASE WHEN length(trim(text, $ws)) = 0 THEN 0
-       |              ELSE len(string_split_regex(trim(text, $ws), '\\s+')) END AS w
+       |         ${TextFunctions.tokenCountSql} AS w
        |  FROM documents),
        |per AS (
        |  SELECT source, count(*) AS n_i, sum(w) AS s_i,
@@ -2966,7 +2888,6 @@ object PipelineQueries {
        |       CAST(ssb_micro * 1000000 // (ssb_micro + ssw_micro) AS BIGINT)
        |         AS eta_sq_ppm
        |FROM d""".stripMargin
-  }
 
   private val PermSeeds = 200
 
@@ -3041,13 +2962,11 @@ object PipelineQueries {
   }
 
   private val sourcePermutationTestSql: String = {
-    val ws = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
     val h = hexpr.format("CAST(u.seed AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")
     s"""WITH base AS (
        |  SELECT doc_id,
        |         CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS grp,
-       |         CASE WHEN length(trim(text, $ws)) = 0 THEN 0
-       |              ELSE len(string_split_regex(trim(text, $ws), '\\s+')) END AS w
+       |         ${TextFunctions.tokenCountSql} AS w
        |  FROM documents WHERE source IN ('src0', 'src1')),
        |obs AS (
        |  SELECT sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS n0,

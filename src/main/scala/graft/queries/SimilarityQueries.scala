@@ -71,19 +71,27 @@ object SimilarityQueries {
       .orderBy("q_id", "rank")
   }
 
-  private val knnBruteSql: String =
-    s"""WITH pairs AS (
+  /** DuckDB mirror of [[knnBrute]], the exact top-5 truth the recall
+    * oracles grade against: CTE `bt` (q_id, vec_id, rank, cos_sim) over
+    * the query × corpus pairs `bp`. */
+  private val bruteTopCtes: String =
+    s"""bp AS (
        |  SELECT b.vec_id AS q_id, a.vec_id AS vec_id, round($cosSql, 6) AS cos_sim
        |  FROM embeddings a
        |  CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) b
        |  WHERE a.vec_id <> b.vec_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos_sim,
-       |         row_number() OVER (PARTITION BY q_id
-       |                            ORDER BY cos_sim DESC, vec_id) AS rank
-       |  FROM pairs)
+       |bt AS (
+       |  SELECT q_id, vec_id, rank, cos_sim FROM (
+       |    SELECT q_id, vec_id, cos_sim,
+       |           row_number() OVER (PARTITION BY q_id
+       |                              ORDER BY cos_sim DESC, vec_id) AS rank
+       |    FROM bp)
+       |  WHERE rank <= 5)""".stripMargin
+
+  private val knnBruteSql: String =
+    s"""WITH $bruteTopCtes
        |SELECT q_id, rank, vec_id, cos_sim
-       |FROM ranked WHERE rank <= 5
+       |FROM bt
        |ORDER BY q_id, rank""".stripMargin
 
   /** Metadata-FILTERED vector search — the vector-DB feature every
@@ -352,23 +360,15 @@ object SimilarityQueries {
       |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
       |         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
       |  FROM embeddings),
-      |cpos AS (
-      |  SELECT label, u.pos AS pos, round(avg(u.v), 6) AS cv
-      |  FROM embeddings,
-      |       LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-      |                       generate_subscripts(embedding, 1) AS pos) u
-      |  GROUP BY label, pos),
-      |c AS (SELECT label, list(cv ORDER BY pos) AS centroid FROM cpos GROUP BY label),
-      |cn AS (SELECT label, centroid,
-      |              sqrt(list_dot_product(centroid, centroid)) AS c_norm FROM c),
+      |${centCtes(0, "e", "label")},
       |q AS (SELECT vec_id AS q_id, emb AS q_emb, norm AS q_norm FROM e WHERE vec_id < 10),
       |assign AS (
       |  SELECT q_id, q_emb, q_norm, label FROM (
-      |    SELECT q.q_id, q.q_emb, q.q_norm, cn.label,
+      |    SELECT q.q_id, q.q_emb, q.q_norm, cn.cl AS label,
       |           row_number() OVER (PARTITION BY q.q_id
       |             ORDER BY round(list_dot_product(q.q_emb, cn.centroid) / (q.q_norm * cn.c_norm), 6) DESC,
-      |                      cn.label) AS rn
-      |    FROM q CROSS JOIN cn)
+      |                      cn.cl) AS rn
+      |    FROM q CROSS JOIN c0n cn)
       |  WHERE rn <= $probes),
       |hits AS (
       |  SELECT a.q_id, a.label, e.vec_id,
@@ -621,18 +621,21 @@ object SimilarityQueries {
   }
 
   // Oracle CTE builders mirroring one Lloyd step: `cent(i, src)` emits
-  // c{i}pos/c{i}/c{i}n from a (cluster, emb) source; `assign(name, c)`
-  // emits the argmax assignment against centroid table c{i}n.
+  // c{i}pos/c{i}/c{i}n from a (keys…, cluster, emb) source — the DuckDB
+  // mirror of [[centroids]]; `assign(name, c)` emits the argmax
+  // assignment against centroid table c{i}n.
   private def centCtes(i: Int, src: String, clusterCol: String,
-      pfx: String = ""): String =
+      pfx: String = "", keys: Seq[String] = Nil, emb: String = "emb"): String = {
+    val k = keys.map(_ + ", ").mkString
     s"""${pfx}c${i}pos AS (
-       |  SELECT $clusterCol AS cl, u.pos AS pos, round(avg(u.v), 6) AS cv
+       |  SELECT $k$clusterCol AS cl, u.pos AS pos, round(avg(u.v), 6) AS cv
        |  FROM $src,
-       |       LATERAL (SELECT unnest(emb) AS v, generate_subscripts(emb, 1) AS pos) u
-       |  GROUP BY cl, pos),
-       |${pfx}c$i AS (SELECT cl, list(cv ORDER BY pos) AS centroid FROM ${pfx}c${i}pos GROUP BY cl),
-       |${pfx}c${i}n AS (SELECT cl, centroid,
+       |       LATERAL (SELECT unnest($emb) AS v, generate_subscripts($emb, 1) AS pos) u
+       |  GROUP BY ${k}cl, pos),
+       |${pfx}c$i AS (SELECT ${k}cl, list(cv ORDER BY pos) AS centroid FROM ${pfx}c${i}pos GROUP BY ${k}cl),
+       |${pfx}c${i}n AS (SELECT ${k}cl, centroid,
        |               sqrt(list_dot_product(centroid, centroid)) AS c_norm FROM ${pfx}c$i)""".stripMargin
+  }
 
   private def assignCte(name: String, centTable: String,
       src: String = "e"): String =
@@ -859,18 +862,7 @@ object SimilarityQueries {
        |${incChain(10)},
        |${incChain(25)},
        |${incChain(50)},
-       |bp AS (
-       |  SELECT b.vec_id AS q_id, a.vec_id AS vec_id, round($cosSql, 6) AS cos_sim
-       |  FROM embeddings a
-       |  CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) b
-       |  WHERE a.vec_id <> b.vec_id),
-       |bt AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id
-       |                              ORDER BY cos_sim DESC, vec_id) AS rank
-       |    FROM bp)
-       |  WHERE rank <= 5),
+       |$bruteTopCtes,
        |fullh AS (
        |  SELECT CAST(count(b.q_id) AS BIGINT) AS n_hits_rebuild
        |  FROM (SELECT q_id, vec_id FROM top2 WHERE rank <= 5) t
@@ -924,18 +916,7 @@ object SimilarityQueries {
        |${refinedSearchCtes(1, iters)},
        |${refinedSearchCtes(2, iters)},
        |${refinedSearchCtes(4, iters)},
-       |bp AS (
-       |  SELECT b.vec_id AS q_id, a.vec_id AS vec_id, round($cosSql, 6) AS cos_sim
-       |  FROM embeddings a
-       |  CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) b
-       |  WHERE a.vec_id <> b.vec_id),
-       |bt AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id
-       |                              ORDER BY cos_sim DESC, vec_id) AS rank
-       |    FROM bp)
-       |  WHERE rank <= 5),
+       |$bruteTopCtes,
        |r AS (
        |  SELECT 1 AS probes, q_id, vec_id FROM top1 WHERE rank <= 5
        |  UNION ALL
@@ -1041,22 +1022,14 @@ object SimilarityQueries {
        |                              ORDER BY cos_sim DESC, vec_id) AS rank
        |    FROM swept)
        |  WHERE rank <= 5),
-       |cpos AS (
-       |  SELECT label, u.pos AS pos, round(avg(u.v), 6) AS cv
-       |  FROM embeddings,
-       |       LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-       |                       generate_subscripts(embedding, 1) AS pos) u
-       |  GROUP BY label, pos),
-       |c AS (SELECT label, list(cv ORDER BY pos) AS centroid FROM cpos GROUP BY label),
-       |cn AS (SELECT label, centroid,
-       |              sqrt(list_dot_product(centroid, centroid)) AS c_norm FROM c),
+       |${centCtes(0, "e", "label")},
        |assign AS (
        |  SELECT q_id, label FROM (
-       |    SELECT q.q_id, cn.label,
+       |    SELECT q.q_id, cn.cl AS label,
        |           row_number() OVER (PARTITION BY q.q_id
        |             ORDER BY round(list_dot_product(q.q_emb, cn.centroid) / (q.q_norm * cn.c_norm), 6) DESC,
-       |                      cn.label) AS rn
-       |    FROM q CROSS JOIN cn)
+       |                      cn.cl) AS rn
+       |    FROM q CROSS JOIN c0n cn)
        |  WHERE rn <= 2),
        |ivf AS (
        |  SELECT sel_mod, q_id, vec_id FROM (
@@ -1287,18 +1260,7 @@ object SimilarityQueries {
        |${refinedSearchCtes(1, iters)},
        |${refinedSearchCtes(2, iters)},
        |${refinedSearchCtes(4, iters)},
-       |bp AS (
-       |  SELECT b.vec_id AS q_id, a.vec_id AS vec_id, round($cosSql, 6) AS cos_sim
-       |  FROM embeddings a
-       |  CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) b
-       |  WHERE a.vec_id <> b.vec_id),
-       |bt AS (
-       |  SELECT q_id, vec_id, rank FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id
-       |                              ORDER BY cos_sim DESC, vec_id) AS rank
-       |    FROM bp)
-       |  WHERE rank <= 5),
+       |$bruteTopCtes,
        |r AS (
        |  SELECT 1 AS probes, q_id, vec_id, rank FROM top1 WHERE rank <= 5
        |  UNION ALL
@@ -1347,27 +1309,12 @@ object SimilarityQueries {
   }
 
   private val ivfKmeansRefineSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
       |         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
       |  FROM embeddings),
-      |cpos AS (
-      |  SELECT label, u.pos AS pos, round(avg(u.v), 6) AS cv
-      |  FROM embeddings,
-      |       LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-      |                       generate_subscripts(embedding, 1) AS pos) u
-      |  GROUP BY label, pos),
-      |c AS (SELECT label, list(cv ORDER BY pos) AS centroid FROM cpos GROUP BY label),
-      |cn AS (SELECT label, centroid,
-      |              sqrt(list_dot_product(centroid, centroid)) AS c_norm FROM c),
-      |assign AS (
-      |  SELECT cluster, emb FROM (
-      |    SELECT e.vec_id, cn.label AS cluster, e.emb,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |             ORDER BY round(list_dot_product(e.emb, cn.centroid) / (e.norm * cn.c_norm), 6) DESC,
-      |                      cn.label) AS rn
-      |    FROM e CROSS JOIN cn)
-      |  WHERE rn = 1)
+      |${centCtes(0, "e", "label")},
+      |${assignCte("assign", "c0n")}
       |SELECT cluster, CAST(u.pos - 1 AS INT) AS pos,
       |       round(avg(u.v), 6) AS centroid_v,
       |       count(*) AS n_members
@@ -1571,20 +1518,19 @@ object SimilarityQueries {
       .orderBy("q_id", "rank")
   }
 
-  private val knnPqAdcSql: String =
-    s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
+  /** DuckDB mirror of [[pqSub]] → [[pqCodebook]] → [[pqDistances]]:
+    * CTEs sub, the keyed label centroids, cbn (code_label, s, centroid,
+    * cdot), d (every subvector↔codeword distance) and a (codes ranked per
+    * subvector; rn = 1 is the code [[pqCodes]] keeps). */
+  private val pqCodeCtes: String =
+    s"""e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
        |sub AS (
        |  SELECT vec_id, label AS own_label, st.s AS s,
        |         emb[CAST(st.s * $SubDim + 1 AS INT):CAST(st.s * $SubDim + $SubDim AS INT)] AS subv
        |  FROM e CROSS JOIN (SELECT unnest(range(0, $NSub)) AS s) st),
-       |cpos AS (
-       |  SELECT own_label, s, u.pos AS pos, round(avg(u.v), 6) AS cv
-       |  FROM sub,
-       |       LATERAL (SELECT unnest(subv) AS v, generate_subscripts(subv, 1) AS pos) u
-       |  GROUP BY own_label, s, pos),
-       |cb AS (SELECT own_label, s, list(cv ORDER BY pos) AS centroid FROM cpos GROUP BY own_label, s),
-       |cbn AS (SELECT own_label AS code_label, s, centroid,
-       |               list_dot_product(centroid, centroid) AS cdot FROM cb),
+       |${centCtes(0, "sub", "own_label", "pq", Seq("s"), "subv")},
+       |cbn AS (SELECT cl AS code_label, s, centroid,
+       |               list_dot_product(centroid, centroid) AS cdot FROM pqc0),
        |d AS (
        |  SELECT sub.vec_id, sub.s AS s, cbn.code_label AS code,
        |         round(list_dot_product(subv, subv)
@@ -1593,7 +1539,10 @@ object SimilarityQueries {
        |a AS (
        |  SELECT vec_id, s, code, sqd,
        |         row_number() OVER (PARTITION BY vec_id, s ORDER BY sqd, code) AS rn
-       |  FROM d),
+       |  FROM d)""".stripMargin
+
+  private val knnPqAdcSql: String =
+    s"""WITH $pqCodeCtes,
        |codes AS (SELECT vec_id, s, code FROM a WHERE rn = 1),
        |qd AS (SELECT vec_id AS q_id, s, code, sqd FROM d WHERE vec_id < 10),
        |adc AS (
@@ -1611,28 +1560,7 @@ object SimilarityQueries {
   private val embeddingPqSql: String = {
     val codeSelects = (0 until NSub)
       .map(j => s"max(CASE WHEN s = $j THEN code END) AS code$j").mkString(",\n      |       ")
-    s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
-       |sub AS (
-       |  SELECT vec_id, label AS own_label, st.s AS s,
-       |         emb[CAST(st.s * $SubDim + 1 AS INT):CAST(st.s * $SubDim + $SubDim AS INT)] AS subv
-       |  FROM e CROSS JOIN (SELECT unnest(range(0, $NSub)) AS s) st),
-       |cpos AS (
-       |  SELECT own_label, s, u.pos AS pos, round(avg(u.v), 6) AS cv
-       |  FROM sub,
-       |       LATERAL (SELECT unnest(subv) AS v, generate_subscripts(subv, 1) AS pos) u
-       |  GROUP BY own_label, s, pos),
-       |cb AS (SELECT own_label, s, list(cv ORDER BY pos) AS centroid FROM cpos GROUP BY own_label, s),
-       |cbn AS (SELECT own_label AS code_label, s, centroid,
-       |               list_dot_product(centroid, centroid) AS cdot FROM cb),
-       |d AS (
-       |  SELECT sub.vec_id, sub.s AS s, cbn.code_label AS code,
-       |         round(list_dot_product(subv, subv)
-       |               - 2.0 * list_dot_product(subv, centroid) + cdot, 6) AS sqd
-       |  FROM sub JOIN cbn ON sub.s = cbn.s),
-       |a AS (
-       |  SELECT vec_id, s, code, sqd,
-       |         row_number() OVER (PARTITION BY vec_id, s ORDER BY sqd, code) AS rn
-       |  FROM d)
+    s"""WITH $pqCodeCtes
        |SELECT vec_id,
        |       $codeSelects,
        |       CAST(sum(CAST(sqd AS DECIMAL(18,6))) AS DOUBLE) AS recon_err

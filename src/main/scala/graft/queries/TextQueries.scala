@@ -18,9 +18,6 @@ object TextQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def sqlList(words: Seq[String]): String =
-    words.map(w => s"'$w'").mkString("[", ", ", "]")
-
   /** Token statistics per document: whitespace tokens, distinct tokens,
     * BPE-ish subword count, total/average token length. */
   def tokenStats(spark: SparkSession, dir: String): DataFrame =
@@ -39,16 +36,15 @@ object TextQueries {
       .orderBy("doc_id")
 
   private val tokenStatsSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks,
+      |         $tokensSql AS toks,
       |         text
       |  FROM documents)
       |SELECT doc_id,
       |       CAST(len(toks) AS INT) AS n_tokens,
       |       CAST(len(list_distinct(toks)) AS INT) AS n_uniq_tokens,
-      |       CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS INT) AS n_bpe_tokens,
+      |       CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS INT) AS n_bpe_tokens,
       |       CAST(coalesce(list_sum(list_transform(toks, x -> len(x))), 0) AS BIGINT) AS total_token_chars,
       |       CASE WHEN len(toks) > 0
       |            THEN round(CAST(coalesce(list_sum(list_transform(toks, x -> len(x))), 0) AS DOUBLE) / len(toks), 6)
@@ -62,9 +58,7 @@ object TextQueries {
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("alpha_ratio", alphaRatio(col("text")))
       .withColumn("stop_ratio",
-        when(col("n_tokens") > 0,
-          stopwordCount(col("toks"), enStopwords).cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        stopwordRatio(col("toks"), col("n_tokens")))
       .select(
         col("doc_id"), col("n_tokens"),
         round(col("alpha_ratio"), 6).as("alpha_ratio"),
@@ -76,25 +70,18 @@ object TextQueries {
   private val qualitySql: String =
     s"""WITH t AS (
        |  SELECT doc_id, text,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         $tokensSql AS toks
        |  FROM documents),
        |m AS (
        |  SELECT doc_id,
        |         CAST(len(toks) AS INT) AS n_tokens,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS alpha_ratio,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains(${sqlList(enStopwords)}, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS stop_ratio
+       |         ${alphaRatioSql()} AS alpha_ratio,
+       |         ${stopwordRatioSql("toks")} AS stop_ratio
        |  FROM t)
        |SELECT doc_id, n_tokens,
        |       round(alpha_ratio, 6) AS alpha_ratio,
        |       round(stop_ratio, 6) AS stop_ratio,
-       |       round(0.3 * least(1.0, CAST(n_tokens AS DOUBLE) / 50.0)
-       |             + 0.3 * alpha_ratio
-       |             + 0.4 * least(1.0, stop_ratio * 5.0), 6) AS quality_score
+       |       round(${qualityScoreSql("n_tokens", "alpha_ratio", "stop_ratio")}, 6) AS quality_score
        |FROM m ORDER BY doc_id""".stripMargin
 
   /** Language-ID heuristic: stopword-hit ratio per language, argmax with
@@ -106,13 +93,9 @@ object TextQueries {
       .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("r_en",
-        when(col("n_tokens") > 0,
-          stopwordCount(col("toks"), enStopwords).cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        stopwordRatio(col("toks"), col("n_tokens")))
       .withColumn("r_es",
-        when(col("n_tokens") > 0,
-          stopwordCount(col("toks"), esStopwords).cast("double") / col("n_tokens"))
-          .otherwise(lit(0.0)))
+        stopwordRatio(col("toks"), col("n_tokens"), esStopwords))
       .select(
         col("doc_id"), col("lang"),
         when(col("n_tokens") === 0, lit("unknown"))
@@ -124,17 +107,12 @@ object TextQueries {
   private val langIdSql: String =
     s"""WITH t AS (
        |  SELECT doc_id, lang,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         $tokensSql AS toks
        |  FROM documents),
        |m AS (
        |  SELECT doc_id, lang, CAST(len(toks) AS INT) AS n_tokens,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains(${sqlList(enStopwords)}, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS r_en,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains(${sqlList(esStopwords)}, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS r_es
+       |         ${stopwordRatioSql("toks")} AS r_en,
+       |         ${stopwordRatioSql("toks", esStopwords)} AS r_es
        |  FROM t)
        |SELECT doc_id, lang,
        |       CASE WHEN n_tokens = 0 THEN 'unknown'
@@ -164,17 +142,12 @@ object TextQueries {
   private val langConfusionSql: String =
     s"""WITH t AS (
        |  SELECT doc_id, lang,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |         $tokensSql AS toks
        |  FROM documents),
        |m AS (
        |  SELECT doc_id, lang, CAST(len(toks) AS INT) AS n_tokens,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains(${sqlList(enStopwords)}, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS r_en,
-       |         CASE WHEN len(toks) > 0
-       |              THEN CAST(len(list_filter(toks, x -> list_contains(${sqlList(esStopwords)}, x))) AS DOUBLE) / len(toks)
-       |              ELSE 0.0 END AS r_es
+       |         ${stopwordRatioSql("toks")} AS r_en,
+       |         ${stopwordRatioSql("toks", esStopwords)} AS r_es
        |  FROM t),
        |p AS (
        |  SELECT lang,
@@ -310,12 +283,11 @@ object TextQueries {
       .orderBy("source")
 
   private val piiDensityBySourceSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT source,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN 0
-      |              ELSE len(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+')) END AS n_toks,
-      |         len(regexp_extract_all(text, 'https?://[^ \t\n]+')) AS u,
-      |         len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS e,
+      |         $tokenCountSql AS n_toks,
+      |         len(regexp_extract_all(text, 'https?://[^ \\t\\n]+')) AS u,
+      |         len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}')) AS e,
       |         len(regexp_extract_all(text, '[0-9]+')) AS m
       |  FROM documents),
       |g AS (
@@ -378,10 +350,9 @@ object TextQueries {
       .orderBy("doc_id")
 
   private val c4RulesSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, text,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         $tokensSql AS toks
       |  FROM documents),
       |m AS (
       |  SELECT doc_id,
@@ -392,7 +363,7 @@ object TextQueries {
       |         CASE WHEN length(text) > 0
       |              THEN CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE) / length(text)
       |              ELSE 0.0 END AS digit_ratio,
-      |         regexp_matches(text, '[.!?"]\s*$') AS ends_punct
+      |         regexp_matches(text, '[.!?"]\\s*$$') AS ends_punct
       |  FROM t)
       |SELECT doc_id, n_tokens,
       |       round(mean_word_len, 6) AS mean_word_len,
@@ -466,9 +437,8 @@ object TextQueries {
   }
 
   private val bigramLmTopSql: String =
-    """WITH t AS (
-      |  SELECT CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+    s"""WITH t AS (
+      |  SELECT $tokensSql AS toks
       |  FROM documents),
       |e AS (
       |  SELECT toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2
@@ -532,9 +502,8 @@ object TextQueries {
   }
 
   private val tokenPmiTopSql: String =
-    """WITH t AS (
-      |  SELECT CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+    s"""WITH t AS (
+      |  SELECT $tokensSql AS toks
       |  FROM documents),
       |u AS (SELECT unnest(toks) AS w FROM t),
       |uc AS (SELECT w, count(*) AS c FROM u GROUP BY w),
@@ -570,10 +539,9 @@ object TextQueries {
         count(col("token")).as("n_tokens"))
 
   private val tokenExplodeOuterSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         $tokensSql AS toks
       |  FROM documents)
       |SELECT count(DISTINCT doc_id) AS n_docs,
       |       CAST(sum(CASE WHEN len(toks) = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty_docs,
@@ -629,10 +597,9 @@ object TextQueries {
   }
 
   private val docLmScoreSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         $tokensSql AS toks
       |  FROM documents),
       |e AS (
       |  SELECT doc_id, toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2
@@ -659,6 +626,81 @@ object TextQueries {
 
   private val HashDim = 256
 
+  /** The hashed-linear classifier's per-doc scores, shared by
+    * [[docClassifierScore]] and every report that evaluates it: each
+    * token instance hashes into one of [[HashDim]] buckets, the bucket's
+    * integer milli-weight in [-500, 500] is Knuth's multiplicative hash of
+    * the bucket id (a deterministic stand-in for trained parameters), and
+    * `score` is the floor fixed-point mean weight of the document's token
+    * instances. Integer weights keep the sum EXACT on both engines;
+    * floating point enters only at the final single division, and the
+    * floor (not round) avoids the exact .5 boundaries where HALF_UP
+    * differs across engines. `carry` columns ride along from `documents`;
+    * all but `n_chars` (read by [[lengthLabel]]) are grouping keys, and
+    * `aggs` precede `score` in the aggregate. */
+  private def classifierScores(spark: SparkSession, dir: String, carry: Seq[String],
+      aggs: Column*): DataFrame = {
+    val bucket = pmod(DedupOps.h60(col("token")), lit(HashDim.toLong))
+    val all = aggs :+ (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
+      / lit(1e6)).as("score")
+    Tables.documents(spark, dir)
+      .select(carry.map(col) :+ explode(tokens(col("text"))).as("token"): _*)
+      .withColumn("w", (bucket * lit(2654435761L)) % 1001 - 500)
+      .groupBy(carry.filter(_ != "n_chars").map(col): _*)
+      .agg(all.head, all.tail: _*)
+  }
+
+  /** The evaluation label: the document is long (`n_chars >= 300`). */
+  private def lengthLabel: Column = max((col("n_chars") >= 300).cast("long")).as("y")
+
+  /** A score's probability, rounded to 6 BEFORE anything compares it (exp
+    * is ulp-divergent across engines; only the rounded value is used). */
+  private def sigmoid(score: Column): Column =
+    round(lit(1.0) / (lit(1.0) + exp(score * -4)), 6)
+
+  /** DuckDB mirror of [[classifierScores]]: CTEs t, e, f and
+    * s(keys…, aggs, score). */
+  private def classifierScoresCtes(carry: Seq[String], aggs: String): String = {
+    val cols = carry.mkString(", ")
+    val keys = carry.filter(_ != "n_chars").mkString(", ")
+    s"""t AS (
+       |  SELECT $cols,
+       |         $tokensSql AS toks
+       |  FROM documents),
+       |e AS (SELECT $cols, unnest(toks) AS token FROM t),
+       |f AS (
+       |  SELECT $cols,
+       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
+       |           * 2654435761 % 1001 - 500 AS w
+       |  FROM e),
+       |s AS (
+       |  SELECT $keys,
+       |         $aggs,
+       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
+       |  FROM f GROUP BY $keys)""".stripMargin
+  }
+
+  /** DuckDB mirrors of [[lengthLabel]] and [[sigmoid]] (of `score`). */
+  private val lengthLabelSql = "max(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS y"
+  private val sigmoidSql = "round(1.0 / (1.0 + exp(score * -4)), 6)"
+
+  /** The (doc_id, y, pm) frame shared by the ranking metrics: the
+    * classifier probability in exact micro-units plus the length label. */
+  private def classifierScoredPm(spark: SparkSession, dir: String): DataFrame =
+    classifierScores(spark, dir, Seq("doc_id", "n_chars"), lengthLabel)
+      .withColumn("prob", sigmoid(col("score")))
+      .withColumn("pm", (col("prob").cast("decimal(18,6)") * 1000000).cast("long"))
+
+  /** The (doc_id, y, pm) CTE chain shared by the ranking-metric oracles
+    * — mirrors [[classifierScoredPm]]. Splice as `WITH $..., <more>`. */
+  private val classifierScoredPmCtes: String =
+    s"""${classifierScoresCtes(Seq("doc_id", "n_chars"), lengthLabelSql)},
+       |p AS (
+       |  SELECT doc_id, y,
+       |         CAST(CAST($sigmoidSql AS DECIMAL(18,6))
+       |              * 1000000 AS BIGINT) AS pm
+       |  FROM s)""".stripMargin
+
   /** Hashed-feature linear classifier scoring — the fastText-shaped
     * quality-classifier pass every curation pipeline runs at full-corpus
     * scale: tokens are hashed into [[HashDim]] buckets (the hashing
@@ -669,53 +711,19 @@ object TextQueries {
     * score is the mean bucket weight of its token instances, squashed
     * through a sigmoid. Pure map-side: tokenize → hash → lookup → one
     * per-doc aggregate; no shuffle but the doc_id partial-agg, no
-    * vocabulary broadcast at any corpus size.
-    *
-    * The mean is an exact-integer sum divided once at the end (floating
-    * point appears only in that last division) and is rounded to 6
-    * BEFORE the sigmoid (exp is ulp-divergent; it sees only the rounded
-    * value); empty docs have no token instances and are not scored. */
-  def docClassifierScore(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = pmod(graft.operators.DedupOps.h60(col("token")), lit(HashDim.toLong))
-    // integer milli-weight in [-500, 500]: the sum stays EXACT integer
-    // arithmetic on both engines; floating point enters only at the final
-    // single division (identical operands → identical double)
-    val weight = (bucket * lit(2654435761L)) % 1001 - 500
-    val scored = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .withColumn("w", weight)
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        // fixed-point floor, not round: the integer-ratio mean lands on
-        // EXACT .5 decimal boundaries where HALF_UP differs across engines
-        (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
-          / lit(1e6)).as("score"))
-    scored
-      .withColumn("prob", round(lit(1.0) / (lit(1.0) + exp(col("score") * -4)), 6))
+    * vocabulary broadcast at any corpus size. Empty docs have no token
+    * instances and are not scored. */
+  def docClassifierScore(spark: SparkSession, dir: String): DataFrame =
+    classifierScores(spark, dir, Seq("doc_id"), count(lit(1)).as("n_tokens"))
+      .withColumn("prob", sigmoid(col("score")))
       .withColumn("keep", col("prob") >= 0.5)
       .orderBy("doc_id")
-  }
 
   private val docClassifierScoreSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
-       |  FROM documents),
-       |e AS (SELECT doc_id, unnest(toks) AS token FROM t),
-       |f AS (
-       |  SELECT doc_id,
-       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
-       |           * 2654435761 % 1001 - 500 AS w
-       |  FROM e),
-       |s AS (
-       |  SELECT doc_id, count(*) AS n_tokens,
-       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
-       |  FROM f GROUP BY doc_id)
+    s"""WITH ${classifierScoresCtes(Seq("doc_id"), "count(*) AS n_tokens")}
        |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, score,
-       |       round(1.0 / (1.0 + exp(score * -4)), 6) AS prob,
-       |       round(1.0 / (1.0 + exp(score * -4)), 6) >= 0.5 AS keep
+       |       $sigmoidSql AS prob,
+       |       $sigmoidSql >= 0.5 AS keep
        |FROM s
        |ORDER BY doc_id""".stripMargin
 
@@ -736,20 +744,10 @@ object TextQueries {
     * single corpus scan as the classifier (a `max` alongside the token
     * aggregate — no second scan, no join), and the bin aggregate has
     * ten keys. */
-  def classifierCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = pmod(graft.operators.DedupOps.h60(col("token")), lit(HashDim.toLong))
-    val weight = (bucket * lit(2654435761L)) % 1001 - 500
-    val scored = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), explode(tokens(col("text"))).as("token"))
-      .withColumn("w", weight)
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        max((col("n_chars") >= 300).cast("long")).as("y"),
-        (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
-          / lit(1e6)).as("score"))
-      .withColumn("prob", round(lit(1.0) / (lit(1.0) + exp(col("score") * -4)), 6))
-    scored
+  def classifierCalibration(spark: SparkSession, dir: String): DataFrame =
+    classifierScores(spark, dir, Seq("doc_id", "n_chars"),
+        count(lit(1)).as("n_tokens"), lengthLabel)
+      .withColumn("prob", sigmoid(col("score")))
       .withColumn("bin", least(floor(col("prob") * 10), lit(9.0)).cast("long"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"),
@@ -760,27 +758,11 @@ object TextQueries {
       .withColumn("gap_micro", abs(col("conf_micro") - col("acc_micro")))
       .select("bin", "n_docs", "n_pos", "conf_micro", "acc_micro", "gap_micro")
       .orderBy("bin")
-  }
 
   private val classifierCalibrationSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
-       |  FROM documents),
-       |e AS (SELECT doc_id, n_chars, unnest(toks) AS token FROM t),
-       |f AS (
-       |  SELECT doc_id, n_chars,
-       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
-       |           * 2654435761 % 1001 - 500 AS w
-       |  FROM e),
-       |s AS (
-       |  SELECT doc_id,
-       |         max(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS y,
-       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
-       |  FROM f GROUP BY doc_id),
+    s"""WITH ${classifierScoresCtes(Seq("doc_id", "n_chars"), lengthLabelSql)},
        |p AS (
-       |  SELECT y, round(1.0 / (1.0 + exp(score * -4)), 6) AS prob FROM s),
+       |  SELECT y, $sigmoidSql AS prob FROM s),
        |g AS (
        |  SELECT CAST(least(floor(prob * 10), 9) AS BIGINT) AS bin,
        |         count(*) AS n_docs,
@@ -817,15 +799,7 @@ object TextQueries {
     * pass; the 9× grid explode happens AFTER per-doc aggregation
     * (9·docs narrow rows), the final aggregate has nine keys. */
   def scoreTemperatureFit(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = pmod(graft.operators.DedupOps.h60(col("token")), lit(HashDim.toLong))
-    val weight = (bucket * lit(2654435761L)) % 1001 - 500
-    val scored = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), explode(tokens(col("text"))).as("token"))
-      .withColumn("w", weight)
-      .groupBy(col("doc_id"))
-      .agg(max((col("n_chars") >= 300).cast("long")).as("y"),
-        (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
-          / lit(1e6)).as("score"))
+    val scored = classifierScores(spark, dir, Seq("doc_id", "n_chars"), lengthLabel)
     val perT = scored
       .withColumn("t", explode(array(TempGrid.map(lit): _*)))
       .withColumn("p",
@@ -849,22 +823,7 @@ object TextQueries {
 
   private val scoreTemperatureFitSql: String = {
     val grid = TempGrid.mkString("[", ", ", "]")
-    s"""WITH t AS (
-       |  SELECT doc_id, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
-       |  FROM documents),
-       |e AS (SELECT doc_id, n_chars, unnest(toks) AS token FROM t),
-       |f AS (
-       |  SELECT doc_id, n_chars,
-       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
-       |           * 2654435761 % 1001 - 500 AS w
-       |  FROM e),
-       |s AS (
-       |  SELECT doc_id,
-       |         max(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS y,
-       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
-       |  FROM f GROUP BY doc_id),
+    s"""WITH ${classifierScoresCtes(Seq("doc_id", "n_chars"), lengthLabelSql)},
        |g AS (SELECT unnest($grid::DOUBLE[]) AS t),
        |x AS (
        |  SELECT g.t, s.y,
@@ -903,20 +862,8 @@ object TextQueries {
     * the scored scan is the classifier's map-side pass; the 9× threshold
     * explode happens AFTER per-doc aggregation (9·docs tiny rows), and
     * the final aggregate has nine keys. */
-  def classifierPrCurve(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = pmod(graft.operators.DedupOps.h60(col("token")), lit(HashDim.toLong))
-    val weight = (bucket * lit(2654435761L)) % 1001 - 500
-    val scored = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), explode(tokens(col("text"))).as("token"))
-      .withColumn("w", weight)
-      .groupBy(col("doc_id"))
-      .agg(
-        max((col("n_chars") >= 300).cast("long")).as("y"),
-        (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
-          / lit(1e6)).as("score"))
-      .withColumn("prob", round(lit(1.0) / (lit(1.0) + exp(col("score") * -4)), 6))
-      .withColumn("pm", (col("prob").cast("decimal(18,6)") * 1000000).cast("long"))
-    scored
+  def classifierPrCurve(spark: SparkSession, dir: String): DataFrame =
+    classifierScoredPm(spark, dir)
       .withColumn("thr_micro",
         explode(array((1 to 9).map(i => lit(i * 100000L)): _*)))
       .groupBy(col("thr_micro"))
@@ -933,30 +880,9 @@ object TextQueries {
       .select("thr_micro", "n_pred_pos", "n_pos", "tp",
         "precision_micro", "recall_micro", "f1_micro")
       .orderBy("thr_micro")
-  }
 
   private val classifierPrCurveSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
-       |  FROM documents),
-       |e AS (SELECT doc_id, n_chars, unnest(toks) AS token FROM t),
-       |f AS (
-       |  SELECT doc_id, n_chars,
-       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
-       |           * 2654435761 % 1001 - 500 AS w
-       |  FROM e),
-       |s AS (
-       |  SELECT doc_id,
-       |         max(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS y,
-       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
-       |  FROM f GROUP BY doc_id),
-       |p AS (
-       |  SELECT y,
-       |         CAST(CAST(round(1.0 / (1.0 + exp(score * -4)), 6) AS DECIMAL(18,6))
-       |              * 1000000 AS BIGINT) AS pm
-       |  FROM s),
+    s"""WITH $classifierScoredPmCtes,
        |x AS (
        |  SELECT u.thr * 100000 AS thr_micro, p.pm, p.y
        |  FROM p, LATERAL (SELECT unnest(range(1, 10)) AS thr) u),
@@ -990,24 +916,6 @@ object TextQueries {
     * Scale shape: one doc-keyed scoring aggregate, a distinct-score
     * collapse, then GlobalWindow's two-phase running sum over the score
     * groups (no single-task sort) and a one-row reduction. */
-  /** The (doc_id, y, pm) frame shared by the ranking metrics: the
-    * deterministic hashed-linear-model probability in exact micro-units
-    * plus the n_chars ≥ 300 label — one doc-keyed scoring aggregate. */
-  private def classifierScoredPm(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = pmod(graft.operators.DedupOps.h60(col("token")), lit(HashDim.toLong))
-    val weight = (bucket * lit(2654435761L)) % 1001 - 500
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), explode(tokens(col("text"))).as("token"))
-      .withColumn("w", weight)
-      .groupBy(col("doc_id"))
-      .agg(
-        max((col("n_chars") >= 300).cast("long")).as("y"),
-        (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
-          / lit(1e6)).as("score"))
-      .withColumn("prob", round(lit(1.0) / (lit(1.0) + exp(col("score") * -4)), 6))
-      .withColumn("pm", (col("prob").cast("decimal(18,6)") * 1000000).cast("long"))
-  }
-
   def classifierAuc(spark: SparkSession, dir: String): DataFrame = {
     val scored = classifierScoredPm(spark, dir)
     val grp = scored.groupBy(col("pm"))
@@ -1027,31 +935,6 @@ object TextQueries {
       .select(col("n_pos"), col("n_neg"), col("auc_ppm"),
         (col("auc_ppm") * 2 - 1000000L).as("gini_ppm"))
   }
-
-  /** The (doc_id, y, pm) CTE chain shared by the ranking-metric oracles
-    * — mirrors [[classifierScoredPm]]. Splice as `WITH $..., <more>`. */
-  private val classifierScoredPmCtes: String =
-    s"""t AS (
-       |  SELECT doc_id, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
-       |  FROM documents),
-       |e AS (SELECT doc_id, n_chars, unnest(toks) AS token FROM t),
-       |f AS (
-       |  SELECT doc_id, n_chars,
-       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
-       |           * 2654435761 % 1001 - 500 AS w
-       |  FROM e),
-       |s AS (
-       |  SELECT doc_id,
-       |         max(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS y,
-       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
-       |  FROM f GROUP BY doc_id),
-       |p AS (
-       |  SELECT doc_id, y,
-       |         CAST(CAST(round(1.0 / (1.0 + exp(score * -4)), 6) AS DECIMAL(18,6))
-       |              * 1000000 AS BIGINT) AS pm
-       |  FROM s)""".stripMargin
 
   private val classifierAucSql: String =
     s"""WITH $classifierScoredPmCtes,
@@ -1153,17 +1036,8 @@ object TextQueries {
     * operands both engines → identical ordering under min/max); the
     * emitted fit goes through floor micro fixed-point. */
   def calibrationIsotonic(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = pmod(graft.operators.DedupOps.h60(col("token")), lit(HashDim.toLong))
-    val weight = (bucket * lit(2654435761L)) % 1001 - 500
-    val bins = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), explode(tokens(col("text"))).as("token"))
-      .withColumn("w", weight)
-      .groupBy(col("doc_id"))
-      .agg(
-        max((col("n_chars") >= 300).cast("long")).as("y"),
-        (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
-          / lit(1e6)).as("score"))
-      .withColumn("prob", round(lit(1.0) / (lit(1.0) + exp(col("score") * -4)), 6))
+    val bins = classifierScores(spark, dir, Seq("doc_id", "n_chars"), lengthLabel)
+      .withColumn("prob", sigmoid(col("score")))
       .withColumn("bin", least(floor(col("prob") * 10), lit(9.0)).cast("long"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("y")).as("n_pos"))
@@ -1190,24 +1064,9 @@ object TextQueries {
   }
 
   private val calibrationIsotonicSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
-       |  FROM documents),
-       |e AS (SELECT doc_id, n_chars, unnest(toks) AS token FROM t),
-       |f AS (
-       |  SELECT doc_id, n_chars,
-       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
-       |           * 2654435761 % 1001 - 500 AS w
-       |  FROM e),
-       |s AS (
-       |  SELECT doc_id,
-       |         max(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS y,
-       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
-       |  FROM f GROUP BY doc_id),
+    s"""WITH ${classifierScoresCtes(Seq("doc_id", "n_chars"), lengthLabelSql)},
        |bins AS (
-       |  SELECT CAST(least(floor(round(1.0 / (1.0 + exp(score * -4)), 6) * 10), 9) AS BIGINT) AS bin,
+       |  SELECT CAST(least(floor($sigmoidSql * 10), 9) AS BIGINT) AS bin,
        |         count(*) AS n_docs, CAST(sum(y) AS BIGINT) AS n_pos
        |  FROM s GROUP BY 1),
        |intervals AS (
@@ -1251,19 +1110,8 @@ object TextQueries {
     * a function of source, which silently puts whole sources on one side
     * of the split. */
   def scoreConformalThreshold(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = pmod(graft.operators.DedupOps.h60(col("token")), lit(HashDim.toLong))
-    val weight = (bucket * lit(2654435761L)) % 1001 - 500
-    val scored = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"),
-        explode(tokens(col("text"))).as("token"))
-      .withColumn("w", weight)
-      .groupBy(col("doc_id"), col("source"))
-      .agg(
-        max((col("n_chars") >= 300).cast("long")).as("y"),
-        (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
-          / lit(1e6)).as("score"))
-      .withColumn("pm",
-        floor(round(lit(1.0) / (lit(1.0) + exp(col("score") * -4)), 6) * 1e6).cast("long"))
+    val scored = classifierScores(spark, dir, Seq("doc_id", "source", "n_chars"), lengthLabel)
+      .withColumn("pm", floor(sigmoid(col("score")) * 1e6).cast("long"))
       .withColumn("s_micro",
         when(col("y") === 1L, lit(1000000L) - col("pm")).otherwise(col("pm")))
       // the split MUST be hash-based: doc_id parity is confounded with
@@ -1294,25 +1142,10 @@ object TextQueries {
   }
 
   private val scoreConformalThresholdSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, source, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
-       |  FROM documents),
-       |e AS (SELECT doc_id, source, n_chars, unnest(toks) AS token FROM t),
-       |f AS (
-       |  SELECT doc_id, source, n_chars,
-       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
-       |           * 2654435761 % 1001 - 500 AS w
-       |  FROM e),
-       |s AS (
-       |  SELECT doc_id, source,
-       |         max(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS y,
-       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
-       |  FROM f GROUP BY doc_id, source),
+    s"""WITH ${classifierScoresCtes(Seq("doc_id", "source", "n_chars"), lengthLabelSql)},
        |sc AS (
        |  SELECT doc_id, source, y,
-       |         CAST(floor(round(1.0 / (1.0 + exp(score * -4)), 6) * 1e6) AS BIGINT) AS pm
+       |         CAST(floor($sigmoidSql * 1e6) AS BIGINT) AS pm
        |  FROM s),
        |nc AS (
        |  SELECT doc_id, source,
@@ -1366,18 +1199,8 @@ object TextQueries {
     * identical in both engines. One corpus scan; the decomposition runs
     * on the 10-row bin frame. */
   def brierDecomposition(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = pmod(graft.operators.DedupOps.h60(col("token")), lit(HashDim.toLong))
-    val weight = (bucket * lit(2654435761L)) % 1001 - 500
-    val scored = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), explode(tokens(col("text"))).as("token"))
-      .withColumn("w", weight)
-      .groupBy(col("doc_id"))
-      .agg(
-        max((col("n_chars") >= 300).cast("long")).as("y"),
-        (floor(sum(col("w")).cast("double") * 1000.0 / count(lit(1)))
-          / lit(1e6)).as("score"))
-      .withColumn("pm",
-        floor(round(lit(1.0) / (lit(1.0) + exp(col("score") * -4)), 6) * 1e6).cast("long"))
+    val scored = classifierScores(spark, dir, Seq("doc_id", "n_chars"), lengthLabel)
+      .withColumn("pm", floor(sigmoid(col("score")) * 1e6).cast("long"))
       .withColumn("bin", least(expr("pm div 100000"), lit(9L)))
       .materializeOnce // feeds the global moments AND the bin frame
     val glob = scored.agg(
@@ -1408,25 +1231,10 @@ object TextQueries {
   }
 
   private val brierDecompositionSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, n_chars,
-       |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
-       |  FROM documents),
-       |e AS (SELECT doc_id, n_chars, unnest(toks) AS token FROM t),
-       |f AS (
-       |  SELECT doc_id, n_chars,
-       |         (CAST('0x' || substring(md5(token), 1, 15) AS BIGINT) % $HashDim)
-       |           * 2654435761 % 1001 - 500 AS w
-       |  FROM e),
-       |s AS (
-       |  SELECT doc_id,
-       |         max(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS y,
-       |         floor(CAST(sum(w) AS DOUBLE) * 1000.0 / count(*)) / 1e6 AS score
-       |  FROM f GROUP BY doc_id),
+    s"""WITH ${classifierScoresCtes(Seq("doc_id", "n_chars"), lengthLabelSql)},
        |sc AS (
        |  SELECT doc_id, y,
-       |         CAST(floor(round(1.0 / (1.0 + exp(score * -4)), 6) * 1e6) AS BIGINT) AS pm
+       |         CAST(floor($sigmoidSql * 1e6) AS BIGINT) AS pm
        |  FROM s),
        |g AS (
        |  SELECT count(*) AS n_docs, sum(y) AS n_pos,
@@ -1483,10 +1291,9 @@ object TextQueries {
   }
 
   private val ngramCountOfCountsSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         $tokensSql AS toks
       |  FROM documents),
       |sh AS (
       |  SELECT doc_id,
@@ -1564,8 +1371,7 @@ object TextQueries {
       .map { case (k, a, b) => s"($k, $a, $b)" }.mkString(", ")
     val P = DedupOps.P
     s"""WITH t AS (
-       |  SELECT CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\\s+') END AS toks
+       |  SELECT $tokensSql AS toks
        |  FROM documents),
        |tok AS (SELECT unnest(toks) AS tok FROM t),
        |cnt AS (SELECT tok, count(*) AS exact_cnt FROM tok GROUP BY tok),
@@ -1640,9 +1446,8 @@ object TextQueries {
   }
 
   private val bigramKneserNeySql: String =
-    """WITH t AS (
-      |  SELECT CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+    s"""WITH t AS (
+      |  SELECT $tokensSql AS toks
       |  FROM documents),
       |e AS (
       |  SELECT toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2
@@ -1737,10 +1542,9 @@ object TextQueries {
   }
 
   private val docKnPerplexitySql: String =
-    """WITH tr AS (
+    s"""WITH tr AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         $tokensSql AS toks
       |  FROM documents),
       |etr AS (
       |  SELECT toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2
@@ -1815,10 +1619,9 @@ object TextQueries {
   }
 
   private val tokenBurstinessSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         $tokensSql AS toks
       |  FROM documents),
       |nd AS (SELECT count(*) AS n_docs FROM documents),
       |pd AS (
@@ -1868,12 +1671,10 @@ object TextQueries {
       .orderBy("doc_id")
   }
 
-  private val docReadabilitySql: String = {
-    val ws = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
+  private val docReadabilitySql: String =
     s"""WITH base AS (
        |  SELECT doc_id,
-       |         CASE WHEN length(trim(text, $ws)) = 0 THEN 0
-       |              ELSE len(string_split_regex(trim(text, $ws), '\\s+')) END AS n_words,
+       |         $tokenCountSql AS n_words,
        |         greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS n_sents,
        |         len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_sylls
        |  FROM documents),
@@ -1892,7 +1693,6 @@ object TextQueries {
        |            WHEN flesch >= 30 THEN 'difficult'
        |            ELSE 'very_difficult' END AS grade
        |FROM s ORDER BY doc_id""".stripMargin
-  }
 
   /** Lexical-diversity profile per document: type/token ratio, hapax
     * share, and Herdan's C (log-log TTR, the length-robust variant a
@@ -1982,10 +1782,9 @@ object TextQueries {
       |FROM f ORDER BY doc_id""".stripMargin
 
   private val docLexicalDiversitySql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |         CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) = 0 THEN []::VARCHAR[]
-      |              ELSE string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)), '\s+') END AS toks
+      |         $tokensSql AS toks
       |  FROM documents),
       |pd AS (
       |  SELECT doc_id, u.token, count(*) AS c
@@ -2070,7 +1869,7 @@ object TextQueries {
        |  WHERE length(t) > 0),
        |p AS (
        |  SELECT doc_id, pos, tok,
-       |         CASE WHEN list_contains(${sqlList(enStopwords)}, tok) THEN 1 ELSE 0 END AS brk
+       |         CASE WHEN list_contains(${wordsSql(enStopwords)}, tok) THEN 1 ELSE 0 END AS brk
        |  FROM tk),
        |r AS (
        |  SELECT doc_id, pos, tok, brk,

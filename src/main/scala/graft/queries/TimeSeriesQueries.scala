@@ -108,12 +108,7 @@ object TimeSeriesQueries {
   private def hourlyCentered(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import QueryConventions.MaterializeSyntax
-    val byHour = validReadings(spark, dir)
-      .groupBy(col("sensor_id"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value_numeric").cast("decimal(18,6)")).as("s1d"))
-      .select(col("sensor_id"), col("h"),
-        round(col("s1d").cast("double") / col("n"), 6).as("x"))
+    val byHour = hourlySeries(spark, dir)
     val pos = Window.partitionBy(col("sensor_id")).orderBy(col("h"))
     val mean = Window.partitionBy(col("sensor_id"))
     val centered = byHour
@@ -143,13 +138,8 @@ object TimeSeriesQueries {
   }
 
   private val sensorAcfSql: String =
-    """WITH byhour AS (
-      |  SELECT event_type AS sensor_id,
-      |         date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-      |         round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS x
-      |  FROM events
-      |  WHERE event_type <> 'error' AND value IS NOT NULL
-      |  GROUP BY 1, 2),
+    s"""WITH byhour AS (
+      |  $hourlySeriesSql),
       |centered AS (
       |  SELECT sensor_id,
       |         row_number() OVER (PARTITION BY sensor_id ORDER BY h) AS p,
@@ -214,13 +204,8 @@ object TimeSeriesQueries {
   }
 
   private val sensorLjungBoxSql: String =
-    """WITH byhour AS (
-      |  SELECT event_type AS sensor_id,
-      |         date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-      |         round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS x
-      |  FROM events
-      |  WHERE event_type <> 'error' AND value IS NOT NULL
-      |  GROUP BY 1, 2),
+    s"""WITH byhour AS (
+      |  $hourlySeriesSql),
       |centered AS (
       |  SELECT sensor_id,
       |         row_number() OVER (PARTITION BY sensor_id ORDER BY h) AS p,
@@ -276,12 +261,7 @@ object TimeSeriesQueries {
     * specification (one shuffle + one sort per sensor), so the rolling
     * regression costs the same as a moving average at any scale. */
   def sensorRollingTrend(spark: SparkSession, dir: String): DataFrame = {
-    val byHour = validReadings(spark, dir)
-      .groupBy(col("sensor_id"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value_numeric").cast("decimal(18,6)")).as("s1d"))
-      .select(col("sensor_id"), col("h"),
-        round(col("s1d").cast("double") / col("n"), 6).as("x"))
+    val byHour = hourlySeries(spark, dir)
     val seq = Window.partitionBy(col("sensor_id")).orderBy(col("h"))
     val frame = seq.rowsBetween(-(TrendWindow - 1), 0)
     val pd = col("p").cast("decimal(10,0)")
@@ -305,12 +285,7 @@ object TimeSeriesQueries {
 
   private val sensorRollingTrendSql: String =
     s"""WITH byhour AS (
-       |  SELECT event_type AS sensor_id,
-       |         date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-       |         round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS x
-       |  FROM events
-       |  WHERE event_type <> 'error' AND value IS NOT NULL
-       |  GROUP BY 1, 2),
+       |  $hourlySeriesSql),
        |pos AS (
        |  SELECT sensor_id, h, x,
        |         row_number() OVER (PARTITION BY sensor_id ORDER BY h) AS p
@@ -354,12 +329,7 @@ object TimeSeriesQueries {
     * (no second scan, no join). Scale: everything after the hours-sized
     * groupBy is windows over sensors × hours rows. */
   def sensorCusum(spark: SparkSession, dir: String): DataFrame = {
-    val byHour = validReadings(spark, dir)
-      .groupBy(col("sensor_id"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value_numeric").cast("decimal(18,6)")).as("s1d"))
-      .select(col("sensor_id"), col("h"),
-        round(col("s1d").cast("double") / col("n"), 6).as("x"))
+    val byHour = hourlySeries(spark, dir)
     val part = Window.partitionBy(col("sensor_id"))
     val seq = part.orderBy(col("h")).rowsBetween(Window.unboundedPreceding, 0)
     val xd = col("x").cast("decimal(18,6)")
@@ -388,13 +358,8 @@ object TimeSeriesQueries {
   }
 
   private val sensorCusumSql: String =
-    """WITH byhour AS (
-      |  SELECT event_type AS sensor_id,
-      |         date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-      |         round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS x
-      |  FROM events
-      |  WHERE event_type <> 'error' AND value IS NOT NULL
-      |  GROUP BY 1, 2),
+    s"""WITH byhour AS (
+      |  $hourlySeriesSql),
       |stats AS (
       |  SELECT sensor_id, h, x,
       |         count(*) OVER p AS nh,
@@ -580,6 +545,26 @@ object TimeSeriesQueries {
           .cast("decimal(38,0)").as("s1u"))
       .select(col("sensor_id"), col("h"),
         expr("s1u div n").as("x_micro"))
+
+  /** Per (sensor, hour) 6-dp double mean `x` of the valid readings —
+    * the hourly series the autocorrelation, rolling-trend and CUSUM
+    * entries run on. The sum is exact (DECIMAL) and divides once. */
+  private def hourlySeries(spark: SparkSession, dir: String): DataFrame =
+    validReadings(spark, dir)
+      .groupBy(col("sensor_id"), date_trunc("hour", col("ts")).as("h"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value_numeric").cast("decimal(18,6)")).as("s1d"))
+      .select(col("sensor_id"), col("h"),
+        round(col("s1d").cast("double") / col("n"), 6).as("x"))
+
+  /** DuckDB mirror of [[hourlySeries]]. */
+  private def hourlySeriesSql: String =
+    """SELECT event_type AS sensor_id,
+      |         date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+      |         round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS x
+      |  FROM events
+      |  WHERE event_type <> 'error' AND value IS NOT NULL
+      |  GROUP BY 1, 2""".stripMargin
 
   private val hourlyMeansSql: String =
     """SELECT event_type AS sensor_id,

@@ -75,18 +75,16 @@ case class LshEntry(docId: Long, sig: Array[Long], lastMs: Long)
   * at ingest; pass [[LshDedupTracker.Uncapped]] explicitly for the
   * uncapped batch-equality form (capped recall differs: a refused doc
   * is never stored, and its at-least-once redelivery re-emits pairs —
-  * nothing remembers it). Every refused admission bumps this query
-  * run's [[AdmissionDrops]] counter, and a batch whose refusals are
-  * nonzero additionally emits one DROP-MARKER row per key (band = -1,
+  * nothing remembers it). A batch whose refusals are nonzero emits one
+  * DROP-MARKER row per key (band = -1,
   * ids = -1, `nMatch` = the NEGATED refusal count — every marker field
   * sits outside the valid value space, so a consumer that skips
   * [[LshDedupTracker.observeDrops]] can never mistake one for a
   * candidate pair) so
   * [[LshDedupTracker.observeDrops]] can surface the figure in
-  * `StreamingQueryProgress.observedMetrics` — the [[AdmissionDrops]]
-  * registry is exact only within one JVM, while observed metrics
-  * aggregate across executors, which is what a driver-side monitor on
-  * a real cluster can actually read (r14, VERDICT #4). Consumers go
+  * `StreamingQueryProgress.observedMetrics`, which aggregates across
+  * executors — what a driver-side monitor on a real cluster can
+  * actually read (r14, VERDICT #4). Consumers go
   * through [[LshDedupTracker.observeDrops]] (the [[Heartbeats]]
   * marker/strip pattern): it counts the markers into the metric and
   * strips them, so a capped run's user-facing output is pairs only. */
@@ -98,13 +96,10 @@ class LshDedupTracker(retentionMs: Long,
   require(maxBucket > 0, s"maxBucket must be positive, got $maxBucket")
 
   @transient private var st: ListState[LshEntry] = _
-  @transient private var drops: java.util.concurrent.atomic.LongAdder = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     st = getHandle.getListState[LshEntry](
       "bucket", Encoders.product[LshEntry], TTLConfig.NONE)
-    drops = AdmissionDrops.counter(
-      LshDedupTracker.DropsTag, getHandle.getQueryInfo.getRunId)
   }
 
   private def members(): Vector[LshEntry] = {
@@ -141,11 +136,11 @@ class LshDedupTracker(retentionMs: Long,
         }
         if (entries.length < maxBucket)
           entries = entries :+ LshEntry(r.docId, r.sig, r.ts.getTime)
-        else { drops.increment(); batchDrops += 1 }
+        else batchDrops += 1
       }
     }
-    // the cluster-readable half of the refusal count: one marker row
-    // per (key, batch) with refusals, counted into observedMetrics and
+    // the refusal count: one marker row per (key, batch) with
+    // refusals, counted into observedMetrics and
     // stripped by observeDrops
     if (batchDrops > 0) out += LshCandOut(-1, -1L, -1L, -batchDrops)
     // an admission or a redelivery refresh reassigns `entries` — skip
@@ -195,10 +190,6 @@ object LshDedupTracker {
     * opt-outs are greppable). */
   val Uncapped = Int.MaxValue
 
-  /** [[AdmissionDrops]] tracker tag: read this run's refusal count as
-    * `AdmissionDrops.forRun(LshDedupTracker.DropsTag, query.runId)`. */
-  val DropsTag = "lsh"
-
   /** The `observedMetrics` key [[observeDrops]] registers: a monitor
     * reads `progress.observedMetrics.get(DropsMetric)` and sums its
     * `admission_drops` column across progress events. */
@@ -206,11 +197,9 @@ object LshDedupTracker {
 
   /** Surfaces the tracker's admission refusals in
     * `StreamingQueryProgress` (r14, VERDICT #4) and strips the marker
-    * rows from the user-facing output. The [[AdmissionDrops]] registry
-    * is a JVM-local static — exact on `local[*]`, per-executor on a
-    * real cluster, where the driver cannot read executor statics at
-    * all. Marker rows ride the output through the shuffle-free
-    * `CollectMetrics` node instead: per micro-batch, the progress
+    * rows from the user-facing output. Marker rows ride the output
+    * through the shuffle-free
+    * `CollectMetrics` node: per micro-batch, the progress
     * event's `observedMetrics(DropsMetric).admission_drops` is the
     * refusal total across ALL keys and executors of that batch, and
     * downstream sees pairs only (markers are stripped here, after the

@@ -65,9 +65,8 @@ case class SemEntry(vecId: Long, emb: Array[Double], norm: Double, lastMs: Long)
   * an unbounded default let one skewed bucket grow its ListState and
   * per-arrival cosine scan without limit at ingest; pass
   * [[SemanticDedupTracker.Uncapped]] explicitly for the uncapped
-  * batch-equality form. Every refused admission bumps this query
-  * run's [[AdmissionDrops]] counter, and a batch with refusals also
-  * emits one DROP-MARKER row per key (bucket = -1, ids = -1,
+  * batch-equality form. A batch with refusals emits one DROP-MARKER
+  * row per key (bucket = -1, ids = -1,
   * `cosSim` = the NEGATED refusal count, outside the valid cosine
   * range) for [[SemanticDedupTracker.observeDrops]] to count
   * into `StreamingQueryProgress.observedMetrics` and strip — see
@@ -80,13 +79,10 @@ class SemanticDedupTracker(retentionMs: Long, tau: Double = 0.3,
   require(maxBucket > 0, s"maxBucket must be positive, got $maxBucket")
 
   @transient private var st: ListState[SemEntry] = _
-  @transient private var drops: java.util.concurrent.atomic.LongAdder = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     st = getHandle.getListState[SemEntry](
       "bucket", Encoders.product[SemEntry], TTLConfig.NONE)
-    drops = AdmissionDrops.counter(
-      SemanticDedupTracker.DropsTag, getHandle.getQueryInfo.getRunId)
   }
 
   private def members(): Vector[SemEntry] = {
@@ -138,11 +134,11 @@ class SemanticDedupTracker(retentionMs: Long, tau: Double = 0.3,
         }
         if (entries.length < maxBucket)
           entries = entries :+ SemEntry(r.vecId, r.emb, r.norm, r.ts.getTime)
-        else { drops.increment(); batchDrops += 1 }
+        else batchDrops += 1
       }
     }
-    // the cluster-readable half of the refusal count: one marker row
-    // per (key, batch) with refusals, counted into observedMetrics and
+    // the refusal count: one marker row per (key, batch) with
+    // refusals, counted into observedMetrics and
     // stripped by observeDrops
     if (batchDrops > 0) out += SemCandOut(-1L, -1L, -1L, -batchDrops.toDouble)
     // an admission or a redelivery refresh reassigns `entries` — skip
@@ -190,10 +186,6 @@ object SemanticDedupTracker {
   /** The explicit no-cap setting for batch-equality callers — see
     * [[LshDedupTracker.Uncapped]]. */
   val Uncapped = Int.MaxValue
-
-  /** [[AdmissionDrops]] tracker tag: read this run's refusal count as
-    * `AdmissionDrops.forRun(SemanticDedupTracker.DropsTag, query.runId)`. */
-  val DropsTag = "semantic"
 
   /** The `observedMetrics` key [[observeDrops]] registers. */
   val DropsMetric = "graft.semantic.admission_drops"

@@ -75,35 +75,34 @@ object SensorPipeline {
     SensorOps.withEventTime(
       SensorOps.validate(SensorOps.parseJson(raw, valueCol)))
 
-  /** W1–W3 + A1–A6: watermarked windowed metrics (flat). */
+  /** W1–W3 + A1–A6: watermarked windowed metrics (flat); `slideDuration`
+    * None is a tumbling window. */
   def windowedMetrics(
       validated: DataFrame,
       watermarkDelay: String = "5 seconds",
-      windowDuration: String = "1 minute"): DataFrame =
+      windowDuration: String = "1 minute",
+      slideDuration: Option[String] = None): DataFrame =
     SensorOps.windowedMetrics(
       validated.withWatermark("event_time", watermarkDelay),
       col("event_time"),
       Seq(col("station_id"), col("station_name"), col("sensor_id")),
-      windowDuration)
+      windowDuration,
+      slideDuration)
 
   /** Full pipeline to the nested output document (P8). */
   def documents(
       raw: DataFrame,
       watermarkDelay: String = "5 seconds",
-      windowDuration: String = "1 minute"): DataFrame =
-    SensorOps.shapeDocument(windowedMetrics(fromRawJson(raw), watermarkDelay, windowDuration))
+      windowDuration: String = "1 minute",
+      slideDuration: Option[String] = None): DataFrame =
+    SensorOps.shapeDocument(
+      windowedMetrics(fromRawJson(raw), watermarkDelay, windowDuration, slideDuration))
 
   /** Full pipeline from the reference's config contract (PipelineConfig /
     * `.env:13-17`): windowing (tumbling or sliding), watermark, trigger
     * and checkpoint all driven by one typed config. */
   def documents(raw: DataFrame, cfg: PipelineConfig): DataFrame =
-    SensorOps.shapeDocument(
-      SensorOps.windowedMetrics(
-        fromRawJson(raw).withWatermark("event_time", cfg.watermarkDelay),
-        col("event_time"),
-        Seq(col("station_id"), col("station_name"), col("sensor_id")),
-        cfg.windowDuration,
-        cfg.slideDuration))
+    documents(raw, cfg.watermarkDelay, cfg.windowDuration, cfg.slideDuration)
 
   /** Config-driven assembly: the one-call equivalent of the reference's
     * `main` (consumer.py:212-240). */

@@ -281,6 +281,54 @@ class RegistryAuditSpec extends AnyFunSuite with SparkSpec {
     assert(owners("collect_list(struct(col(\"pos\"),col(\"cv\")))") === Seq("centroids"))
   }
 
+  // One spelling per engine for each shared feature: the tokenizer,
+  // stopword list and quality signals (TextFunctions), the hashed
+  // classifier, the co-purchase graph and LPA rounds, the IVF centroids
+  // and brute-force truth, and the hourly means each have one Spark
+  // definition and one DuckDB fragment that the oracles splice in. Each
+  // signature below may occur only in its home file, as often as the
+  // home spells it. Unlike the IVF-core check this reads string literals
+  // too (the DuckDB mirrors ARE strings); whitespace and stripMargin
+  // bars at line starts are ignored, so a re-inlined copy split over
+  // lines still matches.
+  test("each shared feature is spelled once per engine under queries and functions") {
+    val text = "functions/TextFunctions.scala"
+    val tq = "queries/TextQueries.scala"
+    val aq = "queries/AnalyticsQueries.scala"
+    val sq = "queries/SimilarityQueries.scala"
+    val ts = "queries/TimeSeriesQueries.scala"
+    val homes = Seq(
+      "string_split_regex(trim(" -> (text, 1), // tokenizer mirror
+      "|| chr(9) ||" -> (text, 1), // its whitespace set
+      "s\"'$w'\"" -> (text, 1), // stopword list literal
+      "'[^a-z]', '', 'g')" -> (text, 1), // alpha ratio mirror
+      "stopwordCount(" -> (text, 2), // its def and stopwordRatio
+      "/ 50.0)" -> (text, 2), // quality score, Spark and SQL
+      "2654435761" -> (tq, 2), // classifier weight, Spark and SQL
+      "exp(score * -4)" -> (tq, 2), // classifier sigmoid, Spark and SQL
+      "l_partkey AS pk FROM lineitem" -> (aq, 1), // baskets mirror
+      "a.pk AS src, b.pk AS dst" -> (aq, 1), // co-purchase edge mirror
+      "ORDER BY c DESC, nl" -> (aq, 1), // LPA round mirror
+      "round(avg(u.v), 6) AS cv" -> (sq, 1), // IVF centroid mirror
+      "bp AS (" -> (sq, 1), // brute-force top-k truth mirror
+      "AS DOUBLE) / count(*), 6) AS x" -> (ts, 1), // hourly series mirror
+      "round(col(\"s1d\").cast(\"double\") / col(\"n\"), 6).as(\"x\")" -> (ts, 1))
+    def squash(src: String): String = src.replaceAll("\n[ \t]*\\|", "").replaceAll("\\s", "")
+    val files = mainSources.collect {
+      case (p, src) if p.startsWith("graft/queries/") || p.startsWith("graft/functions/") =>
+        p.stripPrefix("graft/") -> squash(src)
+    }
+    val offenders = homes.flatMap { case (sig, home) =>
+      val needle = squash(sig)
+      val found = files.map { case (p, src) =>
+        p -> Iterator.iterate(src.indexOf(needle))(i => src.indexOf(needle, i + 1))
+          .takeWhile(_ >= 0).size
+      }.filter(_._2 > 0)
+      if (found == Seq(home)) None else Some(s"$sig: expected ${home._2} in ${home._1}, found $found")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("the shared test session carries Bench's confs at 4 cores") {
     import org.apache.spark.sql.functions.{col, pow}
     assert(spark.sparkContext.master === "local[4]")

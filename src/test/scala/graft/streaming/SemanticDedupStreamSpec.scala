@@ -172,14 +172,12 @@ class SemanticDedupStreamSpec extends AnyFunSuite with SparkSpec {
         val expected = cap * (cap - 1) / 2 + (20 - cap) * cap
         assert(rows.length === expected,
           s"emission not cap-bounded: ${rows.length} != $expected")
-        val registry = AdmissionDrops.forRun(SemanticDedupTracker.DropsTag, q.runId)
-        assert(registry === (20 - cap).toLong,
-          "every refused admission must be counted against THIS run")
-        // cluster-readable figure == JVM-local registry (r14, VERDICT #4)
+        // the cluster-readable figure (r14, VERDICT #4) counts every
+        // refused admission exactly
         val observed = AdmissionDrops.observedTotal(
           q.recentProgress.toSeq, SemanticDedupTracker.DropsMetric)
-        assert(observed === registry,
-          s"StreamingQueryProgress drops $observed != registry $registry")
+        assert(observed === (20 - cap).toLong,
+          s"StreamingQueryProgress drops $observed miss refused admissions")
       } finally q.stop()
     }
   }
@@ -187,8 +185,8 @@ class SemanticDedupStreamSpec extends AnyFunSuite with SparkSpec {
   // the r12 counter was a process-global LongAdder: two concurrent
   // queries in one JVM CONFLATED their refusal counts (both would read
   // 7 + 15 = 22 here), so a production monitor could not alarm per
-  // pipeline. AdmissionDrops keys by the query's runId — each run must
-  // read exactly its own refusals while both run interleaved.
+  // pipeline. Each query's observed metric must count exactly its own
+  // refusals while both run interleaved.
   test("concurrent queries keep separate admission-drop counts") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -219,13 +217,8 @@ class SemanticDedupStreamSpec extends AnyFunSuite with SparkSpec {
           inB.addData((0L until 10L).map(i => vec(half * 10 + i, 1000000L + half * 10 + i)))
           qA.processAllAvailable(); qB.processAllAvailable()
         }
-        val tag = SemanticDedupTracker.DropsTag
-        assert(AdmissionDrops.forRun(tag, qA.runId) === 7L,
-          "query A must read exactly its own refusals")
-        assert(AdmissionDrops.forRun(tag, qB.runId) === 15L,
-          "query B must read exactly its own refusals")
-        // the progress-event path is per-query by construction — the
-        // same isolation must hold in observedMetrics (r14, VERDICT #4)
+        // the progress-event path is per-query by construction
+        // (r14, VERDICT #4)
         def observed(q: org.apache.spark.sql.streaming.StreamingQuery) =
           AdmissionDrops.observedTotal(
             q.recentProgress.toSeq, SemanticDedupTracker.DropsMetric)
