@@ -29,7 +29,7 @@ object TextFunctions {
     * tokenization: Spark's one-arg trim() strips SPACES only while
     * split() KEEPS trailing empty strings, so "\n"-terminated text (i.e.
     * every real file) would otherwise grow a bogus empty token — caught
-    * by RawSourcesSpec; the oracle CTEs trim the same chr set. */
+    * by RawSourcesSpec; [[WsSql]] is the same set for the oracles. */
   private val Ws = " \t\n\r\u000B\f"
 
   /** Whitespace tokens; empty/blank text → empty array (split would give
@@ -40,10 +40,39 @@ object TextFunctions {
 
   def tokenCount(c: Column): Column = size(tokens(c))
 
+  /** BPE-ish subword count: runs of letters, runs of digits, or single
+    * punctuation marks each count as one token. */
+  def bpeTokenCount(c: Column): Column =
+    size(regexp_extract_all(lower(c), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
+
+  /** Occurrences (not distinct) of `words` among the tokens. */
+  def stopwordCount(toks: Column, words: Seq[String]): Column = {
+    val lst = array(words.map(lit): _*)
+    size(filter(toks, t => array_contains(lst, t)))
+  }
+
+  /** Share of the `nTokens` tokens that are in `words`; 0.0 for no tokens. */
+  def stopwordRatio(toks: Column, nTokens: Column, words: Seq[String] = enStopwords): Column =
+    when(nTokens > 0, stopwordCount(toks, words).cast("double") / nTokens)
+      .otherwise(lit(0.0))
+
+  /** Fraction of [a-z] characters after lowercasing; 0.0 for empty. */
+  def alphaRatio(c: Column): Column =
+    when(length(c) > 0,
+      length(regexp_replace(lower(c), "[^a-z]", "")).cast("double") / length(c))
+      .otherwise(lit(0.0))
+
+  /** Content-quality heuristic in [0,1]: token volume, alphabetic purity,
+    * stopword density (natural text has stopwords; keyword spam doesn't). */
+  def qualityScore(nTokens: Column, alphaR: Column, stopR: Column): Column =
+    lit(0.3) * least(lit(1.0), nTokens.cast("double") / 50.0) +
+      lit(0.3) * alphaR +
+      lit(0.4) * least(lit(1.0), stopR * 5.0)
+
   // ---- DuckDB mirrors, spliced into the oracle SQL -------------------------
-  // Each fragment below is the one SQL spelling of the Spark definition
-  // above it; an oracle that tokenizes or scores text splices these
-  // instead of writing its own copy.
+  // Each fragment below is the one SQL spelling of a Spark definition
+  // above; an oracle that tokenizes or scores text splices these instead
+  // of writing its own copy.
 
   /** [[Ws]] as a DuckDB string expression. */
   private val WsSql = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
@@ -74,35 +103,6 @@ object TextFunctions {
   /** [[qualityScore]] over three SQL expressions (unrounded). */
   def qualityScoreSql(nTokens: String, alphaR: String, stopR: String): String =
     s"0.3 * least(1.0, CAST($nTokens AS DOUBLE) / 50.0) + 0.3 * $alphaR + 0.4 * least(1.0, $stopR * 5.0)"
-
-  /** BPE-ish subword count: runs of letters, runs of digits, or single
-    * punctuation marks each count as one token. */
-  def bpeTokenCount(c: Column): Column =
-    size(regexp_extract_all(lower(c), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
-
-  /** Occurrences (not distinct) of `words` among the tokens. */
-  def stopwordCount(toks: Column, words: Seq[String]): Column = {
-    val lst = array(words.map(lit): _*)
-    size(filter(toks, t => array_contains(lst, t)))
-  }
-
-  /** Share of the `nTokens` tokens that are in `words`; 0.0 for no tokens. */
-  def stopwordRatio(toks: Column, nTokens: Column, words: Seq[String] = enStopwords): Column =
-    when(nTokens > 0, stopwordCount(toks, words).cast("double") / nTokens)
-      .otherwise(lit(0.0))
-
-  /** Fraction of [a-z] characters after lowercasing; 0.0 for empty. */
-  def alphaRatio(c: Column): Column =
-    when(length(c) > 0,
-      length(regexp_replace(lower(c), "[^a-z]", "")).cast("double") / length(c))
-      .otherwise(lit(0.0))
-
-  /** Content-quality heuristic in [0,1]: token volume, alphabetic purity,
-    * stopword density (natural text has stopwords; keyword spam doesn't). */
-  def qualityScore(nTokens: Column, alphaR: Column, stopR: Column): Column =
-    lit(0.3) * least(lit(1.0), nTokens.cast("double") / 50.0) +
-      lit(0.3) * alphaR +
-      lit(0.4) * least(lit(1.0), stopR * 5.0)
 
   /** Exact-dedup document fingerprint: md5 of the canonical text. */
   def fingerprint(c: Column): Column = md5(normText(c))
